@@ -27,16 +27,11 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+import bench  # noqa: E402  (bench.py imports Spark lazily: cheap)
+
 # every query bench.py times (headline + pipeline); models are step objects,
 # not DataFrames — they have no single explain and are timed by bench.py
-TIMED = [
-    "lag_lead", "ffill", "sessionize", "rolling_mean", "rollup",
-    "topk_per_user", "asof_union", "asof_cogroup", "roc_auc",
-    "infgain_equalfreq", "chi2_stat", "dedup_exact", "token_counts",
-    "text_quality", "cosine_topk",
-    "minhash_pairs", "dedup_corpus", "dedup_clusters", "lsh_ann",
-    "pii_scrub", "token_topk",
-]
+TIMED = [*bench.HEADLINE, *bench.PIPELINE_OPS]
 
 
 def _get_spark():

@@ -18,7 +18,8 @@ Spark has no native as-of join (SURVEY.md §2.4 "Joins"). Two strategies:
   that as-of correctness requires. Each shard is sorted-merged with
   ``pandas.merge_asof`` inside ``cogroup(...).applyInPandas``
   (Arrow-vectorized, no per-row Python). Supports tolerance and arbitrary
-  value columns.
+  value columns; a conversation over the ``max_conv_rows`` budget is
+  additionally split into tolerance-wide time slices.
 
 At 10^12 turns the driver holds only the hot-key map (bounded by shard
 count, not data size); ``sample_frac`` bounds the hot-detection count cost
@@ -153,12 +154,11 @@ def hot_conv_shards(
     conversation larger than executor memory cannot be handled silently.
     When the largest (estimated, if sampled) per-conv row count exceeds
     this budget a RuntimeWarning names the worst offender and the
-    mitigations (spine-side time-range pre-split for backward+tolerance
-    joins — slice BOTH sides on ts ranges no finer than the tolerance, join
-    slices independently, union; or raise executor memory / Arrow batch
-    budget). The observed maximum is also returned on the frame as
-    ``result.attrs['max_conv_rows']`` for metrics pipelines. ``None``
-    disables the check.
+    mitigations (time slicing, which :func:`asof_join_cogroup` applies to
+    backward/forward joins with a finite tolerance; or raise executor
+    memory / Arrow batch budget). The observed maximum is also returned on
+    the frame as ``result.attrs['max_conv_rows']`` for metrics pipelines.
+    ``None`` disables the check.
     """
     l = left.select(on) if sample_frac is None else left.select(on).sample(
         fraction=sample_frac, seed=seed
@@ -177,10 +177,10 @@ def hot_conv_shards(
         warnings.warn(
             f"conversation {worst[on]!r} has ~{int(worst['n'] * scale):,} "
             f"rows (> max_conv_rows={max_conv_rows:,}); it will occupy ONE "
-            "Arrow group in the cogroup as-of merge. Backward/forward "
-            "joins with a finite tolerance auto-route to "
-            "asof_join_cogroup_sliced (spine-side time slicing, bounded "
-            "groups); otherwise raise the executor/Arrow memory budget.",
+            "Arrow group in the cogroup as-of merge. asof_join_cogroup "
+            "time-slices backward/forward joins with a finite tolerance "
+            "(bounded groups); otherwise raise the executor/Arrow memory "
+            "budget.",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -195,7 +195,7 @@ def hot_conv_shards(
         {on: hot[on].tolist(), "shard": [num_shards + i for i in range(len(hot))]}
     )
     # ceil, not int(): the warning above fires on max_n*scale > budget, and
-    # the auto-slice dispatch in asof_join_cogroup compares this attr to
+    # the slicing dispatch in asof_join_cogroup compares this attr to
     # the same budget — flooring a fractional sampled estimate could warn
     # without dispatching
     out.attrs["max_conv_rows"] = math.ceil(max_n * scale)
@@ -215,7 +215,7 @@ def with_shard(
     two frames sharing conv ids — both sides of a join land on the same
     shard. A fresh DataFrame is built from ``hot_pdf`` per call so two inputs
     derived from one scan never share broadcast lineage (ambiguous-self-join
-    trap, see ``asof_join_cogroup._fresh``).
+    trap, see :func:`_fresh`).
     """
     base = F.pmod(F.xxhash64(F.col(on)), F.lit(num_shards)).cast("int")
     if hot_pdf is None or len(hot_pdf) == 0:
@@ -231,6 +231,12 @@ def with_shard(
     )
 
 
+def _fresh(df: DataFrame) -> DataFrame:
+    """Re-alias every column: fresh expression IDs, so two cogroup sides
+    derived from one scan don't trip the ambiguous-self-join analysis."""
+    return df.select([F.col(c).alias(c) for c in df.columns])
+
+
 def asof_join_cogroup(
     spine: DataFrame,
     features: DataFrame,
@@ -242,7 +248,6 @@ def asof_join_cogroup(
     sample_frac: float | None = None,
     direction: str = "backward",
     hot_pdf: pd.DataFrame | None = None,
-    auto_slice: bool = True,
     max_conv_rows: int | None = 5_000_000,
 ) -> DataFrame:
     """General sorted-merge as-of join over salt-balanced conv_id shards.
@@ -253,15 +258,27 @@ def asof_join_cogroup(
     assignment never affects the OUTPUT rows (conversations are whole
     either way), only balance.
 
-    Oversized conversations (``auto_slice``, default on): when the largest
-    conversation exceeds ``max_conv_rows`` — which would put one Arrow
-    group beyond the executor-memory budget — and the join is backward or
-    forward with a finite tolerance, the call routes itself to
-    :func:`asof_join_cogroup_sliced` (identical output, bounded groups).
-    When no finite tolerance makes slicing possible, this raises instead
-    of silently building a join that will OOM an executor at scale; pass
-    ``auto_slice=False`` (or ``max_conv_rows=None``) to accept the risk
-    knowingly.
+    Oversized conversations: when the largest conversation exceeds
+    ``max_conv_rows`` — which would put one Arrow group beyond the
+    executor-memory budget — the timeline is also cut into slices of
+    width ``W = max(tolerance_s, 1)`` and the cogroup key becomes
+    ``(shard, slice)``. With a finite tolerance the match window of a
+    spine row at ``t`` is bounded (``[t - tol, t]`` backward, ``[t, t +
+    tol]`` forward), so:
+
+    * each SPINE row belongs to exactly ONE slice (``floor(epoch/W)``) —
+      output rows are never duplicated;
+    * each FEATURE row at ``t`` can only serve spine rows in slices
+      ``floor(t/W)`` and ``floor((t ± tol)/W)`` (+ backward, − forward) —
+      it is replicated to exactly those, a bounded ≤2× blow-up;
+    * every match window stays complete inside its group, so the
+      per-group ``merge_asof`` result equals the unsliced one.
+
+    The split changes balance, never answers. ``direction='nearest'`` or
+    no tolerance has no such decomposition, so an oversized conversation
+    then raises instead of silently building a join that will OOM an
+    executor at scale; pass ``max_conv_rows=None`` to accept the
+    single-group memory risk knowingly.
     """
     spark = spine.sparkSession
     if num_shards is None:
@@ -274,38 +291,44 @@ def asof_join_cogroup(
         )
 
     observed_max = hot_pdf.attrs.get("max_conv_rows")  # absent on user maps
-    if (
-        auto_slice
-        and max_conv_rows is not None
+    sliced = (
+        max_conv_rows is not None
         and observed_max is not None
         and observed_max > max_conv_rows
+    )
+    if sliced and (
+        direction not in ("backward", "forward") or tolerance_s is None
     ):
-        if direction in ("backward", "forward") and tolerance_s is not None:
-            return asof_join_cogroup_sliced(
-                spine, features, value_cols, on=on, ts=ts,
-                tolerance_s=tolerance_s, num_shards=num_shards,
-                hot_pdf=hot_pdf, direction=direction,
-            )
         raise RuntimeError(
             f"largest conversation has ~{observed_max:,} rows "
             f"(> max_conv_rows={max_conv_rows:,}) and would occupy ONE "
             "Arrow group, but the join cannot be time-sliced "
             f"(direction={direction!r}, tolerance_s={tolerance_s!r}: "
             "slicing needs backward or forward with a finite tolerance). "
-            "Set a finite tolerance_s, or pass auto_slice=False / "
-            "max_conv_rows=None to accept the single-group memory risk."
+            "Set a finite tolerance_s, or pass max_conv_rows=None to "
+            "accept the single-group memory risk."
         )
-
-    def _fresh(df: DataFrame) -> DataFrame:
-        # re-alias every column: fresh expression IDs, so two sides sharing
-        # one scan don't trip the ambiguous-self-join analysis in the cogroup
-        return df.select([F.col(c).alias(c) for c in df.columns])
 
     # with_shard builds an independent broadcast frame per call, so the two
     # sides never share lineage even when derived from the same scan
     s = with_shard(_fresh(spine), num_shards, hot_pdf, on=on)
     feats = _fresh(features.select(on, ts, *value_cols))
     f = with_shard(feats, num_shards, hot_pdf, on=on)
+    keys = ["shard"]
+    if sliced:
+        from recipeselectors_spark.operators.windows import epoch_s
+
+        # tolerance_s=0 (exact-timestamp matches only) is legal — any
+        # positive width covers its zero-length match window
+        w = F.lit(max(tolerance_s, 1))
+        shift = tolerance_s if direction == "backward" else -tolerance_s
+        t = epoch_s(F.col(ts))
+        s = s.withColumn("__slice__", F.floor(t / w).cast("long"))
+        f = f.withColumn("__slice__", F.explode(F.array_distinct(F.array(
+            F.floor(t / w).cast("long"),
+            F.floor((t + F.lit(shift)) / w).cast("long"),
+        ))))
+        keys.append("__slice__")
 
     spine_fields = [fld for fld in spine.schema.fields]
     out_schema_parts = [f"`{fld.name}` {fld.dataType.simpleString()}" for fld in spine_fields]
@@ -318,150 +341,10 @@ def asof_join_cogroup(
     tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
 
     def merge(left_pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
-        left_pdf = left_pdf.drop(columns=["shard"]).sort_values(
+        left_pdf = left_pdf.drop(columns=keys).sort_values(
             [ts, on], kind="mergesort"
         )
-        right_pdf = right_pdf.drop(columns=["shard"]).sort_values(
-            [ts, on], kind="mergesort"
-        )
-        if left_pdf.empty:
-            return pd.DataFrame(columns=spine_names + value_cols)
-        merged = pd.merge_asof(
-            left_pdf,
-            right_pdf,
-            on=ts,
-            by=on,
-            direction=direction,
-            tolerance=tol,
-            allow_exact_matches=True,
-        )
-        return merged[spine_names + value_cols]
-
-    return (
-        s.groupBy("shard")
-        .cogroup(f.groupBy("shard"))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
-def asof_join_cogroup_sliced(
-    spine: DataFrame,
-    features: DataFrame,
-    value_cols: list[str],
-    on: str = CONV,
-    ts: str = "ts",
-    tolerance_s: int | None = None,
-    slice_s: int | None = None,
-    num_shards: int | None = None,
-    sample_frac: float | None = None,
-    hot_pdf: pd.DataFrame | None = None,
-    direction: str = "backward",
-) -> DataFrame:
-    """Tolerance-bounded as-of join with SPINE-SIDE TIME SLICING — the
-    oversized-conversation mitigation :func:`hot_conv_shards` warns about,
-    implemented (VERDICT r3 #4; forward direction VERDICT r4 #7).
-
-    A conversation bigger than executor memory cannot occupy one Arrow
-    group. With a finite tolerance the match window of a spine row at
-    ``t`` is bounded — ``[t - tolerance, t]`` backward, ``[t, t +
-    tolerance]`` forward — so the timeline can be cut into slices of width
-    ``slice_s >= tolerance_s``:
-
-    * each SPINE row belongs to exactly ONE slice (``floor(epoch/W)``) —
-      output rows are never duplicated;
-    * each FEATURE row at ``t`` can only serve spine rows in slices
-      ``floor(t/W)`` and ``floor((t ± tolerance)/W)`` (+ backward,
-      − forward; at most 2 when ``W >= tolerance``) — it is replicated to
-      exactly those, a bounded <= 2x blow-up;
-    * the cogroup key becomes (shard, slice): a single conversation now
-      spreads over as many Arrow groups as it spans slices, each holding
-      only one window's rows, while every match window stays complete
-      inside its group — the per-group ``merge_asof`` result is identical
-      to the global one.
-
-    Within-group matching is unchanged (pandas ``merge_asof``, inclusive
-    tolerance, ``by=conv``). Shard balancing/hot-key override compose with
-    the slice key. ``direction='nearest'`` has no such decomposition (a
-    spine row near a cut needs candidates from both sides and the
-    tie-break must see both) — use :func:`asof_join_cogroup`.
-    """
-    from recipeselectors_spark.operators.windows import epoch_s
-
-    if direction not in ("backward", "forward"):
-        raise ValueError(
-            f"direction={direction!r}: only backward/forward joins can be "
-            "time-sliced ('nearest' needs candidates from both sides of "
-            "every cut); use asof_join_cogroup"
-        )
-    if tolerance_s is None:
-        raise ValueError(
-            "asof_join_cogroup_sliced needs a finite tolerance_s — an "
-            "unbounded as-of join cannot be time-sliced (any older/newer "
-            "row may match); use asof_join_cogroup"
-        )
-    # tolerance_s=0 (exact-timestamp matches only) is legal — any positive
-    # slice width covers its zero-length lookback window
-    w = slice_s if slice_s is not None else max(tolerance_s, 1)
-    if w <= 0:
-        raise ValueError(f"slice_s={w} must be a positive number of seconds")
-    if w < tolerance_s:
-        raise ValueError(
-            f"slice_s={w} < tolerance_s={tolerance_s}: a lookback window "
-            "would span more than two slices"
-        )
-    spark = spine.sparkSession
-    if num_shards is None:
-        num_shards = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if hot_pdf is None:
-        hot_pdf = hot_conv_shards(
-            spine, features, num_shards, on=on, sample_frac=sample_frac
-        )
-
-    def _fresh(df: DataFrame) -> DataFrame:
-        return df.select([F.col(c).alias(c) for c in df.columns])
-
-    sl = "__slice__"
-    s = with_shard(_fresh(spine), num_shards, hot_pdf, on=on).withColumn(
-        sl, F.floor(epoch_s(F.col(ts)) / F.lit(w)).cast("long")
-    )
-    feats = _fresh(features.select(on, ts, *value_cols))
-    # a feature at t serves spine rows ahead of it (backward: spine in
-    # [t, t+tol]) or behind it (forward: spine in [t-tol, t]) — replicate
-    # to the (at most 2) slices those spine rows occupy
-    tol_shift = tolerance_s if direction == "backward" else -tolerance_s
-    f = (
-        with_shard(feats, num_shards, hot_pdf, on=on)
-        .withColumn(
-            sl,
-            F.explode(
-                F.array_distinct(
-                    F.array(
-                        F.floor(epoch_s(F.col(ts)) / F.lit(w)).cast("long"),
-                        F.floor(
-                            (epoch_s(F.col(ts)) + F.lit(tol_shift)) / F.lit(w)
-                        ).cast("long"),
-                    )
-                )
-            ),
-        )
-    )
-
-    spine_fields = list(spine.schema.fields)
-    out_schema_parts = [
-        f"`{fld.name}` {fld.dataType.simpleString()}" for fld in spine_fields
-    ]
-    fdtypes = dict(feats.dtypes)
-    for c in value_cols:
-        out_schema_parts.append(f"`{c}` {fdtypes[c]}")
-    out_schema = ", ".join(out_schema_parts)
-    spine_names = [fld.name for fld in spine_fields]
-    tol = pd.Timedelta(seconds=tolerance_s)
-
-    def merge(left_pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
-        left_pdf = left_pdf.drop(columns=["shard", sl]).sort_values(
-            [ts, on], kind="mergesort"
-        )
-        right_pdf = right_pdf.drop(columns=["shard", sl]).sort_values(
+        right_pdf = right_pdf.drop(columns=keys).sort_values(
             [ts, on], kind="mergesort"
         )
         if left_pdf.empty:
@@ -478,8 +361,8 @@ def asof_join_cogroup_sliced(
         return merged[spine_names + value_cols]
 
     return (
-        s.groupBy("shard", sl)
-        .cogroup(f.groupBy("shard", sl))
+        s.groupBy(*keys)
+        .cogroup(f.groupBy(*keys))
         .applyInPandas(merge, schema=out_schema)
     )
 

@@ -7,7 +7,7 @@ Design for 100 TB:
   combined; keep the min doc_id per group.
 * **MinHash + LSH**: shingle→hash (Catalyst ``xxhash64`` over token slices,
   zero Python), k permutations as affine transforms ``(a·x + b) mod p``
-  evaluated with ``F.transform``/``F.array_min`` (still zero Python), bands
+  evaluated in one vectorized numpy Arrow kernel, bands
   hashed → ``explode(bands)`` → one shuffle groups candidate buckets; exact
   Jaccard verification only within buckets (the candidate set is tiny
   relative to n²). Doc-pair space is never materialized globally.
@@ -18,8 +18,6 @@ Design for 100 TB:
 """
 
 from __future__ import annotations
-
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -71,10 +69,14 @@ def with_minhash(
     ``num_perm`` separate ``F.transform``/``F.array_min`` higher-order
     expressions — interpreted per ELEMENT, ~num_perm × shingles ops per
     document through the HOF interpreter, the measured hot spot of every
-    minhash-family query. Values are bit-identical: residues stay below
+    minhash-family query. Values are bit-identical to that Catalyst form
+    (kept as ``tests/oracles.minhash_catalyst``): residues stay below
     2^31, so ``h·a + b < 2^62`` never wraps int64 in either engine, and
-    numpy's ``%`` of a non-negative dividend matches Spark's. Map-only,
-    no shuffle."""
+    numpy's ``%`` of a non-negative dividend matches Spark's. One edge
+    differs: a shingle hash equal to the int64 minimum, where ``np.abs``
+    wraps to itself while ANSI ``F.abs`` throws — numpy's Python-style
+    ``%`` still yields a valid residue in ``[0, p)``, so the kernel
+    returns a well-defined signature there. Map-only, no shuffle."""
     a, b = _perm_params(num_perm, seed)
     a_np, b_np = np.asarray(a, dtype=np.int64), np.asarray(b, dtype=np.int64)
     sh = TX.shingles(text_col, k=k_shingle)
@@ -99,33 +101,6 @@ def with_minhash(
         )
 
     return df.withColumn(out, mh("__sh__")).drop("__sh__")
-
-
-def _with_minhash_catalyst(
-    df: DataFrame,
-    text_col: str = "text",
-    num_perm: int = 32,
-    k_shingle: int = 3,
-    seed: int = 42,
-    out: str = "minhash",
-) -> DataFrame:
-    """The pre-r6 pure-Catalyst signature path — kept as the independent
-    reference implementation the equivalence test pins :func:`with_minhash`
-    against (and as the fallback if an environment lacks Arrow)."""
-    a, b = _perm_params(num_perm, seed)
-    sh = TX.shingles(text_col, k=k_shingle)
-    df = df.withColumn("__sh__", sh)
-
-    def perm(ai: int, bi: int):
-        # closure factory: pyspark binds lambda variables by arity, so the
-        # captured params must NOT appear in the lambda signature
-        return lambda x: ((F.abs(x) % MERSENNE_P) * ai + bi) % MERSENNE_P
-
-    mins = [
-        F.array_min(F.transform("__sh__", perm(ai, bi))).alias(f"mh_{i}")
-        for i, (ai, bi) in enumerate(zip(a, b))
-    ]
-    return df.withColumn(out, F.array(*mins)).drop("__sh__")
 
 
 def minhash_candidates(
@@ -447,12 +422,11 @@ def decontaminate(
 
 
 def _star_components(
-    sym: DataFrame, max_iter: int = 30
+    edges: DataFrame, max_iter: int = 30
 ) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al. 2014, "Connected
-    Components in MapReduce and Beyond") — the O(log n)-round scale path
-    for HIGH-DIAMETER components where min-label propagation's O(diameter)
-    rounds would not do.
+    Components in MapReduce and Beyond") — the O(log n)-round scale path,
+    correct for high-diameter (deep chain) components too.
 
     Edges are kept canonical as (u, v) with u > v. Per round:
 
@@ -468,9 +442,10 @@ def _star_components(
     v = component min.
     """
     edges = (
-        sym.where(F.col("src") != F.col("dst"))
+        edges.where(F.col("id_a") != F.col("id_b"))
         .select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+            F.greatest("id_a", "id_b").alias("u"),
+            F.least("id_a", "id_b").alias("v"),
         )
         .distinct()
         .localCheckpoint()
@@ -519,13 +494,13 @@ def _star_components(
 
 
 def _small_graph_components(
-    sym: DataFrame, vertices: DataFrame, id_col: str
+    edges: DataFrame, vertices: DataFrame, id_col: str
 ) -> DataFrame:
     """Driver union-find over a BOUNDED edge list (the caller checked the
     count) — replaces an O(rounds) sequence of join+checkpoint jobs with
     one bounded collect + one broadcast join. Vertices not on any edge
-    stay their own cluster via the left join. Identical output to the
-    iterative paths: cluster = component-minimum id."""
+    stay their own cluster via the left join. Identical output to
+    :func:`_star_components`: cluster = component-minimum id."""
     parent: dict = {}
 
     def find(x):
@@ -536,8 +511,7 @@ def _small_graph_components(
             parent[x], x = r, parent[x]
         return r
 
-    for row in sym.collect():
-        a, b = row["src"], row["dst"]
+    for a, b in edges.collect():
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -559,111 +533,44 @@ def _small_graph_components(
     )
 
 
+# Driver union-find cap of connected_components, in symmetrised
+# (both-direction) edges; the pair list holds one direction, hence the
+# halving there. Tests monkeypatch it to 0 to force the distributed path.
+SMALL_GRAPH_EDGES = 2_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     vertices: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 20,
-    strategy: str = "auto",  # auto | label | star
-    small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs.
 
     ``pairs`` is an (id_a, id_b) edge list, ``vertices`` the universe (ids
     not in any pair become singleton components).
 
-    ``strategy='label'``: min-label propagation — each round joins the
-    current labels across the symmetrized edges and keeps the per-vertex
-    minimum; converges to the component-minimum id in O(diameter) rounds.
-    Near-dup components are shallow (duplicate clusters are near-cliques
-    from the LSH bucket join, 2-4 rounds in practice), so this is the
-    cheap default path. ``strategy='star'``: large-star/small-star
-    (_star_components) — O(log n) rounds, the scale path for deep chain
-    components. ``strategy='auto'`` (default): label propagation, falling
-    back to star ONLY if it fails to converge in ``max_iter`` rounds —
-    instead of round 3's silent-split warning, the answer is now always
-    correct.
-
-    The driver loop runs one bounded action per round (the change count)
-    and localCheckpoints every round to keep the plan from growing with
-    the iteration count — lineage length, not data size, is the scale risk
-    in iterative Spark jobs.
+    Scale-adaptive dispatch: near-dup pair graphs are usually TINY
+    relative to the corpus (dedup ran exact-first and capped buckets),
+    while every distributed round pays 2-3 jobs no matter how small the
+    data. The pairs are checkpointed once (count and collect do not
+    recompute the pair join); up to ``SMALL_GRAPH_EDGES / 2`` edges a
+    one-collect driver union-find answers, above it large-star/small-star
+    (:func:`_star_components`, O(log n) rounds, localCheckpointed every
+    round so lineage never grows with the iteration count).
 
     Returns (id_col, cluster) with cluster = min id of the component.
     """
-    def _stars_to_clusters(stars: DataFrame) -> DataFrame:
-        # star edges (u, v=component min); vertices with no edge (incl. the
-        # minima themselves) are their own cluster
-        return (
-            vertices.select(F.col(id_col))
-            .join(stars, vertices[id_col] == stars.u, "left")
-            .select(
-                F.col(id_col),
-                F.coalesce("v", F.col(id_col)).alias("cluster"),
-            )
-        )
-
-    if strategy == "star":
-        sym0 = pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        return _stars_to_clusters(_star_components(sym0))
-    sym = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .localCheckpoint()
+    edges = pairs.select("id_a", "id_b").localCheckpoint()
+    if edges.count() <= SMALL_GRAPH_EDGES // 2:
+        return _small_graph_components(edges, vertices, id_col)
+    # star edges (u, v=component min); vertices with no edge (incl. the
+    # minima themselves) are their own cluster
+    stars = _star_components(edges)
+    return (
+        vertices.select(F.col(id_col))
+        .join(stars, vertices[id_col] == stars.u, "left")
+        .select(F.col(id_col), F.coalesce("v", F.col(id_col)).alias("cluster"))
     )
-    if strategy == "auto" and small_graph_edges is not None:
-        # scale-adaptive dispatch: near-dup pair graphs are usually TINY
-        # relative to the corpus (dedup ran exact-first and capped
-        # buckets), and the iterative loop pays 2-3 jobs per round no
-        # matter how small the data. A bounded count on the checkpointed
-        # edges picks a one-collect driver union-find under the cap; the
-        # distributed O(rounds)/O(log n) paths remain the scale route.
-        if sym.count() <= small_graph_edges:
-            return _small_graph_components(sym, vertices, id_col)
-    lab = vertices.select(
-        F.col(id_col).alias("v"), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    changed = 0
-    for _ in range(max_iter):
-        prop = (
-            sym.join(lab, sym.src == lab.v)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_lab = (
-            lab.join(prop, lab.v == prop.dst, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nbr_min", F.col("label")) < F.col("label")).alias(
-                    "__chg__"
-                ),
-            )
-        ).localCheckpoint()
-        changed = new_lab.where(F.col("__chg__")).limit(1).count()
-        lab = new_lab.drop("__chg__")
-        if changed == 0:
-            break
-    if changed != 0:
-        if strategy == "auto":
-            # a deeper-than-max_iter component: restart on the log-round
-            # algorithm so the answer is correct instead of silently split
-            return _stars_to_clusters(_star_components(sym))
-        # strategy='label' pinned explicitly: surface the split (ADVICE r3)
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "labels may still split one true component. Raise max_iter or "
-            "use strategy='star'/'auto' for deep chain components.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return lab.select(F.col("v").alias(id_col), F.col("label").alias("cluster"))
 
 
 def dedup_corpus_clusters(
@@ -859,7 +766,6 @@ def semantic_dedup(
     bands: int = 4,
     seed: int = 42,
     max_bucket: int | None = 10_000,
-    cc_strategy: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): documents
     whose EMBEDDINGS are near-identical (cosine >= threshold) collapse to
@@ -869,15 +775,12 @@ def semantic_dedup(
     Composition of existing scale-safe parts: hyperplane-LSH candidate
     pairs with exact cosine verification (:func:`embedding_near_dup_pairs`
     — never the n² pair space), connected components over the pair graph
-    (:func:`connected_components`, 'auto' = label propagation with the
-    large-star/small-star fallback), keep the min id per cluster. Returns
+    (:func:`connected_components`), keep the min id per cluster. Returns
     the deduplicated frame (original columns)."""
     pairs = embedding_near_dup_pairs(
         df, id_col=id_col, vec_col=vec_col, threshold=threshold,
         n_planes=n_planes, bands=bands, seed=seed, max_bucket=max_bucket,
     )
-    comp = connected_components(
-        pairs, df.select(id_col), id_col=id_col, strategy=cc_strategy
-    )
+    comp = connected_components(pairs, df.select(id_col), id_col=id_col)
     keep = comp.where(F.col(id_col) == F.col("cluster")).select(id_col)
     return df.join(keep, id_col, "left_semi")

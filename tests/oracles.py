@@ -5,7 +5,9 @@ Spark operator is checked against an independent small-scale implementation
 of the same formula. The oracles deliberately share only the leaf numeric
 kernels (functions/stats.py, functions/discretize.py) with the engine — the
 *dataflow* (ordering, grouping, windowing, joining) is re-derived with plain
-pandas so a Spark-side dataflow bug cannot self-confirm.
+pandas so a Spark-side dataflow bug cannot self-confirm. The one
+exception is :func:`minhash_catalyst`, an independent Catalyst-expression
+form of a numpy kernel.
 """
 
 from __future__ import annotations
@@ -225,3 +227,38 @@ def carscore_scores(
         )
     omega = stats.carscore(corr[:-1, :-1], corr[:-1, -1], lam=lam, diagonal=diagonal)
     return {c: float(w) for c, w in zip(x_names, omega)}
+
+
+def minhash_catalyst(
+    df,
+    text_col: str = "text",
+    num_perm: int = 32,
+    k_shingle: int = 3,
+    seed: int = 42,
+    out: str = "minhash",
+):
+    """Reference for ``dedup.with_minhash``: the same signatures as
+    ``num_perm`` pure-Catalyst ``F.transform``/``F.array_min`` expressions
+    (the engine's pre-vectorization form). It shares the shingle hashes and
+    permutation parameters with the engine — the quantity under test is
+    the numpy affine-transform/min kernel. A shingle hash equal to the
+    int64 minimum makes ANSI ``F.abs`` throw here, where the numpy kernel
+    still returns a valid residue."""
+    from pyspark.sql import functions as F
+
+    from recipeselectors_spark.functions import text as TX
+    from recipeselectors_spark.operators.dedup import MERSENNE_P, _perm_params
+
+    a, b = _perm_params(num_perm, seed)
+    df = df.withColumn("__sh__", TX.shingles(text_col, k=k_shingle))
+
+    def perm(ai: int, bi: int):
+        # closure factory: pyspark binds lambda variables by arity, so the
+        # captured params must NOT appear in the lambda signature
+        return lambda x: ((F.abs(x) % MERSENNE_P) * ai + bi) % MERSENNE_P
+
+    mins = [
+        F.array_min(F.transform("__sh__", perm(ai, bi))).alias(f"mh_{i}")
+        for i, (ai, bi) in enumerate(zip(a, b))
+    ]
+    return df.withColumn(out, F.array(*mins)).drop("__sh__")

@@ -1,6 +1,8 @@
 """As-of join: union-window strategy vs cogroup merge_asof strategy vs the
 pandas merge_asof oracle — all three must agree."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -311,27 +313,86 @@ def test_oversized_conversation_warns(spark):
     assert not any("max_conv_rows" in str(r.message) for r in rec2)
 
 
-@pytest.mark.parametrize("slice_s", [600, 1800, 7200])
-def test_sliced_cogroup_matches_unsliced(spark, frames, slice_s):
-    """The spine-side time-slice decomposition (the oversized-conversation
-    mitigation implemented): identical output to the plain cogroup
-    backward+tolerance join for any slice width >= tolerance."""
+def _exchange_keys(df) -> list[str]:
+    """The hashpartitioning keys of every exchange in the executed plan,
+    expression ids stripped (``["shard", "__slice__"]`` per sliced side)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"#\d+L?", "", k)
+        for k in re.findall(r"hashpartitioning\(([^)]*), \d+\)", plan)
+    ]
+
+
+def _sliced(s, f, cols, **kw):
+    """asof_join_cogroup forced onto its time-sliced path: the frames'
+    largest conversation is far above a 10-row budget. The over-budget
+    RuntimeWarning from hot_conv_shards is expected and silenced."""
+    import warnings as W
+
+    with W.catch_warnings():
+        W.simplefilter("ignore", RuntimeWarning)
+        out = asof.asof_join_cogroup(s, f, cols, max_conv_rows=10, **kw)
+    assert _exchange_keys(out) == ["shard, __slice__"] * 2
+    return out
+
+
+@pytest.mark.parametrize("tolerance_s", [600, 1800, 7200])
+def test_sliced_cogroup_matches_unsliced(spark, frames, tolerance_s):
+    """The time-slice decomposition (slice width = tolerance): identical
+    output to the single-group backward+tolerance join at several
+    widths."""
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
     want = asof.asof_join_cogroup(
-        s, f, ["v1", "v2"], tolerance_s=600, num_shards=4
+        s, f, ["v1", "v2"], tolerance_s=tolerance_s, num_shards=4,
+        max_conv_rows=None,
     ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=600, slice_s=slice_s, num_shards=4
+    got = _sliced(
+        s, f, ["v1", "v2"], tolerance_s=tolerance_s, num_shards=4
     ).toPandas()
     _check(got, want)
+
+
+@pytest.mark.parametrize("tolerance_s", [600, 1800])
+def test_sliced_cogroup_forward(spark, frames, tolerance_s):
+    """direction='forward' slicing (feature replicated to floor((t-tol)/W)
+    instead of floor((t+tol)/W)): identical to the single-group forward
+    join at several widths."""
+    spine, features = frames
+    s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
+    want = asof.asof_join_cogroup(
+        s, f, ["v1", "v2"], tolerance_s=tolerance_s, num_shards=4,
+        direction="forward", max_conv_rows=None,
+    ).toPandas()
+    got = _sliced(
+        s, f, ["v1", "v2"], tolerance_s=tolerance_s, num_shards=4,
+        direction="forward",
+    ).toPandas()
+    _check(got, want)
+
+
+def test_sliced_cogroup_zero_tolerance(spark, frames):
+    """tolerance_s=0 (exact-timestamp matches only) is legal: the slice
+    width becomes 1s and the result equals the single-group join, in both
+    sliceable directions."""
+    spine, features = frames
+    s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
+    for direction in ("backward", "forward"):
+        want = asof.asof_join_cogroup(
+            s, f, ["v1", "v2"], tolerance_s=0, num_shards=4,
+            direction=direction, max_conv_rows=None,
+        ).toPandas()
+        got = _sliced(
+            s, f, ["v1", "v2"], tolerance_s=0, num_shards=4,
+            direction=direction,
+        ).toPandas()
+        _check(got, want)
 
 
 def test_sliced_cogroup_splits_giant_conversation(spark):
     """A single 5000-row conversation spanning many slices: the sliced join
     stays correct AND no Arrow group ever holds the whole conversation
-    (pinned by counting per-(shard,slice) group sizes)."""
-    import pandas as pd
+    (pinned by counting per-slice spine group sizes at width = tolerance)."""
     from pyspark.sql import functions as F
 
     n = 5000
@@ -348,60 +409,26 @@ def test_sliced_cogroup_splits_giant_conversation(spark):
     })
     s, f = spark.createDataFrame(spine), spark.createDataFrame(feats)
     want = asof.asof_join_cogroup(
-        s, f, ["v1", "v2"], tolerance_s=120, num_shards=4
+        s, f, ["v1", "v2"], tolerance_s=120, num_shards=4, max_conv_rows=None
     ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=120, slice_s=300, num_shards=4
-    ).toPandas()
+    got = _sliced(s, f, ["v1", "v2"], tolerance_s=120, num_shards=4).toPandas()
     _check(got, want)
-    # group-size bound: the spine splits into ceil(50000s / 300s) slices;
-    # the biggest (shard, slice) spine group is ~30 rows, never 5000
+    # group-size bound: spine rows every 10s in 120s slices -> the biggest
+    # (shard, slice) spine group is 12 rows, never 5000
     from recipeselectors_spark.operators.windows import epoch_s
 
     sizes = (
-        s.withColumn("sl", F.floor(epoch_s(F.col("ts")) / F.lit(300)))
+        s.withColumn("sl", F.floor(epoch_s(F.col("ts")) / F.lit(120)))
         .groupBy("sl").count().agg(F.max("count")).collect()[0][0]
     )
-    assert sizes <= 30
+    assert sizes <= 12
 
 
-def test_sliced_cogroup_guards(spark, frames):
-    spine, features = frames
-    s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    with pytest.raises(ValueError, match="tolerance_s"):
-        asof.asof_join_cogroup_sliced(s, f, ["v1"], tolerance_s=None)
-    with pytest.raises(ValueError, match="span more than two slices"):
-        asof.asof_join_cogroup_sliced(
-            s, f, ["v1"], tolerance_s=600, slice_s=300
-        )
-    with pytest.raises(ValueError, match="nearest"):
-        asof.asof_join_cogroup_sliced(
-            s, f, ["v1"], tolerance_s=600, direction="nearest"
-        )
-
-
-@pytest.mark.parametrize("slice_s", [600, 1800])
-def test_sliced_cogroup_forward(spark, frames, slice_s):
-    """direction='forward' slicing (feature replicated to floor((t-tol)/W)
-    instead of floor((t+tol)/W)): identical to the unsliced forward join
-    at multiple widths."""
-    spine, features = frames
-    s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    want = asof.asof_join_cogroup(
-        s, f, ["v1", "v2"], tolerance_s=600, num_shards=4,
-        direction="forward",
-    ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=600, slice_s=slice_s, num_shards=4,
-        direction="forward",
-    ).toPandas()
-    _check(got, want)
-
-
-def test_cogroup_auto_slices_pathological_conversation(spark, monkeypatch):
-    """A conversation above max_conv_rows routes asof_join_cogroup to the
-    sliced implementation UNPROMPTED (VERDICT r4 #6) — same rows out — and
-    raises a clear error when no finite tolerance makes slicing possible."""
+def test_cogroup_slices_pathological_conversation(spark):
+    """A conversation above max_conv_rows takes the time-sliced path
+    UNPROMPTED — same rows out — and raises a clear error when slicing is
+    impossible (no finite tolerance, or direction='nearest');
+    ``max_conv_rows=None`` keeps the single-group plan."""
     import warnings as W
 
     n = 400
@@ -416,48 +443,37 @@ def test_cogroup_auto_slices_pathological_conversation(spark, monkeypatch):
     })
     s, f = spark.createDataFrame(spine), spark.createDataFrame(feats)
 
-    calls = []
-    real_sliced = asof.asof_join_cogroup_sliced
-
-    def spy(*a, **kw):
-        calls.append(kw.get("direction", "backward"))
-        return real_sliced(*a, **kw)
-
-    monkeypatch.setattr(asof, "asof_join_cogroup_sliced", spy)
     with W.catch_warnings():
         W.simplefilter("ignore", RuntimeWarning)  # the size warning — expected
         out = asof.asof_join_cogroup(
             s, f, ["v"], tolerance_s=10, num_shards=4, max_conv_rows=100
         )
-        assert calls == ["backward"]          # took the sliced path unprompted
-        assert out.count() == n + 1
-        # no finite tolerance -> slicing impossible -> loud error, not an OOM
+        # took the sliced path unprompted
+        assert _exchange_keys(out) == ["shard, __slice__"] * 2
+        want = asof.asof_join_cogroup(
+            s, f, ["v"], tolerance_s=10, num_shards=4, max_conv_rows=None
+        )
+        key = ["conv_id", "ts"]
+        a = out.toPandas().sort_values(key).reset_index(drop=True)
+        b = want.toPandas().sort_values(key).reset_index(drop=True)
+        assert len(a) == n + 1
+        pd.testing.assert_frame_equal(a, b)
+        # slicing impossible -> loud error, not an OOM
         with pytest.raises(RuntimeError, match="max_conv_rows"):
             asof.asof_join_cogroup(
                 s, f, ["v"], num_shards=4, max_conv_rows=100
             )
-        # explicit opt-out keeps the old single-group behavior
-        assert (
+        with pytest.raises(RuntimeError, match="nearest"):
             asof.asof_join_cogroup(
-                s, f, ["v"], num_shards=4, max_conv_rows=100, auto_slice=False
-            ).count()
-            == n + 1
+                s, f, ["v"], tolerance_s=10, num_shards=4,
+                direction="nearest", max_conv_rows=100,
+            )
+        # explicit opt-out keeps the single-group behavior
+        plain = asof.asof_join_cogroup(
+            s, f, ["v"], num_shards=4, max_conv_rows=None
         )
-        assert calls == ["backward"]          # opt-out never sliced
-
-
-def test_sliced_cogroup_zero_tolerance(spark, frames):
-    """tolerance_s=0 (exact-timestamp matches only) is legal: slice width
-    defaults to 1s and the result equals the unsliced join."""
-    spine, features = frames
-    s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    want = asof.asof_join_cogroup(
-        s, f, ["v1", "v2"], tolerance_s=0, num_shards=4
-    ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=0, num_shards=4
-    ).toPandas()
-    _check(got, want)
+        assert _exchange_keys(plain) == ["shard"] * 2
+        assert plain.count() == n + 1
 
 
 def test_sliced_cogroup_plan_shape(spark, frames):
@@ -467,9 +483,7 @@ def test_sliced_cogroup_plan_shape(spark, frames):
     explode)."""
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    out = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=600, slice_s=600, num_shards=4
-    )
+    out = _sliced(s, f, ["v1", "v2"], tolerance_s=600, num_shards=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     n_exchanges = plan.count("Exchange hashpartitioning")

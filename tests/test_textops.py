@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from recipeselectors_spark.functions import text as TX
 from recipeselectors_spark.operators import dedup, multimodal, similarity
+from tests import oracles
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -702,9 +703,24 @@ def test_decontaminate_auto_fallback_routes(spark):
     assert (a["contaminated"] == b["contaminated"]).all()
 
 
-def test_star_components_match_label_on_shallow_graph(spark):
-    """large-star/small-star gives the identical clustering as label
-    propagation on the usual shallow near-dup graphs."""
+def _components(pairs, verts) -> dict:
+    return dict(
+        (r["doc_id"], r["cluster"])
+        for r in dedup.connected_components(pairs, verts).collect()
+    )
+
+
+def _star_forced(monkeypatch, pairs, verts) -> dict:
+    """connected_components with the driver union-find cap at 0, so every
+    non-empty graph runs large-star/small-star."""
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+        return _components(pairs, verts)
+
+
+def test_star_components_match_union_find_on_shallow_graph(spark, monkeypatch):
+    """large-star/small-star gives the identical clustering as the driver
+    union-find on the usual shallow near-dup graphs."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -720,25 +736,13 @@ def test_star_components_match_label_on_shallow_graph(spark):
         edges.append((members[0], members[-1]))  # keep it connected
     verts = spark.createDataFrame([(i,) for i in range(vid + 3)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    lab = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="label"
-        ).collect()
-    )
-    star = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="star"
-        ).collect()
-    )
-    assert lab == star
+    assert _components(pairs, verts) == _star_forced(monkeypatch, pairs, verts)
 
 
-def test_auto_components_survive_deep_chain(spark):
-    """A 64-hop duplicate chain (diameter >> the label-prop round budget):
-    strategy='label' warns and may split; the default 'auto' falls back to
-    large-star/small-star and returns ONE component, no warning."""
+def test_auto_components_survive_deep_chain(spark, monkeypatch):
+    """A 64-hop duplicate chain (high diameter) forced through the
+    distributed large-star/small-star path resolves to ONE component with
+    no warning — O(log n) rounds, not O(diameter)."""
     import warnings as W
 
     n = 65
@@ -747,24 +751,19 @@ def test_auto_components_survive_deep_chain(spark):
     )
     verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
 
+    calls = []
+    real_star = dedup._star_components
+
+    def spy(edges, **kw):
+        calls.append(1)
+        return real_star(edges, **kw)
+
+    monkeypatch.setattr(dedup, "_star_components", spy)
     with W.catch_warnings():
         W.simplefilter("error")  # any RuntimeWarning -> failure
-        got = dict(
-            (r["doc_id"], r["cluster"])
-            for r in dedup.connected_components(
-                pairs, verts, max_iter=5, strategy="auto"
-            ).collect()
-        )
+        got = _star_forced(monkeypatch, pairs, verts)
+    assert calls == [1]  # the star path really ran
     assert got == {i: 0 for i in range(n)}
-
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        lab = dict(
-            (r["doc_id"], r["cluster"])
-            for r in dedup.connected_components(
-                pairs, verts, max_iter=5, strategy="label"
-            ).collect()
-        )
-    assert set(lab.values()) != {0}  # the split the warning is about
 
 
 def test_quality_filter_rules_and_reasons(spark):
@@ -1165,11 +1164,10 @@ def test_full_corpus_pipeline_end_to_end(spark, tmp_path):
     )
 
 
-def test_small_graph_fast_path_agrees_with_distributed(spark):
-    """r6: strategy='auto' under the edge cap routes to the one-collect
-    driver union-find; its labels must equal both distributed paths, and
-    auto with the cap disabled (small_graph_edges=0) must still run the
-    distributed loop (the deep-chain star fallback stays reachable)."""
+def test_small_graph_fast_path_agrees_with_distributed(spark, monkeypatch):
+    """Under the edge cap connected_components routes to the one-collect
+    driver union-find; its labels must equal the distributed
+    large-star/small-star path forced by a cap of 0."""
     rng = __import__("random").Random(7)
     edges = [(i, i + 1) for i in range(0, 40, 2)]
     edges += [(rng.randrange(50), rng.randrange(50)) for _ in range(30)]
@@ -1177,29 +1175,18 @@ def test_small_graph_fast_path_agrees_with_distributed(spark):
     verts = spark.createDataFrame([(i,) for i in range(55)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
 
-    fast = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(pairs, verts).collect()
-    )
-    lab = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="label"
-        ).collect()
-    )
-    star = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="star"
-        ).collect()
-    )
-    no_cap = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, small_graph_edges=0
-        ).collect()
-    )
-    assert fast == lab == star == no_cap
+    calls = []
+    real_uf = dedup._small_graph_components
+
+    def spy(*a):
+        calls.append(1)
+        return real_uf(*a)
+
+    monkeypatch.setattr(dedup, "_small_graph_components", spy)
+    fast = _components(pairs, verts)
+    assert calls == [1]  # under the cap: driver union-find
+    assert fast == _star_forced(monkeypatch, pairs, verts)
+    assert calls == [1]  # cap 0: never the union-find
 
 
 def test_minhash_kernel_matches_catalyst_reference(spark):
@@ -1222,7 +1209,7 @@ def test_minhash_kernel_matches_catalyst_reference(spark):
         }
         want = {
             r["doc_id"]: list(r["minhash"])
-            for r in dedup._with_minhash_catalyst(
+            for r in oracles.minhash_catalyst(
                 df, num_perm=num_perm, k_shingle=k
             ).select("doc_id", "minhash").collect()
         }

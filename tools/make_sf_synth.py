@@ -14,7 +14,10 @@ sf0.1 by replicating each table ``factor`` times with:
   preserved, so intra-copy exact/near-duplicate structure is byte-for-
   byte identical to the original, while cross-copy shingles never
   collide — replicated docs do NOT become giant cross-copy duplicate
-  groups that real scaled data would not contain.
+  groups that real scaled data would not contain. The cipher remaps only
+  ASCII letter bytes, which never occur inside a UTF-8 multibyte
+  sequence, so non-ASCII text stays valid UTF-8. Caveat: a document with
+  no ASCII letters (digits/punctuation only) is identical in every copy.
 * **A per-copy random orthogonal rotation** for embeddings (identity for
   copy 0): intra-copy cosine geometry is exactly preserved; cross-copy
   similarities look like random pairs, so LSH bucket sizes scale the way
@@ -38,6 +41,7 @@ import sys
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 OFFSETS = {
@@ -74,6 +78,11 @@ def _rotations(n: int, dim: int) -> list[np.ndarray]:
 
 
 def scale_table(name: str, src: str, dst: str, factor: int) -> int:
+    if name not in OFFSETS and name not in COPY_AS_IS:
+        raise ValueError(
+            f"table {name!r} is in neither OFFSETS nor COPY_AS_IS: its copies "
+            "would repeat every key; declare its key columns first"
+        )
     tab = pq.read_table(os.path.join(src, f"{name}.parquet"))
     n = tab.num_rows
     if name in COPY_AS_IS or factor == 1:
@@ -96,13 +105,13 @@ def scale_table(name: str, src: str, dst: str, factor: int) -> int:
             col = tab.column(cname)
             if cname in key_cols:
                 off = k * (10 ** 9)
-                arrays.append(pa.compute.add(col, off) if k else col)
+                arrays.append(pc.add(col, off) if k else col)
             elif ciphers is not None and cname == "text":
                 if k == 0:
                     arrays.append(col)
                 else:
                     t = ciphers[k]
-                    vals = [v.as_py().encode().translate(t).decode("latin1")
+                    vals = [v.as_py().encode().translate(t).decode("utf-8")
                             if v.is_valid else None for v in col.combine_chunks()]
                     arrays.append(pa.array(vals, type=pa.string()))
             elif rots is not None and cname == "embedding":
