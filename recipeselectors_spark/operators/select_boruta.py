@@ -146,14 +146,7 @@ class BorutaStep(SelectionStep):
         return self.max_runs
 
     def prep(self, df: DataFrame, roles=None) -> FittedStep:
-        from recipeselectors_spark.plans import roles as roles_mod
-
-        if roles is None:
-            roles = {
-                c: (roles_mod.OUTCOME if c == self.outcome else roles_mod.PREDICTOR)
-                for c in df.columns
-            }
-        x_names = roles_mod.resolve_terms(self.terms, df.schema, roles, self.outcome)
+        x_names = self.resolve(df, roles)
         if not x_names:
             return FittedStep(self.step_name, self.outcome, [], {}, self.skip)
 
@@ -223,7 +216,7 @@ class BorutaStep(SelectionStep):
 
                     from pyspark import inheritable_thread_target
 
-                    # 3 in flight is plenty: enough to fill stage tails,
+                    # at most 4 in flight: enough to fill stage tails,
                     # not so many the fits fight for executor slots
                     with ThreadPoolExecutor(
                         max_workers=min(4, len(batch))

@@ -83,16 +83,27 @@ class ForestsStep(SelectionStep):
         return cls(**kwargs)
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
+        return self.score_with_extras(df, x_names)[0]
+
+    def score_with_extras(self, df: DataFrame, x_names: list[str]):
         if self.importance == "impurity":
             assembled, kind = _mllib.prepare(df, x_names, self.outcome)
             model = _mllib.fit_estimator(self._estimator(kind), assembled)
-            return pull_importances(model, x_names, scaled=True)
+            return pull_importances(model, x_names, scaled=True), {}
         # permutation: fit FROM the cached/mixed frame the scoring passes
         # use anyway — one scan + one label-dictionary job for the whole
         # step instead of a separate uncached prepare for the fit (every
         # MLlib internal pass then reads executor memory, not parquet)
-        return self._permutation_importance(df, None, x_names,
-                                            _mllib.outcome_kind(df, self.outcome))
+        scores, baseline = self._permutation_importance(
+            df, None, x_names, _mllib.outcome_kind(df, self.outcome)
+        )
+        # the unpermuted metric the deltas are measured against —
+        # diagnostics + lets callers report scale-free relative drops
+        return scores, {"baseline_metric": baseline}
+
+    def reads(self, x_names: list[str]) -> list[str]:
+        ids = self.permute_ids if self.permute == "rotation" else []
+        return [*super().reads(x_names), *ids]
 
     def _metric(self, model, scored_input: DataFrame, kind: str) -> float:
         pred = model.transform(scored_input)
@@ -110,8 +121,9 @@ class ForestsStep(SelectionStep):
 
     def _permutation_importance(
         self, df: DataFrame, model, x_names: list[str], kind: str
-    ) -> dict[str, float]:
-        """Baseline metric minus metric after per-column permutation.
+    ) -> tuple[dict[str, float], float]:
+        """Baseline metric minus metric after per-column permutation, and
+        the baseline metric itself.
 
         ``permute='local'`` (default): the input is round-robin
         repartitioned ONCE (each partition a systematic sample of the
@@ -143,7 +155,6 @@ class ForestsStep(SelectionStep):
         if model is None:
             model = _mllib.fit_estimator(self._estimator(kind), assembled)
         baseline = self._metric(model, assembled, kind)
-        self._baseline_metric = baseline
 
         def one_feature(args: tuple[int, str]) -> float:
             i, c = args
@@ -180,15 +191,7 @@ class ForestsStep(SelectionStep):
             deltas = [one_feature(items[0])]
         out = dict(zip(x_names, deltas))
         clean.unpersist()
-        return out
-
-    def prep(self, df: DataFrame, roles=None):
-        fitted = super().prep(df, roles)
-        if self.importance == "permutation" and hasattr(self, "_baseline_metric"):
-            # the unpermuted metric the deltas are measured against —
-            # diagnostics + lets callers report scale-free relative drops
-            fitted.extras["baseline_metric"] = self._baseline_metric
-        return fitted
+        return out, baseline
 
     def tunable(self):
         base = super().tunable()

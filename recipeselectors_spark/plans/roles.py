@@ -5,8 +5,8 @@ The reference resolves tidyselect selectors (``all_predictors()``,
 time into a concrete name list (``terms_select``,
 /root/reference/R/step_select_infgain.R:128-130). Here a selector is a plain
 function ``(schema, roles) -> list[str]`` over the Spark ``StructType`` and a
-``{column: role}`` dict; composition is by list ops, resolution happens once
-in ``SelectionStep.prep``.
+``{column: role}`` dict; composition is by list ops, resolution happens at
+prep time in ``SelectionStep.resolve``.
 """
 
 from __future__ import annotations

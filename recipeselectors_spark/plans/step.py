@@ -119,6 +119,13 @@ class SelectionStep:
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
         raise NotImplementedError
 
+    def score_with_extras(
+        self, df: DataFrame, x_names: list[str]
+    ) -> tuple[dict[str, float], dict[str, Any]]:
+        """``score`` plus fit diagnostics for ``FittedStep.extras`` —
+        returned, not stored on the step, so a re-prep never inherits them."""
+        return self.score(df, x_names), {}
+
     def check_types(self, df: DataFrame, x_names: list[str]) -> None:
         """Subclasses enforce numeric/nominal requirements (recipes check_type)."""
 
@@ -137,15 +144,24 @@ class SelectionStep:
         }
 
     # -- lifecycle ----------------------------------------------------------
-    def prep(self, df: DataFrame, roles: dict[str, str] | None = None) -> FittedStep:
+    def resolve(
+        self, df: DataFrame, roles: dict[str, str] | None = None
+    ) -> list[str]:
+        """The concrete predictor names ``terms`` selects on ``df`` (outcome
+        excluded). ``roles=None`` makes every other column a predictor."""
         if roles is None:
             roles = {
                 c: (roles_mod.OUTCOME if c == self.outcome else roles_mod.PREDICTOR)
                 for c in df.columns
             }
-        x_names = roles_mod.resolve_terms(
-            self.terms, df.schema, roles, self.outcome
-        )
+        return roles_mod.resolve_terms(self.terms, df.schema, roles, self.outcome)
+
+    def reads(self, x_names: list[str]) -> list[str]:
+        """Every column ``prep`` reads once its terms resolved to ``x_names``."""
+        return [*x_names, self.outcome]
+
+    def prep(self, df: DataFrame, roles: dict[str, str] | None = None) -> FittedStep:
+        x_names = self.resolve(df, roles)
         if not x_names:
             # empty selection => pass-through (step_select_infgain.R:161-163)
             return FittedStep(self.step_name, self.outcome, [], {}, self.skip)
@@ -155,7 +171,7 @@ class SelectionStep:
         if self.prune_mode != "decision":
             top_p = pruning.check_top_p(top_p, len(x_names))
 
-        scores = self.score(df, x_names)
+        scores, extras = self.score_with_extras(df, x_names)
 
         if self.prune_mode == "percentile":
             exclude = pruning.select_percentile(
@@ -182,4 +198,5 @@ class SelectionStep:
             self.skip,
             params={"top_p": None if _is_na(top_p) else top_p,
                     "threshold": None if _is_na(self.threshold) else self.threshold},
+            extras=extras,
         )

@@ -81,6 +81,21 @@ def test_forests_permutation_importance(cells):
     assert fitted.scores["x01"] > fitted.scores["x10"]
 
 
+def test_forests_pass_through_reprep_has_no_stale_baseline(cells):
+    from recipeselectors_spark.plans import roles
+
+    pdf, df = cells
+    step = ForestsStep(
+        "class", terms=roles.columns("x01", "x10"), top_p=1, trees=5,
+        importance="permutation",
+    )
+    assert "baseline_metric" in step.prep(df).extras
+    # the selector finds nothing on this frame: a pass-through fit
+    again = step.prep(df.drop("x01", "x10"))
+    assert again.exclude == [] and again.scores == {}
+    assert "baseline_metric" not in again.extras
+
+
 # -- linear ----------------------------------------------------------------
 
 def test_linear_binary_with_normalize_pipeline(cells):
