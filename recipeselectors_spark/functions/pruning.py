@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import math
 import warnings
+from collections.abc import Sequence
 
 import numpy as np
 
@@ -31,6 +32,7 @@ __all__ = [
     "check_criteria",
     "dual_filter",
     "select_percentile",
+    "prune",
     "rescale_importance",
 ]
 
@@ -135,6 +137,29 @@ def select_percentile(
     if k <= 0:  # R: x[-seq_len(0)] drops nothing
         return []
     return [str(n) for n in names[order][k:]]
+
+
+def prune(
+    scores: dict[str, float],
+    prune_mode: str,
+    top_p,
+    threshold,
+    maximize: bool,
+    forced: Sequence[str] = (),
+) -> list[str]:
+    """The excluded features of one step: ``select_percentile`` or
+    ``dual_filter`` by ``prune_mode`` ('decision' drops negative scores),
+    then every ``forced`` name not already excluded, in order — e.g.
+    linear's NaN-coefficient features (step_select_linear.R:188-189)."""
+    if prune_mode == "percentile":
+        exclude = select_percentile(scores, top_p, threshold, maximize)
+    elif prune_mode == "dual":
+        exclude = dual_filter(scores, top_p, threshold, maximize)
+    elif prune_mode == "decision":
+        exclude = [k for k, v in scores.items() if v is not None and v < 0]
+    else:
+        raise ValueError(prune_mode)
+    return exclude + [c for c in dict.fromkeys(forced) if c not in exclude]
 
 
 def rescale_importance(scores: dict[str, float]) -> dict[str, float]:

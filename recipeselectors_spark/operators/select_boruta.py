@@ -102,22 +102,15 @@ class BorutaStep(SelectionStep):
         passed explicitly (not derived from call order) so runs may be
         fitted CONCURRENTLY (guide §2.6) without changing what any run
         computes."""
-        if _mllib.LABEL_COL in df.columns:
-            # prep's frame already carries the numeric label (r6: the
-            # per-run Arrow shadow pass ships only doubles — the string
-            # outcome never crosses the Python boundary, guide §4.1)
-            from pyspark.ml.feature import VectorAssembler
+        # prep's frame already carries the numeric label (r6: the per-run
+        # Arrow shadow pass ships only doubles — the string outcome never
+        # crosses the Python boundary, guide §4.1)
+        from pyspark.ml.feature import VectorAssembler
 
-            assembled = VectorAssembler(
-                inputCols=list(all_feats), outputCol=_mllib.FEATURES_COL,
-                handleInvalid="skip",
-            ).transform(df)
-        else:
-            # label mapping computed once in prep (outcome untouched)
-            assembled, _ = _mllib.prepare(
-                df, all_feats, self.outcome,
-                mapping=getattr(self, "_label_map", None),
-            )
+        assembled = VectorAssembler(
+            inputCols=list(all_feats), outputCol=_mllib.FEATURES_COL,
+            handleInvalid="skip",
+        ).transform(df)
         cls = RandomForestClassifier if kind == "classification" else RandomForestRegressor
         model = _mllib.fit_estimator(
             cls(numTrees=self.trees, maxDepth=self.max_depth, seed=self.seed)
@@ -156,7 +149,7 @@ class BorutaStep(SelectionStep):
         n_parts = df.sparkSession.sparkContext.defaultParallelism
         base = df.select(*x_names, self.outcome).dropna()
         # one distinct job for the label dictionary, reused by every run
-        self._label_map = (
+        label_map = (
             _mllib.label_mapping(base, self.outcome)
             if kind == "classification"
             else None
@@ -172,7 +165,7 @@ class BorutaStep(SelectionStep):
             base.repartition(n_parts)
             .withColumn(
                 _mllib.LABEL_COL,
-                _mllib.label_expr(self.outcome, self._label_map),
+                _mllib.label_expr(self.outcome, label_map),
             )
             .drop(self.outcome)
             .cache()

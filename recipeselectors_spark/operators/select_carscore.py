@@ -6,106 +6,63 @@ outcome enforced via ``check_type(quant=TRUE)`` :133; kernel
 ``lambda`` :141-144; ``diagonal=TRUE`` reduces to marginal correlations :151;
 score = abs(omega) :157-160; prune via ``select_percentile``, maximize).
 
-Spark plan: a single sufficient-statistics aggregation computes the full
-(p+1)×(p+1) Pearson correlation matrix — sums, squares and cross-products via
-one ``agg`` over pairwise products (p is feature-count-sized, data-sized work
-is one pass, map-side combined). The p×p eigendecomposition for R^{-1/2} runs
-on the driver in numpy.
+Spark plan: one sufficient-statistics pass computes the full (p+1)×(p+1)
+Pearson correlation matrix — n, sums and cross-products as one numpy matmul
+per Arrow batch, summed per partition, one partial-sum row per partition
+collected (bounded by the partition count, not the row count; no
+p²-expression codegen at any p). The p×p eigendecomposition for R^{-1/2}
+runs on the driver in numpy.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import NumericType
 
 from recipeselectors_spark.functions import stats
-from recipeselectors_spark.operators import _scoring
 from recipeselectors_spark.plans.step import SelectionStep
 
 
-# Above this feature count the p²/2 Catalyst agg expressions stop being a
-# good idea (codegen size scales with p²); switch to one numpy matmul per
-# Arrow batch with per-partition partial sums.
-BLOCK_THRESHOLD = 64
-
-
-def _moment_sums_agg(df: DataFrame, cols: list[str]):
-    """(n, Σx (p), Σ x·xᵀ (p×p)) via Catalyst agg expressions — ideal at
-    small p (whole-stage codegen, map-side combine)."""
-    p = len(cols)
-    aggs = [F.count(F.lit(1)).alias("__n__")]
-    for i, a in enumerate(cols):
-        aggs.append(F.sum(F.col(a).cast("double")).alias(f"s_{i}"))
-        for j in range(i, p):
-            b = cols[j]
-            aggs.append(
-                F.sum(F.col(a).cast("double") * F.col(b).cast("double")).alias(
-                    f"p_{i}_{j}"
-                )
-            )
-    row = df.agg(*aggs).collect()[0].asDict()
-    n = int(row["__n__"])
-    s = np.array([row[f"s_{i}"] for i in range(p)], dtype=float)
-    P = np.empty((p, p))
-    for i in range(p):
-        for j in range(i, p):
-            P[i, j] = P[j, i] = row[f"p_{i}_{j}"]
-    return n, s, P
-
-
-def _moment_sums_block(df: DataFrame, cols: list[str]):
-    """Same sums via mapInPandas: one BLAS matmul per Arrow batch, one
-    partial-sum row per PARTITION collected to the driver (bounded by the
-    partition count, not the row count). This is how the pass survives
-    p ≈ 1000, where the agg form would emit ~500k codegen expressions."""
-    import pandas as pd
-
-    p = len(cols)
+def _block_sums(
+    df: DataFrame,
+    cols: list[str],
+    width: int,
+    batch_sums: Callable[[np.ndarray], np.ndarray],
+) -> np.ndarray:
+    """Σ over every Arrow batch of ``batch_sums(x)`` (x = the batch of
+    ``cols`` as an n×p double matrix, result a length-``width`` vector):
+    summed per partition on the executors, then across the collected
+    partition rows on the driver. An input with no rows sums to zeros."""
 
     def part(batches):
-        n = 0
-        s = np.zeros(p)
-        P = np.zeros((p, p))
+        acc = np.zeros(width)
         for pdf in batches:
-            x = pdf.to_numpy(dtype=float)
-            n += len(x)
-            s += x.sum(axis=0)
-            P += x.T @ x
-        yield pd.DataFrame(
-            {"n": [n], "s": [s.tolist()], "pp": [P.ravel().tolist()]}
-        )
+            acc += batch_sums(pdf.to_numpy(dtype=float))
+        yield pd.DataFrame({"s": [acc.tolist()]})
 
     rows = (
         df.select(*[F.col(c).cast("double") for c in cols])
-        .mapInPandas(part, schema="n long, s array<double>, pp array<double>")
+        .mapInPandas(part, schema="s array<double>")
         .collect()
     )
-    n = sum(r["n"] for r in rows)
-    s = np.sum([np.array(r["s"]) for r in rows], axis=0)
-    P = np.sum([np.array(r["pp"]).reshape(p, p) for r in rows], axis=0)
-    return n, s, P
+    total = np.zeros(width)
+    for r in rows:
+        total += np.asarray(r["s"])
+    return total
 
 
-def _moment_stats(
-    df: DataFrame, cols: list[str]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """One sufficient-stats pass: (corr, means, pop-variances, n)."""
+def _moment_sums(df: DataFrame, cols: list[str]) -> tuple[int, np.ndarray, np.ndarray]:
+    """(n, Σx (p), Σ x·xᵀ (p×p)) in one pass."""
     p = len(cols)
-    if p > BLOCK_THRESHOLD:
-        n, s, P = _moment_sums_block(df, cols)
-    else:
-        n, s, P = _moment_sums_agg(df, cols)
-    means = s / n
-    cov = P / n - np.outer(means, means)
-    var_pop = np.maximum(np.diag(cov).copy(), 1e-300)
-    d = np.sqrt(var_pop)
-    return cov / np.outer(d, d), means, var_pop, n
-
-
-def correlation_matrix(df: DataFrame, cols: list[str]) -> np.ndarray:
-    """Pearson correlation of ``cols`` via one sufficient-stats pass."""
-    return _moment_stats(df, cols)[0]
+    v = _block_sums(
+        df, cols, 1 + p + p * p,
+        lambda x: np.concatenate([[len(x)], x.sum(axis=0), (x.T @ x).ravel()]),
+    )
+    return int(v[0]), v[1 : p + 1], v[p + 1 :].reshape(p, p)
 
 
 def _pair_w2_matrix(
@@ -114,50 +71,18 @@ def _pair_w2_matrix(
     means: np.ndarray,
     var_samp: np.ndarray,
 ) -> np.ndarray:
-    """Σ_k z_ki²·z_kj² for every feature pair i<j — the single extra moment
-    the Schäfer–Strimmer λ estimator needs. One bounded-output pass; agg
-    expressions at small p, per-partition numpy matmuls (Σ c²ᵀc² with
-    c = x−mean) above BLOCK_THRESHOLD."""
-    import pandas as pd
-
+    """Σ_k z_ki²·z_kj² for every feature pair — the single extra moment the
+    Schäfer–Strimmer λ estimator needs: Σ c²ᵀc² with c = x − mean, one
+    bounded-output pass."""
     p = len(cols)
-    if p > BLOCK_THRESHOLD:
-        m = np.asarray(means, dtype=float)
+    m = np.asarray(means, dtype=float)
 
-        def part(batches):
-            W = np.zeros((p, p))
-            for pdf in batches:
-                c2 = (pdf.to_numpy(dtype=float) - m) ** 2
-                W += c2.T @ c2
-            yield pd.DataFrame({"w": [W.ravel().tolist()]})
+    def w2(x: np.ndarray) -> np.ndarray:
+        c2 = (x - m) ** 2
+        return (c2.T @ c2).ravel()
 
-        rows = (
-            df.select(*[F.col(c).cast("double") for c in cols])
-            .mapInPandas(part, schema="w array<double>")
-            .collect()
-        )
-        W = np.sum([np.array(r["w"]).reshape(p, p) for r in rows], axis=0)
-        return W / np.outer(var_samp, var_samp)
-
-    centered = [
-        (F.col(c).cast("double") - F.lit(float(means[i])))
-        for i, c in enumerate(cols)
-    ]
-    aggs = []
-    for i in range(p):
-        for j in range(i + 1, p):
-            aggs.append(
-                F.sum((centered[i] * centered[i]) * (centered[j] * centered[j]))
-                .alias(f"w2_{i}_{j}")
-            )
-    row = df.agg(*aggs).collect()[0].asDict()
-    out = np.zeros((p, p))
-    for i in range(p):
-        for j in range(i + 1, p):
-            out[i, j] = out[j, i] = row[f"w2_{i}_{j}"] / (
-                var_samp[i] * var_samp[j]
-            )
-    return out
+    W = _block_sums(df, cols, p * p, w2).reshape(p, p)
+    return W / np.outer(var_samp, var_samp)
 
 
 class CarScoreStep(SelectionStep):
@@ -193,14 +118,21 @@ class CarScoreStep(SelectionStep):
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
         cols = list(x_names) + [self.outcome]
         clean = df.dropna(subset=cols)
-        corr, means, var_pop, n = _moment_stats(clean, cols)
+        n, sums, prods = _moment_sums(clean, cols)
+        if n == 0:  # no complete row: nothing to correlate
+            return {c: float("nan") for c in x_names}
+        means = sums / n
+        cov = prods / n - np.outer(means, means)
+        var_pop = np.maximum(np.diag(cov).copy(), 1e-300)
+        d = np.sqrt(var_pop)
+        corr = cov / np.outer(d, d)
         rxx = corr[:-1, :-1]
         rxy = corr[:-1, -1]
         lam = self.lam
         if lam == "auto":
             # care::carscore default: estimate the shrinkage intensity
             # (Schäfer–Strimmer) when lambda is not supplied (:141-144).
-            # Needs one extra bounded-output agg pass (Σ z_i²z_j² per pair);
+            # Needs one extra bounded-output pass (Σ z_i²z_j² per pair);
             # skipped when diagonal (marginal correlations ignore R_XX).
             if self.diagonal or len(x_names) < 2 or n < 2:
                 lam = 0.0

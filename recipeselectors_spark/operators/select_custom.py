@@ -37,13 +37,11 @@ class CustomScoreStep(SelectionStep):
         top_p=float("nan"),
         threshold=float("nan"),
         maximize: bool = True,
-        sample_frac: float | None = None,
         skip: bool = False,
     ) -> None:
         super().__init__(outcome, terms, top_p, threshold, skip)
         self.kernel = kernel
         self.maximize = maximize
-        self.sample_frac = sample_frac
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
         num = _scoring.numeric_cols(df, x_names)
@@ -65,11 +63,9 @@ class CustomScoreStep(SelectionStep):
         ):
             if not cols:
                 continue
-            melted = melt(df, cols, self.outcome)
-            if self.sample_frac is not None:
-                melted = melted.sample(fraction=self.sample_frac, seed=42)
             rows = (
-                melted.groupBy("feature")
+                melt(df, cols, self.outcome)
+                .groupBy("feature")
                 .applyInPandas(runner, schema="variable string, score double")
                 .collect()
             )

@@ -6,9 +6,9 @@ call into FSelectorRcpp::information_gain at :142-151 with
 ``select_percentile``, maximize).
 
 Spark plan: numeric predictors are MDL-discretized (cut points learned by one
-applyInPandas pass per feature over the melted frame — optionally on a seeded
-sample at scale), then ONE ``groupBy(feature, bin, y).count()`` shuffle
-produces every feature's joint table; entropies are finished on the driver
+applyInPandas pass per feature over the melted frame's per-value histogram),
+then ONE ``groupBy(feature, bin, y).count()`` shuffle produces every
+feature's joint table; entropies are finished on the driver
 (p × bins × classes cells). Nominal predictors skip discretization and go
 straight to the contingency shuffle.
 """
@@ -37,7 +37,6 @@ class InfGainStep(SelectionStep):
         mode: str = "infogain",  # infogain | gainratio | symuncert (:30-33)
         equal: bool = False,  # True => equal-frequency bins instead of MDL
         bins: int = 10,
-        sample_frac: float | None = None,
         mdl_gate_distinct: int | None = 65536,
         mdl_prebucket_bins: int = 4096,
         skip: bool = False,
@@ -48,7 +47,6 @@ class InfGainStep(SelectionStep):
         self.mode = mode
         self.equal = equal
         self.bins = bins
-        self.sample_frac = sample_frac
         self.mdl_gate_distinct = mdl_gate_distinct
         self.mdl_prebucket_bins = mdl_prebucket_bins
 
@@ -64,7 +62,6 @@ class InfGainStep(SelectionStep):
                 self.outcome,
                 method="equal" if self.equal else "mdl",
                 bins=self.bins,
-                sample_frac=self.sample_frac,
                 mdl_gate_distinct=self.mdl_gate_distinct,
                 mdl_prebucket_bins=self.mdl_prebucket_bins,
             )

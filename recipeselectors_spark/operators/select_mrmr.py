@@ -6,18 +6,20 @@ Reference: /root/reference/R/step_select_mrmr.R (prep :116-165; kernel
 I(Xi;Xs); prune via ``select_percentile``, maximize).
 
 Spark plan: discretize numeric predictors once (equal-frequency bins — the MI
-estimator's binning; nominal predictors use their levels), materialize a
-compact per-row *codes* frame, cache it. Relevance I(Xi;Y) for all i = one
-melted shuffle. Redundancy has two paths:
+estimator's binning, ``_scoring.bin_code``; nominal predictors use their
+levels, after the same ID-like-column guard as xtab and infgain), materialize
+a compact per-row *codes* frame, cache it. Relevance I(Xi;Y) for all i = one
+melted shuffle, pivoted by ``_scoring.joint_tables``. Redundancy has two
+paths, chosen by p against the module constant ``ALL_PAIRS_MAX`` (64):
 
-* **all-pairs fast path** (p <= ``all_pairs_max``, default 64): ALL pairwise
+* **all-pairs fast path** (p <= ALL_PAIRS_MAX): ALL pairwise
   MIs in ONE double-exploded ``groupBy(fa, va, fb, vb).count()`` shuffle —
   the map side emits p(p-1)/2 struct pairs per row but the map-side combine
   collapses them to at most pairs × bins² tiny cells per partition; the
   greedy loop then runs purely driver-side over the cached MI matrix.
   2 Spark jobs total instead of p+1 — at p=500 sequential job launch
   latency alone dominates the per-iteration path.
-* **per-iteration path** (p > all_pairs_max): each greedy iteration computes
+* **per-iteration path** (p > ALL_PAIRS_MAX): each greedy iteration computes
   I(Xi;Xs_new) for every remaining i against the newly-selected feature with
   ONE melted ``groupBy(feature, code, s_code).count()`` shuffle — p
   iterations ⇒ p shuffles over the cached codes frame, never a p×p row
@@ -29,12 +31,14 @@ exactly (pinned by tests).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from recipeselectors_spark.functions import stats
 from recipeselectors_spark.operators import _scoring
 from recipeselectors_spark.plans.step import SelectionStep
+
+# p at or below which redundancy comes from the one-shuffle all-pairs pass
+ALL_PAIRS_MAX = 64
 
 
 class MrmrStep(SelectionStep):
@@ -49,45 +53,36 @@ class MrmrStep(SelectionStep):
         top_p=float("nan"),
         threshold=float("nan"),
         bins: int = 10,
-        sample_frac: float | None = None,
-        all_pairs_max: int = 64,
         skip: bool = False,
     ) -> None:
         super().__init__(outcome, terms, top_p, threshold, skip)
         self.bins = bins
-        self.sample_frac = sample_frac
-        self.all_pairs_max = all_pairs_max
 
     def _codes_frame(self, df: DataFrame, x_names: list[str]) -> DataFrame:
-        """Per-row integer codes for every predictor + the outcome."""
+        """Per-row string codes for every predictor + the outcome."""
         num = _scoring.numeric_cols(df, x_names)
-        cols = []
-        if num:
-            cuts = _scoring.learn_numeric_cuts(
-                df, num, self.outcome, method="equal",
-                bins=self.bins, sample_frac=self.sample_frac,
+        cuts = (
+            _scoring.learn_numeric_cuts(
+                df, num, self.outcome, method="equal", bins=self.bins
             )
-        for c in x_names:
-            q = _scoring.quote(c)
-            if c in (num or []):
-                bounds = cuts.get(c, [])
-                if bounds:
-                    arr = ", ".join(repr(float(b)) for b in bounds)
-                    expr = (
-                        f"case when {q} is null then '-1' else cast(size(filter("
-                        f"array({arr}), b -> cast({q} as double) >= b)) as string) end"
-                    )
-                else:
-                    expr = f"case when {q} is null then '-1' else '0' end"
-            else:
-                expr = f"coalesce(cast({q} as string), '-1')"
-            cols.append(f"{expr} as {q}")
-        cols.append(
-            f"cast({_scoring.quote(self.outcome)} as string) as `__y__`"
+            if num
+            else {}
         )
-        return df.selectExpr(*cols)
+        cols = []
+        for c in x_names:
+            x = F.col(_scoring.quote(c))
+            if c in num:
+                code = _scoring.bin_code(x, cuts.get(c, [])).cast("string")
+            else:
+                code = F.coalesce(x.cast("string"), F.lit("-1"))
+            cols.append(code.alias(c))
+        cols.append(F.col(_scoring.quote(self.outcome)).cast("string").alias("__y__"))
+        return df.select(*cols)
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
+        nom = _scoring.nominal_cols(df, x_names)
+        if nom:  # fail fast on an ID-like column before any cell table
+            _scoring.nominal_cell_counts(df, nom, self.outcome)
         codes = self._codes_frame(df, x_names).cache()
         try:
             return self._greedy(codes, x_names)
@@ -103,21 +98,16 @@ class MrmrStep(SelectionStep):
         )
         melted = codes.selectExpr(
             f"stack({len(features)}, {pairs}) as (feature, code)",
-            f"{_scoring.quote(target_col)} as t",
+            f"{_scoring.quote(target_col)} as y",
         )
         pdf = (
-            melted.where(F.col("t").isNotNull())
-            .groupBy("feature", "code", "t")
+            melted.where(F.col("y").isNotNull())
+            .groupBy("feature", "code", "y")
             .agg(F.count("*").alias("n"))
             .toPandas()
         )
-        out: dict[str, float] = {}
-        for feat, g in pdf.groupby("feature"):
-            tab = g.pivot_table(
-                index="code", columns="t", values="n", aggfunc="sum", fill_value=0
-            ).to_numpy(dtype=float)
-            out[str(feat)] = stats.mutual_information(tab)
-        return out
+        tables = _scoring.joint_tables(pdf, bin_col="code", drop_null_bin=False)
+        return {f: stats.mutual_information(t) for f, t in tables.items()}
 
     def _pairwise_mi(
         self, codes: DataFrame, x_names: list[str]
@@ -159,7 +149,7 @@ class MrmrStep(SelectionStep):
         relevance = self._mi_against(codes, x_names, "__y__")
         relevance = {c: relevance.get(c, 0.0) for c in x_names}
 
-        all_pairs = len(x_names) <= self.all_pairs_max
+        all_pairs = len(x_names) <= ALL_PAIRS_MAX
         pair_mi: dict[tuple[str, str], float] = (
             self._pairwise_mi(codes, x_names) if all_pairs and len(x_names) > 1
             else {}

@@ -46,6 +46,8 @@ class FittedStep:
     skip: bool = False
     params: dict[str, Any] = field(default_factory=dict)
     extras: dict[str, Any] = field(default_factory=dict)
+    #: excluded whatever the prune criteria (``SelectionStep.extra_exclude``)
+    forced_exclude: list[str] = field(default_factory=list)
 
     def bake(self, df: DataFrame) -> DataFrame:
         """Drop excluded columns (step_select_infgain.R:182-187). Columns not
@@ -70,6 +72,7 @@ class FittedStep:
             },
             "skip": self.skip,
             "params": self.params,
+            "forced_exclude": self.forced_exclude,
         }
         return json.dumps(payload, sort_keys=True)
 
@@ -172,23 +175,10 @@ class SelectionStep:
             top_p = pruning.check_top_p(top_p, len(x_names))
 
         scores, extras = self.score_with_extras(df, x_names)
-
-        if self.prune_mode == "percentile":
-            exclude = pruning.select_percentile(
-                scores, top_p, self.threshold, self.maximize
-            )
-        elif self.prune_mode == "dual":
-            exclude = pruning.dual_filter(
-                scores, top_p, self.threshold, self.maximize
-            )
-        elif self.prune_mode == "decision":
-            exclude = [k for k, v in scores.items() if v is not None and v < 0]
-        else:
-            raise ValueError(self.prune_mode)
-
-        for name in self.extra_exclude(scores, x_names):
-            if name not in exclude:
-                exclude.append(name)
+        forced = self.extra_exclude(scores, x_names)
+        exclude = pruning.prune(
+            scores, self.prune_mode, top_p, self.threshold, self.maximize, forced
+        )
 
         return FittedStep(
             self.step_name,
@@ -199,4 +189,5 @@ class SelectionStep:
             params={"top_p": None if _is_na(top_p) else top_p,
                     "threshold": None if _is_na(self.threshold) else self.threshold},
             extras=extras,
+            forced_exclude=forced,
         )

@@ -32,14 +32,10 @@ def reprune(
     threshold = pruning.check_zero_one(threshold)
     if not (isinstance(top_p, float) and math.isnan(top_p)):
         top_p = pruning.check_top_p(top_p, len(fitted.scores))
-    if prune_mode == "percentile":
-        exclude = pruning.select_percentile(
-            fitted.scores, top_p, threshold, maximize
-        )
-    elif prune_mode == "dual":
-        exclude = pruning.dual_filter(fitted.scores, top_p, threshold, maximize)
-    else:
-        raise ValueError(prune_mode)
+    exclude = pruning.prune(
+        fitted.scores, prune_mode, top_p, threshold, maximize,
+        fitted.forced_exclude,
+    )
     return FittedStep(
         fitted.step_name,
         fitted.outcome,
@@ -50,6 +46,7 @@ def reprune(
             "top_p": None if (isinstance(top_p, float) and math.isnan(top_p)) else top_p,
             "threshold": threshold if not (isinstance(threshold, float) and math.isnan(threshold)) else None,
         },
+        forced_exclude=list(fitted.forced_exclude),
     )
 
 
@@ -98,7 +95,3 @@ def expand_candidates(spec: dict[str, Any], n: int = 5) -> list[float]:
         xs = sorted({int(round(x)) for x in xs})
     return xs
 
-
-def finalize_top_p_range(n_predictors: int) -> tuple[int, int]:
-    """parameters.R:19-28 — default [1,4], finalized by data dimensionality."""
-    return (1, max(1, min(4, n_predictors) if n_predictors < 4 else n_predictors))

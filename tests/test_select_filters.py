@@ -3,6 +3,7 @@ pandas oracles — SURVEY.md §5 pattern 1: allclose on scores + exact equality
 of the selected column set."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from recipeselectors_spark.operators import (
@@ -176,46 +177,55 @@ def test_mrmr_redundancy_penalty(cells):
     assert "x06" not in kept
 
 
-def test_mrmr_all_pairs_equals_per_iteration(iris):
+def test_mrmr_all_pairs_equals_per_iteration(iris, monkeypatch):
     """The one-shuffle all-pairs MI fast path and the per-iteration melted
     path compute MI from identical contingency tables — scores must agree
     exactly (not just allclose-loosely)."""
+    from recipeselectors_spark.operators import select_mrmr
+
     pdf, df = iris
     fast = MrmrStep("species", top_p=2, bins=10).prep(df)  # p=4 <= 64: fast
-    slow = MrmrStep("species", top_p=2, bins=10, all_pairs_max=0).prep(df)
+    monkeypatch.setattr(select_mrmr, "ALL_PAIRS_MAX", 0)
+    slow = MrmrStep("species", top_p=2, bins=10).prep(df)
     _scores_close(fast.scores, slow.scores, rtol=0, atol=0)
     assert fast.exclude == slow.exclude
 
 
-def test_mrmr_all_pairs_mixed_types(lending):
+def test_mrmr_all_pairs_mixed_types(lending, monkeypatch):
     """Path equivalence must hold with NOMINAL predictors in the mix — their
     level codes ride through the same (index, code) pair explosion as the
     binned numeric codes."""
+    from recipeselectors_spark.operators import select_mrmr
+
     pdf, df = lending
     sub = ["num01", "num02", "cat01", "cat06"]
     fast = MrmrStep("Class", terms=sub, top_p=2, bins=6).prep(df)
-    slow = MrmrStep("Class", terms=sub, top_p=2, bins=6, all_pairs_max=0).prep(df)
+    monkeypatch.setattr(select_mrmr, "ALL_PAIRS_MAX", 0)
+    slow = MrmrStep("Class", terms=sub, top_p=2, bins=6).prep(df)
     _scores_close(fast.scores, slow.scores, rtol=0, atol=0)
     assert fast.exclude == slow.exclude
 
 
-def test_mrmr_all_pairs_job_count(iris):
+def test_mrmr_all_pairs_job_count(iris, monkeypatch):
     """The fast path must launch a bounded number of Spark jobs regardless
     of p: cut learning + relevance + ONE pairwise shuffle — not one job per
     selected feature. (The per-iteration path launches ~p more.)"""
+    from recipeselectors_spark.operators import select_mrmr
+
     pdf, df = iris
     sc = df.sparkSession.sparkContext
 
-    def n_jobs(group: str, **kw) -> int:
+    def n_jobs(group: str) -> int:
         sc.setJobGroup(group, group)
         try:
-            MrmrStep("species", top_p=2, bins=10, **kw).prep(df)
+            MrmrStep("species", top_p=2, bins=10).prep(df)
         finally:
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     fast = n_jobs("mrmr-fast")
-    slow = n_jobs("mrmr-slow", all_pairs_max=0)
+    monkeypatch.setattr(select_mrmr, "ALL_PAIRS_MAX", 0)
+    slow = n_jobs("mrmr-slow")
     # p=4: per-iteration runs 3 extra greedy-iteration shuffles
     assert slow - fast >= 2, (fast, slow)
     # cut learning + cache + relevance + ONE pairwise pass (some of these
@@ -296,18 +306,22 @@ def test_carscore_differs_from_marginal_on_correlated_block(cars):
     )
 
 
-def test_carscore_block_path_matches_agg_path(cars, monkeypatch):
-    """Above BLOCK_THRESHOLD the moment pass switches from p² Catalyst agg
-    expressions to per-partition numpy matmuls — results must be identical
-    (forced here by dropping the threshold to 1)."""
-    from recipeselectors_spark.operators import select_carscore as SC
-
-    pdf, df = cars
-    agg = CarScoreStep("price", top_p=4).prep(df).scores
-    monkeypatch.setattr(SC, "BLOCK_THRESHOLD", 1)
-    block = CarScoreStep("price", top_p=4).prep(df).scores
-    for c in fixtures.CAR_X:
-        assert np.isclose(agg[c], block[c], rtol=1e-10), c
+def test_carscore_no_complete_row_scores_nan(spark):
+    """No row survives the NULL filter: every predictor must still be
+    scored, as NaN, and kept (select_percentile keeps NaNs). A frame built
+    from pandas is a local relation, so the filtered frame has NO partitions
+    and the per-partition moment pass collects no row at all; a frame built
+    from rows keeps its partitions, each contributing an empty sum."""
+    rows = [(None, 1.0, 2.0), (None, 2.0, 3.0), (None, 3.0, 5.0)]
+    schema = "a double, b double, y double"
+    for df in (
+        spark.createDataFrame(pd.DataFrame(rows, columns=["a", "b", "y"]), schema),
+        spark.createDataFrame(rows, schema),
+    ):
+        fitted = CarScoreStep("y", terms=["a", "b"], top_p=1).prep(df)
+        assert sorted(fitted.scores) == ["a", "b"]
+        assert all(np.isnan(v) for v in fitted.scores.values())
+        assert fitted.exclude == []
 
 
 def test_carscore_rejects_nominal_outcome(iris):
@@ -445,3 +459,33 @@ def test_nominal_guard_rejects_id_like_column(spark):
         df2, ["lvl"], "y", max_cells_per_feature=1000
     )
     assert set(pdf["feature"]) == {"lvl"}
+
+
+def test_mrmr_nominal_guard_rejects_id_like_column(spark, monkeypatch):
+    """mRMR's relevance and pairwise passes collect per-level cell tables,
+    so an ID-like nominal predictor gets xtab's and infgain's guard (same
+    error, default 100,000 cells); a numeric-only step never probes."""
+    from pyspark.sql import functions as F
+    from recipeselectors_spark.operators import _scoring
+
+    df = spark.range(100_001).select(
+        F.concat(F.lit("id-"), F.col("id")).alias("doc_key"),
+        (F.col("id") % 7).cast("double").alias("num"),
+        (F.col("id") % 2).cast("string").alias("y"),
+    )
+    with pytest.raises(ValueError, match="max_cells_per_feature"):
+        MrmrStep("y", terms=["doc_key", "num"], top_p=1).prep(df)
+
+    probes = []
+    real = _scoring.nominal_cell_counts
+    monkeypatch.setattr(
+        _scoring, "nominal_cell_counts",
+        lambda *a, **k: probes.append(a[1]) or real(*a, **k),
+    )
+    small = df.limit(200)
+    MrmrStep("y", terms=["num"], threshold=0.5, bins=4).prep(small)
+    assert probes == []
+    MrmrStep("y", terms=["num", "lvl"], top_p=1, bins=4).prep(
+        small.withColumn("lvl", (F.col("num") % 3).cast("string"))
+    )
+    assert probes == [["lvl"]]

@@ -50,6 +50,23 @@ def test_grid_matches_full_reprep(spark):
         assert sorted(fast.exclude) == sorted(slow.exclude)
 
 
+def test_reprune_keeps_forced_exclusions(spark, monkeypatch):
+    """Linear force-excludes NaN-coefficient features whatever the prune
+    criteria (step_select_linear.R:188-189). A re-prune at the fitted top_p
+    must reproduce prep's decision, also after a JSON round trip."""
+    from recipeselectors_spark.operators import LinearStep
+
+    scores = {"a": 3.0, "b": NA, "c": 1.0, "d": 2.0}
+    monkeypatch.setattr(LinearStep, "score", lambda self, df, x: dict(scores))
+    df = spark.createDataFrame([(1.0, 2.0, 3.0, 4.0, 0.5)], "a double, b double, c double, d double, y double")
+    fitted = LinearStep("y", top_p=2).prep(df)
+    assert "b" in fitted.exclude
+    for f in (fitted, FittedStep.from_json(fitted.to_json())):
+        again = tuning.reprune(f, top_p=fitted.params["top_p"])
+        assert again.exclude == fitted.exclude
+        assert tuning.reprune(again, top_p=3).exclude == ["b"]
+
+
 # ---- hypothesis properties ------------------------------------------------
 
 scores_strategy = st.dictionaries(
