@@ -29,7 +29,6 @@ __all__ = [
     "chi2_test",
     "fisher_exact_2x2",
     "fisher_exact",
-    "fisher_exact_network",
     "bh_adjust",
     "carscore",
     "binom_sf",
@@ -241,91 +240,24 @@ def fisher_exact_2x2(table: np.ndarray) -> float:
 
 
 class FisherBudgetExceeded(Exception):
-    """Raised when the r×c enumeration would visit more tables than the
-    caller's budget — callers fall back to the chi-square approximation."""
+    """Raised when the r×c network walk would hold more states or live
+    paths than the caller's budget — callers fall back to the chi-square
+    approximation."""
 
 
-def fisher_exact(table: np.ndarray, max_tables: int = 500_000) -> float:
+def fisher_exact(table: np.ndarray, max_states: int = 2_000_000) -> float:
     """Two-sided Fisher exact conditional test for an r×c table.
 
     Parity target: ``stats::fisher.test(xtab)`` with no shape restriction
     (/root/reference/R/step_select_xtab.R:116). The p-value is the sum of
     probabilities, under the multiple-hypergeometric distribution with the
     observed margins, of every table at most as probable as the observed one
-    (R's 1e-7 relative tie tolerance, as in the 2×2 path).
+    (R's 1e-7 relative tie tolerance, as in the 2×2 path). 2×2 input
+    short-circuits to the closed hypergeometric form; every larger shape is
+    summed by a Mehta–Patel-style network algorithm (FEXACT, Algorithm 643 —
+    the code R's fisher.test runs) over a DAG instead of the raw table space.
 
-    Enumeration is a depth-first fill over rows (last row/cell forced by the
-    margins), pruned by the column remainders. Tables whose raw enumeration
-    would exceed ``max_tables`` are handed to the FEXACT-style
-    :func:`fisher_exact_network` (exactly R fisher.test's escalation path);
-    only when THAT state space also blows its budget is
-    :class:`FisherBudgetExceeded` raised so callers can fall back to
-    chi-square. 2×2 input short-circuits to the closed hypergeometric form.
-    """
-    tab = np.asarray(table, dtype=np.int64)
-    if tab.ndim != 2 or min(tab.shape) < 2:
-        raise ValueError("fisher_exact requires an r×c table with r,c >= 2")
-    if tab.shape == (2, 2):
-        return fisher_exact_2x2(tab)
-    rows = [int(x) for x in tab.sum(axis=1)]
-    cols = [int(x) for x in tab.sum(axis=0)]
-    n = int(tab.sum())
-    lg = math.lgamma
-    const = (
-        sum(lg(x + 1) for x in rows)
-        + sum(lg(x + 1) for x in cols)
-        - lg(n + 1)
-    )
-    obs = const - float(sum(lg(int(x) + 1) for x in tab.flat))
-    cutoff = obs + 1e-7
-    n_rows, n_cols = tab.shape
-    state = {"total": 0.0, "count": 0}
-
-    def rec(r: int, rem_cols: list[int], acc_lg: float) -> None:
-        if r == n_rows - 1:
-            state["count"] += 1
-            if state["count"] > max_tables:
-                raise FisherBudgetExceeded(
-                    f"fisher_exact enumeration exceeded {max_tables} tables"
-                )
-            lp = const - (acc_lg + sum(lg(x + 1) for x in rem_cols))
-            if lp <= cutoff:
-                state["total"] += math.exp(lp)
-            return
-        target = rows[r]
-        cells = [0] * n_cols
-
-        def fill(j: int, remaining: int) -> None:
-            if j == n_cols - 1:
-                if remaining <= rem_cols[j]:
-                    cells[j] = remaining
-                    rec(
-                        r + 1,
-                        [rem_cols[k] - cells[k] for k in range(n_cols)],
-                        acc_lg + sum(lg(c + 1) for c in cells),
-                    )
-                return
-            for v in range(min(remaining, rem_cols[j]) + 1):
-                cells[j] = v
-                fill(j + 1, remaining - v)
-
-        fill(0, target)
-
-    try:
-        rec(0, list(cols), 0.0)
-    except FisherBudgetExceeded:
-        return fisher_exact_network(tab)
-    return float(min(1.0, state["total"]))
-
-
-def fisher_exact_network(
-    table: np.ndarray, max_states: int = 2_000_000
-) -> float:
-    """Two-sided Fisher exact p-value via a Mehta–Patel-style network
-    algorithm (FEXACT, Algorithm 643) — the same conditional-distribution sum
-    as :func:`fisher_exact`, but over a DAG instead of the raw table space.
-
-    Nodes are ``(row index, remaining column margins)`` states: many DFS
+    Nodes are ``(row index, remaining column margins)`` states: many row-fill
     branches share one state, so each subtree is summarized ONCE with three
     memoized quantities over its completions —
 
@@ -338,11 +270,10 @@ def fisher_exact_network(
     (``acc + minw >= T``), the whole subtree's mass ``exp(const - acc +
     logS)`` is added without descending; if even the heaviest fails
     (``acc + maxw < T``), the subtree is skipped; only states the cutoff
-    actually slices through are expanded. This extends exact coverage to the
-    moderate r×c tables whose raw enumeration blows the DFS budget (R's
-    fisher.test handles these through the same FEXACT code). ``max_states``
-    caps the memo table; beyond it :class:`FisherBudgetExceeded` is raised
-    for the callers' chi-square fallback.
+    actually slices through are expanded, so tables whose raw enumeration
+    runs to millions are summed exactly. ``max_states`` caps the memo table
+    and the live paths; beyond it :class:`FisherBudgetExceeded` is raised for
+    the callers' chi-square fallback.
 
     Transposition and row/column permutations do not change the p-value
     (the statistic is a symmetric function of the margins), so the table is
@@ -367,20 +298,9 @@ def fisher_exact_network(
     lgf = [lg(k + 1) for k in range(n + 1)]  # lgamma(k!) lookup
     const = sum(lgf[x] for x in rows) + sum(lgf[x] for x in cols) - lgf[n]
     obs_w = float(sum(lgf[int(x)] for x in tab.flat))
-    # qualify: lp <= obs_lp + 1e-7  <=>  w >= T (same tie tolerance as DFS)
+    # qualify: lp <= obs_lp + 1e-7  <=>  w >= T (the 2×2 tie tolerance)
     T = obs_w - 1e-7
     n_rows, n_cols = tab.shape
-
-    # fail FAST on hopeless tables (the runtime budgets below are the exact
-    # backstop, but reaching them can itself take minutes): the state lattice
-    # is bounded by prod(c_j + 1) margin vectors and each expands into at
-    # most C(max_row + c - 1, c - 1) row fills
-    est_states = float(np.prod([c + 1.0 for c in cols]))
-    est_work = n_rows * est_states * math.comb(max(rows) + n_cols - 1, n_cols - 1)
-    if est_states > max_states or est_work > 100 * max_states:
-        raise FisherBudgetExceeded(
-            f"fisher_exact_network estimated work {est_work:.2g} exceeds budget"
-        )
 
     memo: dict[tuple[int, tuple[int, ...]], tuple[float, float, float]] = {}
 
@@ -404,6 +324,39 @@ def fisher_exact_network(
 
         yield from go(0, total)
 
+    def few_tables(cap: int) -> bool:
+        """Whether at most ``cap`` tables share the margins: the number of
+        row-by-row fills, counted per margin state, abandoned as soon as
+        the fills of some row exceed ``cap`` (every fill completes)."""
+        level = {cols: 1}
+        for r in range(n_rows - 1):
+            nxt: dict[tuple[int, ...], int] = {}
+            total = 0
+            for rem, cnt in level.items():
+                for x in comps(rows[r], rem):
+                    child = tuple(a - b for a, b in zip(rem, x))
+                    nxt[child] = nxt.get(child, 0) + cnt
+                    total += cnt
+                    if total > cap:
+                        return False
+            level = nxt
+        return True
+
+    # fail FAST on hopeless tables (the runtime budgets below are the exact
+    # backstop, but reaching them can itself take minutes): the state lattice
+    # is bounded by prod(c_j + 1) margin vectors and each expands into at
+    # most C(max_row + c - 1, c - 1) row fills. A table whose margins admit
+    # at most max_states / 4 tables (500k by default) is walked whatever
+    # that bound says: the walk expands no more states than there are fills.
+    est_states = float(np.prod([c + 1.0 for c in cols]))
+    est_work = n_rows * est_states * math.comb(max(rows) + n_cols - 1, n_cols - 1)
+    if (
+        est_states > max_states or est_work > 100 * max_states
+    ) and not few_tables(max_states // 4):
+        raise FisherBudgetExceeded(
+            f"fisher_exact estimated work {est_work:.2g} exceeds budget"
+        )
+
     def rec(r: int, rem: tuple[int, ...]) -> tuple[float, float, float]:
         """(minw, maxw, logS) over all completions of rows r..R-1."""
         key = (r, rem)
@@ -412,7 +365,7 @@ def fisher_exact_network(
             return hit
         if len(memo) >= max_states:
             raise FisherBudgetExceeded(
-                f"fisher_exact_network exceeded {max_states} states"
+                f"fisher_exact exceeded {max_states} states"
             )
         if r == n_rows - 1:
             w = sum(lgf[x] for x in rem)
@@ -469,11 +422,11 @@ def fisher_exact_network(
                 grew += len(live)
                 if grew > max_states:
                     raise FisherBudgetExceeded(
-                        f"fisher_exact_network exceeded {max_states} live paths"
+                        f"fisher_exact exceeded {max_states} live paths"
                     )
         if sum(len(d) for d in nxt.values()) > max_states:
             raise FisherBudgetExceeded(
-                f"fisher_exact_network exceeded {max_states} live paths"
+                f"fisher_exact exceeded {max_states} live paths"
             )
         cur = nxt
     for rem, paths in cur.items():  # last row: the fill is forced

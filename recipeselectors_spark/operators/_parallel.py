@@ -1,4 +1,5 @@
-"""Scan-parallelism guard for CPU-heavy narrow stages.
+"""Driver-side parallelism: the scan-parallelism guard for CPU-heavy narrow
+stages, and the thread map that overlaps independent Spark jobs.
 
 A parquet file written as one (or few) row groups scans as one (or few)
 tasks — Spark cannot split inside a row group — so any expensive per-row
@@ -34,3 +35,26 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     if n < target * min_ratio:
         return df.repartition(target)
     return df
+
+
+def thread_map(fn, items: list, max_workers: int) -> list:
+    """``[fn(x) for x in items]`` with up to ``max_workers`` calls at once
+    on driver threads, so one job's stage tail back-fills with the next
+    job's tasks (guide §2.6); results in ``items`` order, the first
+    exception in that order raised.
+
+    Each call runs with its OWN copy of the caller's local properties (job
+    group, description, scheduler pool). One copy shared by all threads —
+    one ``inheritable_thread_target`` wrapper mapped over the items — races
+    on the SQL execution ids Spark keeps there (seen as
+    ``NumberFormatException: Cannot parse null string`` in
+    ``SQLExecution``)."""
+    if max_workers <= 1 or len(items) <= 1:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(fn), x) for x in items]
+        return [f.result() for f in futures]

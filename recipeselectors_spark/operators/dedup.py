@@ -355,6 +355,12 @@ def embedding_near_dup_pairs(
     )
 
 
+# Largest estimated benchmark shingle set decontaminate broadcasts (50M
+# hashes ≈ 400 MB); above it the shuffle join. Tests monkeypatch it to
+# force the shuffle join.
+BROADCAST_MAX_SHINGLES = 50_000_000
+
+
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -362,8 +368,6 @@ def decontaminate(
     id_col: str = "doc_id",
     k_shingle: int = 3,
     min_overlap: int = 2,
-    broadcast_benchmark: bool | None = None,
-    broadcast_max_shingles: int = 50_000_000,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing >=
     ``min_overlap`` word-``k_shingle``s with ANY benchmark text — the
@@ -376,11 +380,10 @@ def decontaminate(
     set and aggregates matches per doc. Returns docs + ``n_contaminated``
     + ``contaminated`` flag; filter on it to drop.
 
-    ``broadcast_benchmark=None`` (default) picks the join strategy
-    automatically: one cheap ``approx_count_distinct`` over the benchmark
-    shingles (an order-of-magnitude call, not a size estimate) chooses
-    broadcast below ``broadcast_max_shingles`` (50M hashes ≈ 400 MB) and
-    the shuffle join above it. Pass True/False to override.
+    The join strategy is picked automatically: one cheap
+    ``approx_count_distinct`` over the benchmark shingles (an
+    order-of-magnitude call, not a size estimate) chooses broadcast up to
+    ``BROADCAST_MAX_SHINGLES`` and the shuffle join above it.
     """
     bench_sh = (
         benchmark.select(
@@ -388,18 +391,16 @@ def decontaminate(
         )
         .distinct()
     )
-    if broadcast_benchmark is None:
-        # the probe runs on the pre-distinct explode (approx_count_distinct
-        # needs no dedup shuffle) — one map-side-sketch job
-        est = (
-            benchmark.select(
-                F.explode(TX.shingles(text_col, k=k_shingle)).alias("__sh__")
-            )
-            .agg(F.approx_count_distinct("__sh__").alias("d"))
-            .collect()[0]["d"]
+    # the probe runs on the pre-distinct explode (approx_count_distinct
+    # needs no dedup shuffle) — one map-side-sketch job
+    est = (
+        benchmark.select(
+            F.explode(TX.shingles(text_col, k=k_shingle)).alias("__sh__")
         )
-        broadcast_benchmark = est <= broadcast_max_shingles
-    if broadcast_benchmark:
+        .agg(F.approx_count_distinct("__sh__").alias("d"))
+        .collect()[0]["d"]
+    )
+    if est <= BROADCAST_MAX_SHINGLES:
         bench_sh = F.broadcast(bench_sh)
     # shingles() is array_distinct per doc, so (id, shingle) pairs are
     # already unique after the explode — no dedup shuffle needed. The

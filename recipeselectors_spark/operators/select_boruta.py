@@ -15,11 +15,13 @@ when mcAdj (``Boruta:::TestFeatures`` semantics: ``p.adjust(pbinom(...),
 "bonferroni") < pValue``). The loop stops when all features are decided or
 maxRuns is reached; undecided features remain Tentative and are KEPT.
 
-Spark plan: the input is round-robin repartitioned ONCE (each partition a
-systematic sample of the dataset) and cached; each run's shadow columns are
-a seeded PARTITION-LOCAL permutation via mapInPandas (operators/_permute.py)
-— map-only, no global sort, no join — followed by one MLlib RF fit. The
-driver orchestrates ≤ maxRuns fits (SURVEY.md §2.2 #9) with early stopping.
+Spark plan: the training rows come from ``_mllib.training_frame(cached=True)``
+— round-robin repartitioned ONCE (each partition a systematic sample of the
+dataset) and cached, with one label-dictionary job that also builds the
+cache; each run's shadow columns are a seeded PARTITION-LOCAL permutation
+via mapInPandas (operators/_permute.py) — map-only, no global sort, no join
+— followed by one MLlib RF fit through ``_mllib.fit``. The driver
+orchestrates ≤ maxRuns fits (SURVEY.md §2.2 #9) with early stopping.
 
 Parity ledger vs the R Boruta package (what is pinned, what cannot be):
 
@@ -53,6 +55,7 @@ from pyspark.sql import DataFrame
 
 from recipeselectors_spark.functions import stats
 from recipeselectors_spark.operators import _mllib, _permute
+from recipeselectors_spark.operators._parallel import thread_map
 from recipeselectors_spark.plans.step import FittedStep, SelectionStep
 
 
@@ -102,19 +105,11 @@ class BorutaStep(SelectionStep):
         passed explicitly (not derived from call order) so runs may be
         fitted CONCURRENTLY (guide §2.6) without changing what any run
         computes."""
-        # prep's frame already carries the numeric label (r6: the per-run
-        # Arrow shadow pass ships only doubles — the string outcome never
-        # crosses the Python boundary, guide §4.1)
-        from pyspark.ml.feature import VectorAssembler
-
-        assembled = VectorAssembler(
-            inputCols=list(all_feats), outputCol=_mllib.FEATURES_COL,
-            handleInvalid="skip",
-        ).transform(df)
         cls = RandomForestClassifier if kind == "classification" else RandomForestRegressor
-        model = _mllib.fit_estimator(
-            cls(numTrees=self.trees, maxDepth=self.max_depth, seed=self.seed)
-        , assembled)
+        model = _mllib.fit(
+            cls(numTrees=self.trees, maxDepth=self.max_depth, seed=self.seed),
+            df, all_feats,
+        )
         return model.featureImportances.toArray()
 
     def _earliest_decision_run(
@@ -141,41 +136,14 @@ class BorutaStep(SelectionStep):
     def prep(self, df: DataFrame, roles=None) -> FittedStep:
         x_names = self.resolve(df, roles)
         if not x_names:
-            return FittedStep(self.step_name, self.outcome, [], {}, self.skip)
+            return self._fitted([], {})
 
-        kind = _mllib.outcome_kind(df, self.outcome)
-        # round-robin ONCE: disperses any global ordering so the per-run
-        # partition-local shadow permutation matches a global one statistically
-        n_parts = df.sparkSession.sparkContext.defaultParallelism
-        base = df.select(*x_names, self.outcome).dropna()
-        # one distinct job for the label dictionary, reused by every run
-        label_map = (
-            _mllib.label_mapping(base, self.outcome)
-            if kind == "classification"
-            else None
-        )
-        # cache the frame with the label ALREADY numeric: every run's
-        # Arrow shadow pass then moves pure doubles across the Python
-        # boundary instead of re-serializing the string outcome 2x per run.
-        # The label projection happens AFTER the round-robin repartition so
-        # sort-before-repartition sees the same bytes as always — the
-        # partition layout (and with it every seeded shadow permutation and
-        # the golden ImpHistory stream) is unchanged.
-        clean = (
-            base.repartition(n_parts)
-            .withColumn(
-                _mllib.LABEL_COL,
-                _mllib.label_expr(self.outcome, label_map),
-            )
-            .drop(self.outcome)
-            .cache()
-        )
-        # materialize the cache ONCE before the concurrent batch below:
-        # Spark's cache does not lock in-flight partitions, so N threads
-        # hitting an unmaterialized cache each recompute the base pass
-        # (observed: the first fit wave paying the repartition 4x). One
-        # cheap count turns the race into N cache reads.
-        clean.count()
+        # one cached, round-robin mixed training frame for every run (its
+        # label-dictionary job also builds the cache, so the concurrent
+        # batch below reads it instead of each run recomputing it). The
+        # label is numeric and the outcome dropped: every run's Arrow
+        # shadow pass moves pure doubles across the Python boundary.
+        tf = _mllib.training_frame(df, x_names, self.outcome, cached=True)
 
         hits = {c: 0 for c in x_names}
         decision = {c: "Tentative" for c in x_names}
@@ -184,12 +152,16 @@ class BorutaStep(SelectionStep):
         alpha = self.p_value / (len(x_names) if self.mc_adj else 1)
 
         def one_run(run: int) -> np.ndarray:
-            shadowed, shadow_names = self._with_shadows(clean, x_names, run)
+            shadowed, shadow_names = self._with_shadows(tf.frame, x_names, run)
             return self._fit_importances(
-                shadowed, list(x_names) + shadow_names, kind, run
+                shadowed, list(x_names) + shadow_names, tf.kind, run
             )
 
         try:
+            if tf.kind == "regression":
+                # no dictionary job ran: build the cache once before the
+                # batch (Spark's cache does not lock in-flight partitions)
+                tf.frame.count()
             while runs < self.max_runs and any(
                 d == "Tentative" for d in decision.values()
             ):
@@ -204,21 +176,9 @@ class BorutaStep(SelectionStep):
                     hits, runs, undecided, alpha
                 )
                 batch = list(range(runs + 1, max(horizon, runs + 1) + 1))
-                if len(batch) > 1:
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    from pyspark import inheritable_thread_target
-
-                    # at most 4 in flight: enough to fill stage tails,
-                    # not so many the fits fight for executor slots
-                    with ThreadPoolExecutor(
-                        max_workers=min(4, len(batch))
-                    ) as pool:
-                        batch_imps = list(
-                            pool.map(inheritable_thread_target(one_run), batch)
-                        )
-                else:
-                    batch_imps = [one_run(batch[0])]
+                # at most 4 in flight: enough to fill stage tails, not so
+                # many the fits fight for executor slots
+                batch_imps = thread_map(one_run, batch, 4)
 
                 for run, imps in zip(batch, batch_imps):
                     runs = run
@@ -246,19 +206,16 @@ class BorutaStep(SelectionStep):
                         elif stats.binom_cdf(hits[c], runs, 0.5) < alpha:
                             decision[c] = "Rejected"
         finally:
-            clean.unpersist()
+            tf.unpersist()
 
         exclude = [c for c in x_names if decision[c] == "Rejected"]  # :116
         mean_imp = {
             c: float(np.mean([h[c] for h in imp_history])) if imp_history else float("nan")
             for c in x_names
         }
-        return FittedStep(
-            self.step_name,
-            self.outcome,
+        return self._fitted(
             exclude,
             mean_imp,
-            self.skip,
             params={"p_value": self.p_value, "runs": runs},
             # imp_history mirrors Boruta's ImpHistory (one row per run,
             # real importances + the run's max shadow importance) — the

@@ -6,10 +6,12 @@ the outcome type :156; tunable mtry/trees/min_n :242-256; prune via
 ``select_percentile``, maximize).
 
 MLlib mapping: RandomForestClassifier/Regressor ``featureImportances``
-(Gini / variance gain) as the default; ``importance='permutation'`` computes
-true permutation importance — per-feature score drop after shuffling that
-column (distributed: one scored pass per feature over a seeded per-partition
-permutation; documented Gini-vs-permutation delta per SURVEY.md §7/M3).
+(Gini / variance gain) as the default, fitted on the spread (uncached)
+training frame; ``importance='permutation'`` computes true permutation
+importance — per-feature score drop after shuffling that column
+(distributed: one cached training frame for the fit and every pass, then
+one scored pass per feature over a seeded per-partition permutation of it;
+documented Gini-vs-permutation delta per SURVEY.md §7/M3).
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.ml.regression import RandomForestRegressor
 from pyspark.sql import DataFrame, functions as F
 
 from recipeselectors_spark.operators import _mllib, _permute
+from recipeselectors_spark.operators._parallel import thread_map
 from recipeselectors_spark.operators.importance import pull_importances
 from recipeselectors_spark.plans.step import SelectionStep
 
@@ -87,16 +90,10 @@ class ForestsStep(SelectionStep):
 
     def score_with_extras(self, df: DataFrame, x_names: list[str]):
         if self.importance == "impurity":
-            assembled, kind = _mllib.prepare(df, x_names, self.outcome)
-            model = _mllib.fit_estimator(self._estimator(kind), assembled)
+            tf = _mllib.training_frame(df, x_names, self.outcome)
+            model = _mllib.fit(self._estimator(tf.kind), tf.frame, x_names)
             return pull_importances(model, x_names, scaled=True), {}
-        # permutation: fit FROM the cached/mixed frame the scoring passes
-        # use anyway — one scan + one label-dictionary job for the whole
-        # step instead of a separate uncached prepare for the fit (every
-        # MLlib internal pass then reads executor memory, not parquet)
-        scores, baseline = self._permutation_importance(
-            df, None, x_names, _mllib.outcome_kind(df, self.outcome)
-        )
+        scores, baseline = self._permutation_importance(df, x_names)
         # the unpermuted metric the deltas are measured against —
         # diagnostics + lets callers report scale-free relative drops
         return scores, {"baseline_metric": baseline}
@@ -105,8 +102,10 @@ class ForestsStep(SelectionStep):
         ids = self.permute_ids if self.permute == "rotation" else []
         return [*super().reads(x_names), *ids]
 
-    def _metric(self, model, scored_input: DataFrame, kind: str) -> float:
-        pred = model.transform(scored_input)
+    def _metric(
+        self, model, frame: DataFrame, x_names: list[str], kind: str
+    ) -> float:
+        pred = model.transform(_mllib.assemble(frame, x_names))
         if kind == "classification":
             return (
                 pred.select(
@@ -120,78 +119,62 @@ class ForestsStep(SelectionStep):
         ).collect()[0]["m"]
 
     def _permutation_importance(
-        self, df: DataFrame, model, x_names: list[str], kind: str
+        self, df: DataFrame, x_names: list[str]
     ) -> tuple[dict[str, float], float]:
         """Baseline metric minus metric after per-column permutation, and
         the baseline metric itself.
 
-        ``permute='local'`` (default): the input is round-robin
-        repartitioned ONCE (each partition a systematic sample of the
-        dataset, dispersing any global ordering) and cached; each feature's
-        permutation is then a seeded PARTITION-LOCAL shuffle of that column
-        via mapInPandas (operators/_permute.py) — map-only scoring pass per
-        feature, no global sort, no join, nothing single-partition.
+        One cached training frame (``_mllib.training_frame(cached=True)``:
+        round-robin repartitioned ONCE, each partition a systematic sample
+        of the dataset, one label-dictionary job) serves the fit, the
+        baseline and every per-feature pass; a pass permutes one column of
+        that frame, assembles it and scores it.
+
+        ``permute='local'`` (default): each feature's permutation is a
+        seeded PARTITION-LOCAL shuffle of that column via mapInPandas
+        (operators/_permute.py) — map-only scoring pass per feature, no
+        global sort, no join, nothing single-partition.
 
         ``permute='rotation'``: content-deterministic cyclic rotation in
         md5(seed|ids) order within hash buckets (_permute.rotate_columns) —
         one bounded exchange per feature, layout-invariant, SQL-replayable
         (the driver oracle replays it). Requires ``permute_ids``.
         """
-        base_cols = list(x_names) + [self.outcome]
-        if self.permute == "rotation":
-            sel = base_cols + [c for c in self.permute_ids if c not in base_cols]
-            clean = df.select(*sel).dropna().cache()
-        else:
-            n_parts = df.sparkSession.sparkContext.defaultParallelism
-            clean = df.select(*base_cols).dropna().repartition(n_parts).cache()
-        # label dictionary once — the outcome column is untouched by the
-        # per-feature permutations, so every pass shares the same mapping
-        mapping = (
-            _mllib.label_mapping(clean, self.outcome)
-            if kind == "classification"
-            else None
+        rotation = self.permute == "rotation"
+        tf = _mllib.training_frame(
+            df, x_names, self.outcome,
+            keep=self.permute_ids if rotation else (), cached=True,
         )
-        assembled, _ = _mllib.prepare(clean, x_names, self.outcome, mapping=mapping)
-        if model is None:
-            model = _mllib.fit_estimator(self._estimator(kind), assembled)
-        baseline = self._metric(model, assembled, kind)
+        try:
+            model = _mllib.fit(self._estimator(tf.kind), tf.frame, x_names)
+            baseline = self._metric(model, tf.frame, x_names, tf.kind)
 
-        def one_feature(args: tuple[int, str]) -> float:
-            i, c = args
-            if self.permute == "rotation":
-                # x+outcome as numeric tiebreaks: rows colliding in the
-                # md5 key AND every scored column are interchangeable
-                shuffled = _permute.rotate_columns(
-                    clean, [c], self.permute_ids, seed=self.seed + i,
-                    bucket_chars=self.permute_bucket_chars,
-                    tiebreak_cols=base_cols,
+            def one_feature(args: tuple[int, str]) -> float:
+                i, c = args
+                if rotation:
+                    # x+label as numeric tiebreaks: rows colliding in the
+                    # md5 key AND every scored column are interchangeable
+                    shuffled = _permute.rotate_columns(
+                        tf.frame, [c], self.permute_ids, seed=self.seed + i,
+                        bucket_chars=self.permute_bucket_chars,
+                        tiebreak_cols=[*x_names, _mllib.LABEL_COL],
+                    )
+                else:
+                    shuffled = _permute.permute_columns(
+                        tf.frame, [c], seed=self.seed + i
+                    )
+                return float(
+                    baseline - self._metric(model, shuffled, x_names, tf.kind)
                 )
-            else:
-                shuffled = _permute.permute_columns(clean, [c], seed=self.seed + i)
-            assembled_i, _ = _mllib.prepare(
-                shuffled, x_names, self.outcome, mapping=mapping
-            )
-            return float(baseline - self._metric(model, assembled_i, kind))
 
-        # the per-feature scoring passes are independent reads of the
-        # cached frame — run a few concurrently so one pass's stage tail
-        # back-fills with the next pass's tasks (guide §2.6); each result
-        # depends only on (feature, seed+i), so output is order-invariant
-        items = list(enumerate(x_names))
-        if len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=min(3, len(items))) as pool:
-                deltas = list(
-                    pool.map(inheritable_thread_target(one_feature), items)
-                )
-        else:
-            deltas = [one_feature(items[0])]
-        out = dict(zip(x_names, deltas))
-        clean.unpersist()
-        return out, baseline
+            # the per-feature scoring passes are independent reads of the
+            # cached frame — run a few concurrently so one pass's stage tail
+            # back-fills with the next pass's tasks (guide §2.6); each result
+            # depends only on (feature, seed+i), so output is order-invariant
+            deltas = thread_map(one_feature, list(enumerate(x_names)), 3)
+        finally:
+            tf.unpersist()
+        return dict(zip(x_names, deltas)), baseline
 
     def tunable(self):
         base = super().tunable()

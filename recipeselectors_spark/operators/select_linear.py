@@ -49,10 +49,10 @@ class LinearStep(SelectionStep):
         self.tol = tol
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
-        assembled, kind = _mllib.prepare(df, x_names, self.outcome)
-        if kind == "classification":
-            k = _mllib.n_classes(df, self.outcome)
-            if k > 2:  # step_select_linear.R:163-166
+        tf = _mllib.training_frame(df, x_names, self.outcome)
+        if tf.kind == "classification":
+            # classes counted by the label dictionary, on the rows fitted
+            if tf.n_classes > 2:  # step_select_linear.R:163-166
                 raise ValueError(
                     "step_select_linear does not support multiclass outcomes"
                 )
@@ -69,7 +69,7 @@ class LinearStep(SelectionStep):
                 maxIter=self.max_iter,
                 tol=self.tol,
             )
-        model = _mllib.fit_estimator(est, assembled)
+        model = _mllib.fit(est, tf.frame, x_names)
         coefs = pull_importances(model, x_names, scaled=False)
         return {c: abs(v) if not math.isnan(v) else float("nan") for c, v in coefs.items()}
 

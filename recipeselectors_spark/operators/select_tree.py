@@ -46,15 +46,15 @@ class TreeStep(SelectionStep):
         self.seed = seed
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
-        assembled, kind = _mllib.prepare(df, x_names, self.outcome)
-        cls = DecisionTreeClassifier if kind == "classification" else DecisionTreeRegressor
+        tf = _mllib.training_frame(df, x_names, self.outcome)
+        cls = DecisionTreeClassifier if tf.kind == "classification" else DecisionTreeRegressor
         est = cls(
             maxDepth=self.tree_depth,
             minInstancesPerNode=self.min_n,
             maxBins=self.max_bins,
             seed=self.seed,
         )
-        model = _mllib.fit_estimator(est, assembled)
+        model = _mllib.fit(est, tf.frame, x_names)
         return pull_importances(model, x_names, scaled=True)
 
     def tunable(self):

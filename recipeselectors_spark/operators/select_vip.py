@@ -42,9 +42,9 @@ class VipStep(SelectionStep):
         self.scaled = scaled
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
-        assembled, kind = _mllib.prepare(df, x_names, self.outcome)
-        est = self.model(kind) if callable(self.model) else self.model
+        tf = _mllib.training_frame(df, x_names, self.outcome)
+        est = self.model(tf.kind) if callable(self.model) else self.model
         # fresh copy so a re-prep never mutates the user's estimator
         est = est.copy(est.extractParamMap()) if hasattr(est, "copy") else est
-        fitted = _mllib.fit_estimator(est, assembled)
+        fitted = _mllib.fit(est, tf.frame, x_names)
         return pull_importances(fitted, x_names, scaled=self.scaled)

@@ -10,11 +10,11 @@ Spark plan: both predictor and outcome are nominal — ONE melted
 ``groupBy(feature, level, y).count()`` shuffle builds every contingency table;
 the tiny tables are collected and tested on the driver with the numpy kernels
 (scipy-free chi-square survival function / exact hypergeometric tail).
-Fisher handles any r×c shape via depth-first enumeration of same-margin
-tables (fisher.test parity, :116); tables beyond the enumeration budget
-escalate to the FEXACT-style network algorithm (stats.fisher_exact_network —
-the same escalation R's fisher.test performs), and only when that too blows
-its state budget does the step fall back to chi-square with a warning.
+Fisher handles any r×c shape (fisher.test parity, :116): 2×2 tables by the
+closed hypergeometric form, larger ones by the FEXACT-style network
+algorithm (stats.fisher_exact — the algorithm R's fisher.test runs); only
+when a table blows the network's state budget does the step fall back to
+chi-square with a warning.
 """
 
 from __future__ import annotations
@@ -80,9 +80,9 @@ class XtabStep(SelectionStep):
                     pvals[c] = stats.fisher_exact(tab)
                 except stats.FisherBudgetExceeded:
                     warnings.warn(
-                        f"step_select_xtab: exact Fisher enumeration for "
+                        f"step_select_xtab: exact Fisher network for "
                         f"{c!r} ({tab.shape[0]}x{tab.shape[1]}, "
-                        f"n={int(tab.sum())}) exceeds the table budget; "
+                        f"n={int(tab.sum())}) exceeds the state budget; "
                         f"falling back to the chi-square approximation."
                     )
                     pvals[c] = stats.chi2_test(tab)

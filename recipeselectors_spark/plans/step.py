@@ -48,6 +48,9 @@ class FittedStep:
     extras: dict[str, Any] = field(default_factory=dict)
     #: excluded whatever the prune criteria (``SelectionStep.extra_exclude``)
     forced_exclude: list[str] = field(default_factory=list)
+    #: the step's prune semantics, which ``tuning.reprune`` re-applies
+    prune_mode: str = "percentile"
+    maximize: bool = True
 
     def bake(self, df: DataFrame) -> DataFrame:
         """Drop excluded columns (step_select_infgain.R:182-187). Columns not
@@ -73,6 +76,8 @@ class FittedStep:
             "skip": self.skip,
             "params": self.params,
             "forced_exclude": self.forced_exclude,
+            "prune_mode": self.prune_mode,
+            "maximize": self.maximize,
         }
         return json.dumps(payload, sort_keys=True)
 
@@ -167,7 +172,7 @@ class SelectionStep:
         x_names = self.resolve(df, roles)
         if not x_names:
             # empty selection => pass-through (step_select_infgain.R:161-163)
-            return FittedStep(self.step_name, self.outcome, [], {}, self.skip)
+            return self._fitted([], {})
         self.check_types(df, x_names)
 
         top_p = self.top_p
@@ -180,14 +185,18 @@ class SelectionStep:
             scores, self.prune_mode, top_p, self.threshold, self.maximize, forced
         )
 
-        return FittedStep(
-            self.step_name,
-            self.outcome,
+        return self._fitted(
             exclude,
             scores,
-            self.skip,
             params={"top_p": None if _is_na(top_p) else top_p,
                     "threshold": None if _is_na(self.threshold) else self.threshold},
             extras=extras,
             forced_exclude=forced,
+        )
+
+    def _fitted(self, exclude, scores, **kwargs) -> FittedStep:
+        """This step's ``FittedStep``, recording its prune semantics."""
+        return FittedStep(
+            self.step_name, self.outcome, exclude, scores, self.skip,
+            prune_mode=self.prune_mode, maximize=self.maximize, **kwargs,
         )

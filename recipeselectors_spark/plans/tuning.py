@@ -23,11 +23,16 @@ def reprune(
     fitted: FittedStep,
     top_p=float("nan"),
     threshold=float("nan"),
-    prune_mode: str = "percentile",
-    maximize: bool = True,
+    prune_mode: str | None = None,
+    maximize: bool | None = None,
 ) -> FittedStep:
     """New FittedStep with the same scores but a different prune decision.
-    Pure driver-side; no Spark job."""
+    ``prune_mode``/``maximize`` default to the ones the fit recorded (the
+    step's own semantics). Pure driver-side; no Spark job."""
+    if prune_mode is None:
+        prune_mode = fitted.prune_mode
+    if maximize is None:
+        maximize = fitted.maximize
     pruning.check_criteria(top_p, threshold, fitted.step_name)
     threshold = pruning.check_zero_one(threshold)
     if not (isinstance(top_p, float) and math.isnan(top_p)):
@@ -47,6 +52,8 @@ def reprune(
             "threshold": threshold if not (isinstance(threshold, float) and math.isnan(threshold)) else None,
         },
         forced_exclude=list(fitted.forced_exclude),
+        prune_mode=prune_mode,
+        maximize=maximize,
     )
 
 
@@ -54,10 +61,11 @@ def grid(
     fitted: FittedStep,
     top_p_values: Iterable[int] = (),
     threshold_values: Iterable[float] = (),
-    prune_mode: str = "percentile",
-    maximize: bool = True,
+    prune_mode: str | None = None,
+    maximize: bool | None = None,
 ) -> list[dict[str, Any]]:
-    """Evaluate every candidate prune criterion against the cached scores.
+    """Evaluate every candidate prune criterion against the cached scores
+    (``prune_mode``/``maximize`` as in :func:`reprune`).
     Returns [{top_p, threshold, exclude, n_kept}] — the tune-grid loop that
     costs the reference one kernel invocation per cell costs us nothing."""
     out: list[dict[str, Any]] = []

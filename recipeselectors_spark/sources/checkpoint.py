@@ -33,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from recipeselectors_spark import __version__
+from recipeselectors_spark.operators._parallel import thread_map
 from recipeselectors_spark.operators.asof import hot_conv_shards, with_shard
 
 
@@ -75,8 +76,6 @@ def run_sharded(
     checkpoint granularity stays per-shard. Returns the list of shard
     manifests (existing + newly written).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = transcripts.sparkSession
     os.makedirs(os.path.join(out_dir, "_manifests"), exist_ok=True)
 
@@ -176,10 +175,8 @@ def run_sharded(
         return manifest
 
     shards = sorted(set(range(num_shards)) | set(shard_digest))
-    if max_concurrent <= 1:
-        return [run_one(s) for s in shards]
-    with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-        return list(pool.map(run_one, shards))
+    # shard jobs run in the caller's job group, like every other pool
+    return thread_map(run_one, shards, max_concurrent)
 
 
 def read_sharded(spark, out_dir: str) -> DataFrame:

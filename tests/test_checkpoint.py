@@ -135,3 +135,33 @@ def test_manifest_score_metrics(spark, tx, tmp_path):
     assert m["score_metrics"]["f_text_len"]["mean"] > 0
     # lag1 has exactly one null per conversation in this shard
     assert m["score_metrics"]["f_lag1_len"]["nulls"] == m["n_convs"]
+
+
+def test_job_group_reaches_every_shard_job(spark, tx, tmp_path):
+    """Concurrent shard jobs run on pool threads; each must carry the
+    caller's job group (cancellable and attributable as one unit)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def new_jobs(group, after):
+        return {j for j in sc.statusTracker().getJobIdsForGroup(group) if j > after}
+
+    bus.waitUntilEmpty()
+    before = max(
+        sc.statusTracker().getJobIdsForGroup(None)
+        + sc.statusTracker().getJobIdsForGroup("shard-grp"),
+        default=-1,
+    )
+    sc.setJobGroup("shard-grp", "sharded run")
+    try:
+        ckpt.run_sharded(
+            tx, str(tmp_path / "grp"), assembly.assemble_features,
+            num_shards=4, max_concurrent=2,
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    bus.waitUntilEmpty()
+    assert len(new_jobs("shard-grp", before)) >= 8
+    assert not new_jobs(None, before)  # no shard job escaped the group

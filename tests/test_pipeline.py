@@ -264,3 +264,32 @@ def test_job_group_reaches_every_wave_job(spark, frame):
     in_group = new_jobs("wave-prep", before)
     assert len(in_group) >= 10
     assert not new_jobs(None, before)  # every prep job carries the group
+
+
+def test_thread_map_gives_each_call_its_own_local_properties(spark):
+    """Concurrent calls must not share one copy of the caller's local
+    properties: Spark keeps per-query SQL execution ids there, and threads
+    writing one shared copy race (``Cannot parse null string``)."""
+    import threading
+
+    from recipeselectors_spark.operators._parallel import thread_map
+
+    sc = spark.sparkContext
+    barrier = threading.Barrier(4, timeout=60)
+
+    def probe(i):
+        sc.setLocalProperty("probe.id", str(i))
+        barrier.wait()  # every call has written before any reads back
+        return sc.getLocalProperty("probe.id"), sc.getLocalProperty(
+            "spark.jobGroup.id"
+        )
+
+    sc.setJobGroup("map-grp", "thread map")
+    try:
+        out = thread_map(probe, list(range(4)), 4)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert out == [(str(i), "map-grp") for i in range(4)]
+    assert sc.getLocalProperty("probe.id") is None  # caller's copy untouched

@@ -389,3 +389,63 @@ def test_forests_permutation_label_mapping_computed_once(cells, monkeypatch):
     # r6: the fit now shares the cached frame AND the mapping with the
     # scoring passes — exactly ONE label-dictionary job for the whole step
     assert len(calls) == 1, calls
+
+
+def _spy(monkeypatch, owner, name, calls):
+    real = getattr(owner, name)
+    monkeypatch.setattr(
+        owner, name, lambda *a, **k: calls.append(name) or real(*a, **k)
+    )
+
+
+def test_linear_one_label_job_no_class_count(cells, iris, monkeypatch):
+    """The label dictionary of the cleaned rows is the class count: one
+    distinct job, no separate count — and the multiclass abort still
+    fires."""
+    from recipeselectors_spark.operators import _mllib
+
+    calls = []
+    _spy(monkeypatch, _mllib, "label_mapping", calls)
+    _spy(monkeypatch, type(cells[1]), "count", calls)
+    LinearStep("class", terms=["x01", "x02"], top_p=1).prep(cells[1])
+    assert calls == ["label_mapping"]
+    calls.clear()
+    with pytest.raises(ValueError, match="multiclass"):
+        LinearStep("species", top_p=2).prep(iris[1])
+    assert calls == ["label_mapping"]
+
+
+def test_linear_counts_classes_on_the_fitted_rows(spark):
+    """A third class seen only on rows with a missing predictor is not a
+    class of the fit: the binary logit runs instead of the multiclass
+    abort."""
+    rng = np.random.default_rng(5)
+    rows = [
+        (float(rng.normal() + (y == "b")), float(rng.normal()), y)
+        for y in rng.choice(["a", "b"], 200)
+    ] + [(None, 0.0, "c")]
+    df = spark.createDataFrame(rows, "x1 double, x2 double, y string")
+    fitted = LinearStep("y", top_p=1).prep(df)
+    assert fitted.exclude == ["x2"]
+
+
+def test_forests_permutation_builds_one_training_frame(cells, monkeypatch):
+    """One cached training frame serves the fit and every per-feature
+    pass; the passes assemble their permuted copy and re-prepare
+    nothing."""
+    from recipeselectors_spark.operators import _mllib, _parallel
+
+    calls = []
+    _spy(monkeypatch, _mllib, "training_frame", calls)
+    _spy(monkeypatch, _mllib, "ensure_parallelism", calls)
+    _spy(monkeypatch, _parallel, "ensure_parallelism", calls)
+    _spy(monkeypatch, _mllib, "assemble", calls)
+    x = ["x01", "x02", "x10"]
+    ForestsStep(
+        "class", terms=x, top_p=2, trees=5, max_depth=3,
+        importance="permutation",
+    ).prep(cells[1])
+    # one frame; fit + baseline + one pass per feature assemble it
+    assert calls.count("training_frame") == 1
+    assert "ensure_parallelism" not in calls
+    assert calls.count("assemble") == 2 + len(x)

@@ -84,7 +84,8 @@ def test_fisher_exact_r_parity():
 def _fisher_bruteforce(tab):
     """Independent oracle: enumerate ALL same-margin tables by brute force
     over cell ranges (itertools product), sum P(T) <= P(obs)·(1+1e-7) under
-    the multiple hypergeometric — a different algorithm from the DFS kernel."""
+    the multiple hypergeometric — a different algorithm from the network
+    walk of ``stats.fisher_exact``."""
     import itertools
     import math
 
@@ -145,13 +146,13 @@ def test_fisher_budget_raises():
 
     big = np.full((4, 4), 50)
     with _pytest.raises(stats.FisherBudgetExceeded):
-        stats.fisher_exact(big, max_tables=1000)
+        stats.fisher_exact(big, max_states=1000)
 
 
 def test_fisher_network_matches_dfs_small():
-    """The FEXACT-style network algorithm is a different summation over the
-    same conditional distribution — must agree with the DFS on every table
-    the DFS can enumerate."""
+    """The FEXACT-style network walk is a different summation over the
+    same conditional distribution than the brute-force enumeration — they
+    must agree on every table the brute force can enumerate."""
     rng = np.random.default_rng(7)
     checked = 0
     while checked < 15:
@@ -159,29 +160,42 @@ def test_fisher_network_matches_dfs_small():
         tab = rng.integers(0, 8, size=(r, c))
         if (tab.sum(0) == 0).any() or (tab.sum(1) == 0).any():
             continue
-        a = stats.fisher_exact(tab, max_tables=10_000_000)  # pure DFS
-        b = stats.fisher_exact_network(tab)
-        np.testing.assert_allclose(a, b, atol=1e-9, err_msg=str(tab))
+        np.testing.assert_allclose(
+            stats.fisher_exact(tab), _fisher_bruteforce(tab), atol=1e-9,
+            err_msg=str(tab),
+        )
         checked += 1
 
 
 def test_fisher_network_beyond_dfs_budget():
-    """A 9×2 table with 880,805 same-margin tables — beyond the default
-    500k DFS budget (the round-2 fallback-to-chi2 regime). The network
-    algorithm must return the exact p (oracle: raw DFS with a raised
-    budget), and the default fisher_exact must now route to it instead of
-    raising."""
+    """A 9×2 table with 880,805 same-margin tables (past the 500k tables a
+    raw enumeration was allowed): the network returns the exact p, pinned
+    from a raw enumeration of every table."""
     tab = np.array(
         [[3, 4], [4, 1], [4, 1], [1, 4], [4, 1],
          [1, 2], [1, 5], [4, 2], [2, 3]]
     )
-    want = stats.fisher_exact(tab, max_tables=5_000_000)  # pure DFS oracle
-    got_net = stats.fisher_exact_network(tab)
-    np.testing.assert_allclose(got_net, want, atol=1e-9)
-    got_default = stats.fisher_exact(tab)  # 500k budget -> network fallback
-    np.testing.assert_allclose(got_default, want, atol=1e-9)
-    # pin the value so algorithm drift is visible in review
-    np.testing.assert_allclose(want, 0.2198111335731338, atol=1e-9)
+    np.testing.assert_allclose(
+        stats.fisher_exact(tab), 0.2198111335731338, atol=1e-9
+    )
+
+
+def test_fisher_exact_covers_tables_a_raw_enumeration_answers():
+    """Tables with fewer than 500k same-margin tables were answered exactly
+    by a raw enumeration; the network's work estimate alone rejects the two
+    3×3 ones. They must still get the exact p (pinned from that
+    enumeration), not the chi-square fallback."""
+    cases = [
+        ([[37, 17, 17], [2, 13, 15], [14, 4, 19]], 1.062328766229843e-05),
+        ([[15, 3, 8], [51, 16, 12], [8, 32, 4]], 3.78509736703313e-09),
+        ([[0, 11, 34, 3, 10], [4, 24, 12, 5, 4]], 9.828326544213433e-05),
+        ([[1, 1, 8, 5, 4, 2], [6, 26, 3, 11, 19, 11]], 0.000323795356363696),
+    ]
+    for tab, want in cases:
+        np.testing.assert_allclose(
+            stats.fisher_exact(np.array(tab)), want, rtol=1e-8, atol=1e-10,
+            err_msg=str(tab),
+        )
 
 
 def test_fisher_network_tall_thin_fast():
@@ -190,10 +204,10 @@ def test_fisher_network_tall_thin_fast():
     rng = np.random.default_rng(11)
     tab = rng.integers(0, 5, size=(12, 2))
     tab[tab.sum(1) == 0, 0] = 1
-    p = stats.fisher_exact_network(tab)
+    p = stats.fisher_exact(tab)
     assert 0.0 <= p <= 1.0
     # transpose invariance holds through the reorientation logic
-    np.testing.assert_allclose(p, stats.fisher_exact_network(tab.T), atol=1e-9)
+    np.testing.assert_allclose(p, stats.fisher_exact(tab.T), atol=1e-9)
 
 
 def test_bh_adjust_r_parity():

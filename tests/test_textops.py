@@ -675,7 +675,7 @@ def test_decontaminate_flags_overlap(spark):
     assert out.loc[3, "n_contaminated"] == 0
 
 
-def test_decontaminate_auto_fallback_routes(spark):
+def test_decontaminate_auto_fallback_routes(spark, monkeypatch):
     """Auto strategy: tiny benchmark -> broadcast hash join; over-budget ->
     shuffle (sort-merge) join. Both plans, identical answers."""
     bench = spark.createDataFrame(
@@ -689,9 +689,8 @@ def test_decontaminate_auto_fallback_routes(spark):
         "doc_id long, text string",
     )
     auto_b = dedup.decontaminate(docs, bench, min_overlap=2)
-    forced_s = dedup.decontaminate(
-        docs, bench, min_overlap=2, broadcast_max_shingles=1
-    )
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_SHINGLES", 1)
+    forced_s = dedup.decontaminate(docs, bench, min_overlap=2)
     plan_b = auto_b._jdf.queryExecution().executedPlan().toString()
     plan_s = forced_s._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_b

@@ -67,6 +67,50 @@ def test_reprune_keeps_forced_exclusions(spark, monkeypatch):
         assert tuning.reprune(again, top_p=3).exclude == ["b"]
 
 
+def test_reprune_uses_the_fitted_steps_prune_semantics(spark):
+    """roc prunes ``dual`` and xtab ``dual`` with minimize (p-values): a
+    re-prune without prune_mode/maximize must apply the fit's own
+    semantics, and equal a re-prep at every top_p, also after a JSON round
+    trip (a reprune of an xtab fit used to drop its most significant
+    feature)."""
+    from recipeselectors_spark.operators import RocStep, XtabStep
+
+    rng = np.random.default_rng(3)
+    n = 300
+    y = rng.integers(0, 2, n)
+    df = spark.createDataFrame(
+        [
+            (
+                "pos" if y[i] else "neg",
+                float(rng.normal() + 1.5 * y[i]),
+                float(rng.normal() + 0.5 * y[i]),
+                float(rng.normal()),
+                "a" if rng.random() < 0.2 + 0.6 * y[i] else "b",
+                "a" if rng.random() < 0.4 + 0.2 * y[i] else "b",
+                "a" if rng.random() < 0.5 else "b",
+            )
+            for i in range(n)
+        ],
+        "y string, x1 double, x2 double, x3 double, "
+        "c1 string, c2 string, c3 string",
+    ).cache()
+    for make, names in (
+        (lambda tp: RocStep("y", terms=["x1", "x2", "x3"], top_p=tp),
+         ["x1", "x2", "x3"]),
+        (lambda tp: XtabStep("y", terms=["c1", "c2", "c3"], top_p=tp),
+         ["c1", "c2", "c3"]),
+    ):
+        ks = range(1, len(names))
+        reprep = {k: make(k).prep(df).exclude for k in ks}
+        fitted = make(len(names) - 1).prep(df)
+        for f in (fitted, FittedStep.from_json(fitted.to_json())):
+            for k in ks:
+                assert tuning.reprune(f, top_p=k).exclude == reprep[k]
+            grid = tuning.grid(f, top_p_values=ks)
+            assert [g["exclude"] for g in grid] == [reprep[k] for k in ks]
+    df.unpersist()
+
+
 # ---- hypothesis properties ------------------------------------------------
 
 scores_strategy = st.dictionaries(
