@@ -240,9 +240,9 @@ def fisher_exact_2x2(table: np.ndarray) -> float:
 
 
 class FisherBudgetExceeded(Exception):
-    """Raised when the r×c network walk would hold more states or live
-    paths than the caller's budget — callers fall back to the chi-square
-    approximation."""
+    """Raised when the r×c network walk would hold more states or make more
+    path insertions than the caller's budget — callers fall back to the
+    chi-square approximation."""
 
 
 def fisher_exact(table: np.ndarray, max_states: int = 2_000_000) -> float:
@@ -272,7 +272,9 @@ def fisher_exact(table: np.ndarray, max_states: int = 2_000_000) -> float:
     (``acc + maxw < T``), the subtree is skipped; only states the cutoff
     actually slices through are expanded, so tables whose raw enumeration
     runs to millions are summed exactly. ``max_states`` caps the memo table
-    and the live paths; beyond it :class:`FisherBudgetExceeded` is raised for
+    and the path insertions of the whole forward walk — its work, so its
+    time as well as its memory (2M insertions, the default, take a few
+    seconds); beyond either cap :class:`FisherBudgetExceeded` is raised for
     the callers' chi-square fallback.
 
     Transposition and row/column permutations do not change the p-value
@@ -394,6 +396,10 @@ def fisher_exact(table: np.ndarray, max_states: int = 2_000_000) -> float:
     # without expanding them. Only pairs the cutoff slices through survive
     # to the next level.
     total = 0.0
+    # path insertions over the whole walk, so the budget bounds time as
+    # well as memory: a two-column table (small margin lattice) passes the
+    # work estimate and could otherwise expand paths for tens of seconds
+    inserted = 0
     cur: dict[tuple[int, ...], dict[float, int]] = {cols: {0.0: 1}}
     for r in range(n_rows - 1):
         nxt: dict[tuple[int, ...], dict[float, int]] = {}
@@ -407,8 +413,12 @@ def fisher_exact(table: np.ndarray, max_states: int = 2_000_000) -> float:
                     live[acc] = cnt
             if not live:
                 continue
-            grew = 0
             for x in comps(rows[r], rem):
+                inserted += len(live)
+                if inserted > max_states:
+                    raise FisherBudgetExceeded(
+                        f"fisher_exact exceeded {max_states} path insertions"
+                    )
                 wx = sum(lgf[v] for v in x)
                 child = tuple(a - b for a, b in zip(rem, x))
                 d = nxt.setdefault(child, {})
@@ -419,15 +429,6 @@ def fisher_exact(table: np.ndarray, max_states: int = 2_000_000) -> float:
                     # error is two orders below the 1e-7 tie tolerance
                     k = round(acc + wx, 9)
                     d[k] = d.get(k, 0) + cnt
-                grew += len(live)
-                if grew > max_states:
-                    raise FisherBudgetExceeded(
-                        f"fisher_exact exceeded {max_states} live paths"
-                    )
-        if sum(len(d) for d in nxt.values()) > max_states:
-            raise FisherBudgetExceeded(
-                f"fisher_exact exceeded {max_states} live paths"
-            )
         cur = nxt
     for rem, paths in cur.items():  # last row: the fill is forced
         w = sum(lgf[v] for v in rem)

@@ -4,7 +4,12 @@
 predictors, the outcome and any ``keep`` columns, drops incomplete rows and
 replaces the outcome by a numeric ``__label__`` — the class index from the
 label dictionary (fit state, learned on train only: the leakage rule) or a
-double cast for regression.
+double cast for regression. A classification label carries its class
+count as nominal ML-attribute metadata (``{"ml_attr": {"type": "nominal",
+"num_vals": n}}``), so MLlib classifiers take the number of classes from
+the schema instead of scanning the label for its maximum; the metadata
+rides along through ``assemble`` and the permutation passes, which copy the
+input fields.
 
 * Single-fit callers (tree, VIP, linear, impurity forests) get the cleaned
   rows spread by ``ensure_parallelism``.
@@ -104,7 +109,15 @@ def training_frame(
         # one core (guide §2.5) — spread narrow inputs before the fit
         rows = ensure_parallelism(rows)
     mapping = label_mapping(rows, outcome) if kind == "classification" else None
-    frame = rows.withColumn(LABEL_COL, label_expr(outcome, mapping)).drop(outcome)
+    label = label_expr(outcome, mapping)
+    if mapping is not None:
+        # nominal ML attribute: MLlib classifiers read the class count
+        # from the schema instead of running a label-max job
+        label = label.alias(
+            LABEL_COL,
+            metadata={"ml_attr": {"type": "nominal", "num_vals": len(mapping)}},
+        )
+    frame = rows.withColumn(LABEL_COL, label).drop(outcome)
     return TrainingFrame(
         frame, kind, len(mapping) if mapping else 0, rows if cached else None
     )

@@ -1,5 +1,6 @@
 """Driver-side parallelism: the scan-parallelism guard for CPU-heavy narrow
-stages, and the thread map that overlaps independent Spark jobs.
+stages, and the thread map (with its per-call ``inherit`` wrapper) that
+overlaps independent Spark jobs.
 
 A parquet file written as one (or few) row groups scans as one (or few)
 tasks — Spark cannot split inside a row group — so any expensive per-row
@@ -37,24 +38,31 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     return df
 
 
+def inherit(fn):
+    """``fn`` wrapped to run, on another driver thread, with its OWN copy of
+    the caller's local properties (job group, description, scheduler pool)
+    and the caller's job tags (``SparkSession.addTag``, so
+    ``interruptTag`` reaches the thread's jobs). Wrap once per call: one
+    copy shared by several threads races on the SQL execution ids Spark
+    keeps among the local properties (seen as ``NumberFormatException:
+    Cannot parse null string`` in ``SQLExecution``)."""
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    return inheritable_thread_target(SparkSession.active())(fn)
+
+
 def thread_map(fn, items: list, max_workers: int) -> list:
     """``[fn(x) for x in items]`` with up to ``max_workers`` calls at once
     on driver threads, so one job's stage tail back-fills with the next
     job's tasks (guide §2.6); results in ``items`` order, the first
-    exception in that order raised.
-
-    Each call runs with its OWN copy of the caller's local properties (job
-    group, description, scheduler pool). One copy shared by all threads —
-    one ``inheritable_thread_target`` wrapper mapped over the items — races
-    on the SQL execution ids Spark keeps there (seen as
-    ``NumberFormatException: Cannot parse null string`` in
-    ``SQLExecution``)."""
+    exception in that order raised. Each call is wrapped by ``inherit``
+    (its own copy of the caller's local properties, the caller's job
+    tags)."""
     if max_workers <= 1 or len(items) <= 1:
         return [fn(x) for x in items]
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futures = [pool.submit(inheritable_thread_target(fn), x) for x in items]
+        futures = [pool.submit(inherit(fn), x) for x in items]
         return [f.result() for f in futures]

@@ -235,7 +235,7 @@ def minhash_dedup_pairs(
     # (id, num_perm longs) — tiny relative to the corpus at any scale.
     sigs = sigs.localCheckpoint()
     cand = cap_buckets(
-        minhash_candidates(sigs, id_col, "minhash", bands), max_bucket
+        minhash_candidates(sigs, id_col, "minhash", bands, num_perm), max_bucket
     )
     pairs = (
         cand.alias("a")

@@ -18,10 +18,20 @@ maxRuns is reached; undecided features remain Tentative and are KEPT.
 Spark plan: the training rows come from ``_mllib.training_frame(cached=True)``
 — round-robin repartitioned ONCE (each partition a systematic sample of the
 dataset) and cached, with one label-dictionary job that also builds the
-cache; each run's shadow columns are a seeded PARTITION-LOCAL permutation
-via mapInPandas (operators/_permute.py) — map-only, no global sort, no join
-— followed by one MLlib RF fit through ``_mllib.fit``. The driver
-orchestrates ≤ maxRuns fits (SURVEY.md §2.2 #9) with early stopping.
+cache; ``__label__`` carries its class count as ML-attribute metadata, so
+the classifier skips its label-max job. Each run's shadow columns are a
+seeded PARTITION-LOCAL permutation via mapInPandas (operators/_permute.py)
+— map-only, no global sort, no join — and the shadowed frame is persisted
+for the length of that run's one MLlib RF fit through ``_mllib.fit``: the
+fit reads its input several times (tree metadata, the split sample, the
+bagged input), and the cache makes the Python shadow pass run once per run
+instead of once per read. The persist is lazy (the fit's first read builds
+it; no extra ``count()``) and each run's plan has its own seed, so
+concurrent runs never share a cache entry. Memory: at most 4 runs are in
+flight, so at most 4 shadowed copies (rows × (2p + 1) doubles) are cached
+at once, each released when its fit returns (also when it raises); the
+default storage level spills to disk. The driver orchestrates ≤ maxRuns
+fits (SURVEY.md §2.2 #9) with early stopping.
 
 Parity ledger vs the R Boruta package (what is pinned, what cannot be):
 
@@ -153,9 +163,15 @@ class BorutaStep(SelectionStep):
 
         def one_run(run: int) -> np.ndarray:
             shadowed, shadow_names = self._with_shadows(tf.frame, x_names, run)
-            return self._fit_importances(
-                shadowed, list(x_names) + shadow_names, tf.kind, run
-            )
+            # the fit reads its input several times: one shadow pass per
+            # run (lazy persist, released when the fit ends; module docstring)
+            shadowed = shadowed.persist()
+            try:
+                return self._fit_importances(
+                    shadowed, list(x_names) + shadow_names, tf.kind, run
+                )
+            finally:
+                shadowed.unpersist()
 
         try:
             if tf.kind == "regression":

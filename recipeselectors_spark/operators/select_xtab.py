@@ -13,7 +13,7 @@ the tiny tables are collected and tested on the driver with the numpy kernels
 Fisher handles any r×c shape (fisher.test parity, :116): 2×2 tables by the
 closed hypergeometric form, larger ones by the FEXACT-style network
 algorithm (stats.fisher_exact — the algorithm R's fisher.test runs); only
-when a table blows the network's state budget does the step fall back to
+when a table blows the network's work budget does the step fall back to
 chi-square with a warning.
 """
 
@@ -82,7 +82,7 @@ class XtabStep(SelectionStep):
                     warnings.warn(
                         f"step_select_xtab: exact Fisher network for "
                         f"{c!r} ({tab.shape[0]}x{tab.shape[1]}, "
-                        f"n={int(tab.sum())}) exceeds the state budget; "
+                        f"n={int(tab.sum())}) exceeds its work budget; "
                         f"falling back to the chi-square approximation."
                     )
                     pvals[c] = stats.chi2_test(tab)

@@ -25,9 +25,9 @@ from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 from typing import Any
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
+from recipeselectors_spark.operators._parallel import inherit
 from recipeselectors_spark.plans.step import FittedStep, SelectionStep
 
 
@@ -96,8 +96,9 @@ class Recipe:
         A non-selection step, a step that overlaps the wave or a step whose
         terms fail to resolve starts a new wave. The steps of a wave are
         prepped concurrently on the wave's input frame, one thread each
-        (job group and local properties inherited); their fitted steps are
-        then appended and baked strictly in recipe order. The first
+        (local properties, job group included, and job tags inherited);
+        their fitted steps are then appended and baked strictly in recipe
+        order. The first
         exception in recipe order is the one raised; like the fits of steps
         after it, any later exception is discarded, as the step-by-step loop
         would never have run those steps.
@@ -123,11 +124,9 @@ class Recipe:
             if len(wave) > 1:
                 with ThreadPoolExecutor(max_workers=len(wave)) as pool:
                     # one wrapper per step: each thread gets its own copy of
-                    # the caller's local properties (job group included)
+                    # the caller's local properties and the caller's job tags
                     futures = [
-                        pool.submit(
-                            inheritable_thread_target(step.prep), current, self.roles
-                        )
+                        pool.submit(inherit(step.prep), current, self.roles)
                         for step, _ in wave
                     ]
                 results = [fut.result for fut in futures]

@@ -293,3 +293,72 @@ def test_thread_map_gives_each_call_its_own_local_properties(spark):
             sc.setLocalProperty(key, None)
     assert out == [(str(i), "map-grp") for i in range(4)]
     assert sc.getLocalProperty("probe.id") is None  # caller's copy untouched
+
+
+def _tags_in_pool_threads() -> None:
+    """Body of ``test_job_tags_reach_every_pool_thread``, run in a fresh
+    process: in Spark 4.1, once a session has had a tag, MLlib model
+    ``transform`` queries fail with ``NotSerializableException`` for the
+    rest of the process, so the tag must not touch the suite's session."""
+    import warnings
+
+    from recipeselectors_spark.operators import BorutaStep, _parallel, select_boruta
+    from recipeselectors_spark.session import get_spark
+
+    spark = get_spark(app_name="tags", master="local[2]", shuffle_partitions=2)
+    rng = np.random.default_rng(7)
+    y = rng.integers(0, 2, 200)
+    pdf = pd.DataFrame({c: rng.normal(0, 1, 200) + y for c in X[:11]})
+    pdf["y"] = np.where(y == 1, "pos", "neg")
+    frame = spark.createDataFrame(pdf).cache()
+    seen: list[tuple[str, set[str]]] = []
+
+    def tagged(name, fn):
+        def call(*a, **k):
+            seen.append((name, spark.getTags()))
+            return fn(*a, **k)
+
+        return call
+
+    real_map = _parallel.thread_map
+    select_boruta.thread_map = (
+        lambda fn, items, n: real_map(tagged("boruta run", fn), items, n)
+    )
+    rec = recipe(
+        InfGainStep("y", terms=X[0:4], top_p=2, equal=True),
+        RocStep("y", terms=X[4:8], top_p=2),
+        BorutaStep("y", terms=X[8:11], max_runs=3, trees=3, max_depth=3),
+    )
+    for s in rec.steps:
+        s.prep = tagged(s.step_name, s.prep)
+    assert len(rec._wave(0, frame)) == 3
+    spark.addTag("pool-tag")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        mapped = real_map(lambda i: spark.getTags(), list(range(4)), 4)
+        rec.prep(frame)
+    assert all("pool-tag" in tags for tags in mapped)
+    names = [name for name, _ in seen]
+    assert names.count("boruta run") == 3
+    assert {s.step_name for s in rec.steps} <= set(names)
+    assert all("pool-tag" in tags for _, tags in seen), seen
+    spark.stop()
+
+
+def test_job_tags_reach_every_pool_thread():
+    """A tag added with ``SparkSession.addTag`` is seen by every
+    ``thread_map`` call (Boruta's nested run batch included) and every
+    wave-step prep, so ``interruptTag`` reaches their jobs; no pool warns
+    that it was given no session."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from tests.test_pipeline import _tags_in_pool_threads as t; t()"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]

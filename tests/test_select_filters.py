@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from recipeselectors_spark.functions import stats
 from recipeselectors_spark.operators import (
     CarScoreStep,
     InfGainStep,
@@ -257,6 +258,33 @@ def test_xtab_fisher_beyond_dfs_budget_is_exact(spark):
     np.testing.assert_allclose(
         fitted.scores["cat"], 0.11085372099126315, atol=1e-9
     )
+
+
+def test_xtab_fisher_falls_back_to_chi2_after_bounded_work(spark, monkeypatch):
+    """A factor whose exact Fisher walk exceeds its work budget scores the
+    chi-square p-value, with the fallback warning, after at most the
+    budget's 2M path insertions."""
+    from tests.test_stats_kernels import (
+        FISHER_WALK_REPRODUCERS,
+        count_path_insertions,
+    )
+
+    inserted = count_path_insertions(monkeypatch)
+    counts = FISHER_WALK_REPRODUCERS[0]
+    rows = [
+        (f"lv{i}", cls)
+        for i, (a, b) in enumerate(counts)
+        for cls, k in (("yes", a), ("no", b))
+        for _ in range(k)
+    ]
+    df = spark.createDataFrame(rows, "cat string, Class string")
+    with pytest.warns(UserWarning, match="chi-square"):
+        fitted = XtabStep(
+            "Class", terms=["cat"], threshold=0.5, test="fisher"
+        ).prep(df)
+    want = stats.chi2_test(np.array(counts))
+    np.testing.assert_allclose(fitted.scores["cat"], want, rtol=1e-12)
+    assert 0 < inserted[0] <= 2_000_000
 
 
 # -- carscore --------------------------------------------------------------

@@ -4,6 +4,7 @@ abort, determinism, and the prep/bake pipeline contract."""
 
 import numpy as np
 import pytest
+from pyspark import StorageLevel
 
 from recipeselectors_spark.operators import (
     BorutaStep,
@@ -449,3 +450,115 @@ def test_forests_permutation_builds_one_training_frame(cells, monkeypatch):
     assert calls.count("training_frame") == 1
     assert "ensure_parallelism" not in calls
     assert calls.count("assemble") == 2 + len(x)
+
+
+# -- one shadow pass per Boruta run; class count in the label schema -------
+
+NOT_CACHED = StorageLevel(False, False, False, False)
+BORUTA_4 = dict(terms=["x01", "x02", "x10", "x11"], max_runs=4, trees=5,
+                max_depth=3)
+
+
+def test_boruta_runs_the_shadow_kernel_once_per_run(cells, monkeypatch, tmp_path):
+    """Each run's shadowed frame is persisted for its fit, so the Python
+    shadow kernel runs once per partition per run — not once per MLlib
+    read of the fit's input."""
+    from recipeselectors_spark.operators import _permute
+
+    log = tmp_path / "kernel_calls"
+    log.touch()
+    path = str(log)
+    real = _permute._permute_map
+
+    def counting(cols, out_names, seed):
+        gen = real(cols, out_names, seed)
+
+        def counted(batches):
+            with open(path, "a") as f:
+                f.write("call\n")
+            yield from gen(batches)
+
+        return counted
+
+    monkeypatch.setattr(_permute, "_permute_map", counting)
+    fitted = BorutaStep("class", **BORUTA_4).prep(cells[1])
+    runs = fitted.params["runs"]
+    assert runs == 4
+    partitions = cells[1].sparkSession.sparkContext.defaultParallelism
+    assert len(log.read_text().splitlines()) == runs * partitions
+
+
+class _RecordingBoruta(BorutaStep):
+    """Records every frame a fit receives; fails run ``fail_run``."""
+
+    def __init__(self, *a, fail_run=None, **k):
+        super().__init__(*a, **k)
+        self.fail_run = fail_run
+        self.frames = []
+
+    def _fit_importances(self, df, all_feats, kind, run=0):
+        self.frames.append((df, df.storageLevel != NOT_CACHED))
+        if run == self.fail_run:
+            raise RuntimeError(f"fit of run {run} failed")
+        return super()._fit_importances(df, all_feats, kind, run)
+
+
+def test_boruta_fit_input_is_cached_only_while_it_fits(cells):
+    """The frame each fit receives is cached; after prep no shadowed frame
+    is, also when a fit raises."""
+    step = _RecordingBoruta("class", **BORUTA_4)
+    step.prep(cells[1])
+    assert len(step.frames) == 4
+    assert all(cached for _, cached in step.frames)
+    assert all(df.storageLevel == NOT_CACHED for df, _ in step.frames)
+
+    failing = _RecordingBoruta("class", fail_run=2, **BORUTA_4)
+    with pytest.raises(RuntimeError, match="run 2 failed"):
+        failing.prep(cells[1])
+    assert len(failing.frames) == 4
+    assert all(df.storageLevel == NOT_CACHED for df, _ in failing.frames)
+
+
+def test_training_frame_label_carries_its_class_count(cells, iris, cars):
+    """Classification labels carry ``num_vals`` = the class count (MLlib
+    classifiers then skip their label-max job); the shadow pass and the
+    assembler keep the field. Regression labels carry no attribute."""
+    from recipeselectors_spark.operators import _mllib, _permute
+
+    for (_, df), outcome, x, n_classes in (
+        (cells, "class", ["x01", "x02"], 2),
+        (iris, "species", list(iris[0].columns[:2]), 3),
+    ):
+        for cached in (False, True):
+            tf = _mllib.training_frame(df, x, outcome, cached=cached)
+            try:
+                assert tf.n_classes == n_classes
+                meta = tf.frame.schema[_mllib.LABEL_COL].metadata
+                assert meta["ml_attr"] == {"type": "nominal",
+                                           "num_vals": n_classes}
+                shadowed, _ = _permute.with_permuted(tf.frame, x, seed=1)
+                fit_input = _mllib.assemble(shadowed, x)
+                assert fit_input.schema[_mllib.LABEL_COL].metadata == meta
+            finally:
+                tf.unpersist()
+    reg = _mllib.training_frame(cars[1], ["x01"], "price")
+    assert reg.frame.schema[_mllib.LABEL_COL].metadata == {}
+
+
+def test_boruta_four_run_prep_job_count(cells):
+    """Four runs on cells: one label-dictionary job, then per run the
+    cache-building read and the forest's own jobs — no label-max job and
+    no shadow recomputation per read (36 jobs before)."""
+    sc = cells[1].sparkSession.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    sc.setJobGroup("boruta-4", "boruta 4 runs")
+    try:
+        BorutaStep("class", **BORUTA_4).prep(cells[1])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    bus.waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("boruta-4"))
+    assert 0 < n_jobs <= 32, n_jobs

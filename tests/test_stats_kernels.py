@@ -198,6 +198,43 @@ def test_fisher_exact_covers_tables_a_raw_enumeration_answers():
         )
 
 
+# 6×2 tables whose two-column margin lattice passes the work estimate but
+# whose walk expands millions of paths (23.3 s and 4.6 s before failing
+# when the budget was checked per margin state)
+FISHER_WALK_REPRODUCERS = [
+    [[60, 9], [15, 10], [1, 29], [3, 31], [10, 21], [29, 39]],
+    [[34, 11], [44, 2], [47, 13], [15, 40], [9, 21], [42, 23]],
+]
+
+
+def count_path_insertions(monkeypatch) -> list[int]:
+    """A one-element counter of the forward walk's path insertions in
+    ``stats`` (one clumping ``round`` call each)."""
+    import builtins
+
+    counter = [0]
+
+    def counting_round(*a):
+        counter[0] += 1
+        return builtins.round(*a)
+
+    monkeypatch.setattr(stats, "round", counting_round, raising=False)
+    return counter
+
+
+def test_fisher_walk_work_is_bounded(monkeypatch):
+    """``max_states`` bounds the path insertions of the whole forward walk,
+    so hopeless tables fail after bounded work."""
+    import pytest as _pytest
+
+    inserted = count_path_insertions(monkeypatch)
+    for tab in FISHER_WALK_REPRODUCERS:
+        inserted[0] = 0
+        with _pytest.raises(stats.FisherBudgetExceeded):
+            stats.fisher_exact(np.array(tab))
+        assert 0 < inserted[0] <= 2_000_000, (tab, inserted[0])
+
+
 def test_fisher_network_tall_thin_fast():
     """The xtab shape (many factor levels × few classes): the network must
     handle margins whose raw enumeration is >10^6 tables, quickly."""

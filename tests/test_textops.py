@@ -48,6 +48,20 @@ def test_minhash_finds_near_duplicates(docs):
     assert (pairs["est_jaccard"] <= 1.0).all()
 
 
+def test_minhash_dedup_pairs_skips_the_signature_length_probe(docs, monkeypatch):
+    """The signature length is the ``num_perm`` the caller passed: building
+    and running the pairs never probes it with ``DataFrame.first``."""
+    def no_first(self, *a, **k):
+        raise AssertionError("minhash_dedup_pairs probed with first()")
+
+    monkeypatch.setattr(type(docs), "first", no_first)
+    pairs = dedup.minhash_dedup_pairs(
+        docs, num_perm=32, bands=8, threshold=0.5
+    ).toPandas()
+    assert all((a, a + 100000) in set(zip(pairs["id_a"], pairs["id_b"]))
+               for a in range(3))
+
+
 def test_ngram_jaccard_verification(docs):
     cand = dedup.minhash_dedup_pairs(docs, threshold=0.3).select("id_a", "id_b")
     verified = dedup.ngram_jaccard_pairs(docs, cand).toPandas()
