@@ -525,7 +525,7 @@ def q_chi2_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("value") > 5.0, "hi").otherwise("lo").alias("y"),
     )
     pdf = _scoring.nominal_contingency(ev, ["event_type", "value_bucket"], "y")
-    tables = _scoring.joint_tables(pdf, bin_col="x", drop_null_bin=False)
+    tables = _scoring.joint_tables(pdf)
     rows = []
     for feat in sorted(tables):
         stat, _ = stats.chi2_stat(tables[feat], correction=False)

@@ -25,10 +25,6 @@ def _entropy(counts: np.ndarray) -> float:
     return float(-(p * np.log2(p)).sum())
 
 
-def _class_counts(y_codes: np.ndarray, k: int) -> np.ndarray:
-    return np.bincount(y_codes, minlength=k)
-
-
 def _best_split(x: np.ndarray, y: np.ndarray, k: int):
     """Best entropy-minimizing boundary on sorted (x, y); returns
     (cut_value, index, info_gain, stats) or None."""

@@ -148,15 +148,13 @@ def prune(
     forced: Sequence[str] = (),
 ) -> list[str]:
     """The excluded features of one step: ``select_percentile`` or
-    ``dual_filter`` by ``prune_mode`` ('decision' drops negative scores),
-    then every ``forced`` name not already excluded, in order — e.g.
-    linear's NaN-coefficient features (step_select_linear.R:188-189)."""
+    ``dual_filter`` by ``prune_mode``, then every ``forced`` name not
+    already excluded, in order — e.g. linear's NaN-coefficient features
+    (step_select_linear.R:188-189)."""
     if prune_mode == "percentile":
         exclude = select_percentile(scores, top_p, threshold, maximize)
     elif prune_mode == "dual":
         exclude = dual_filter(scores, top_p, threshold, maximize)
-    elif prune_mode == "decision":
-        exclude = [k for k, v in scores.items() if v is not None and v < 0]
     else:
         raise ValueError(prune_mode)
     return exclude + [c for c in dict.fromkeys(forced) if c not in exclude]

@@ -1,13 +1,17 @@
 """Shared distributed-scoring layout.
 
-The filter-style steps (infgain, roc, xtab, mrmr) all reduce to statistics of
-per-feature contingency/histogram tables against the outcome. Rather than p
-separate jobs, we *melt* the p selected columns into a tall
-``(feature, x, y)`` frame with ``stack`` — ONE shuffle then serves every
-feature's aggregation (SURVEY.md §4 "single-pass multi-feature contingency
-aggregation"). The aggregated histograms (p × bins × classes cells) are tiny
-and collected to the driver where the numpy kernels in functions/stats.py
-finish the job.
+The filter-style steps (infgain, roc, xtab, mrmr, custom) all reduce to
+statistics of per-feature histograms against the outcome. Rather than p
+separate jobs, ``melt`` stacks the p selected columns into a tall
+``(feature, x, y)`` frame — ONE shuffle then serves every feature's
+aggregation (SURVEY.md §4 "single-pass multi-feature contingency
+aggregation"). ``cell_counts`` is the one histogram builder: the lazy
+``(feature, x, y) → n`` counts with one NULL rule (a NULL x or y counts in
+no cell). It feeds the ROC window pass, the MDL cut learner, the nominal
+contingency tables (xtab, infgain, mRMR's ID-like-column guard), infgain's
+binned joint tables and mRMR's MI tables. The tables (p × bins × classes
+cells) are tiny and collected to the driver, where ``joint_tables`` pivots
+them for the numpy kernels in functions/stats.py.
 
 Scale notes (100 TB): the melt multiplies rows by p but the immediate
 ``groupBy(feature, x, y).count()`` map-side-combines before the shuffle, so
@@ -41,26 +45,37 @@ def nominal_cols(df: DataFrame, names: list[str]) -> list[str]:
     return [c for c in names if isinstance(types[c], StringType)]
 
 
-def melt_numeric(df: DataFrame, x_names: list[str], outcome: str) -> DataFrame:
-    """(feature:string, x:double, y:string) tall frame via stack — a
-    zero-shuffle generator, codegen'd. Deliberately NOT repartitioned on
-    narrow inputs (r6): the melt feeds a map-side-combined aggregation
-    whose pre-shuffle work is light, so an extra round-robin exchange costs
-    more than the parallelism it buys (measured: chi2/roc regressed ~1 s
-    at sf1.0 with it; contrast the minhash/UDF paths where the narrow-stage
-    work is seconds and spreading wins 10x)."""
-    pairs = ", ".join(f"'{c}', cast({quote(c)} as double)" for c in x_names)
-    return df.selectExpr(
-        f"stack({len(x_names)}, {pairs}) as (feature, x)",
-        f"cast({quote(outcome)} as string) as y",
+def typed(names: list[str], to: str) -> dict[str, Column]:
+    """Each of ``names`` cast to ``to``, keyed by name: the ``cols`` of
+    ``melt`` and ``cell_counts`` for raw predictors."""
+    return {c: F.col(quote(c)).cast(to) for c in names}
+
+
+def melt(df: DataFrame, cols: dict[str, Column], outcome: str) -> DataFrame:
+    """(feature:string, x, y:string) tall frame, one row per input row and
+    ``cols`` entry (x = that entry's column; all must share one type), via
+    ``stack`` — a zero-shuffle generator, codegen'd. Deliberately NOT
+    repartitioned on narrow inputs (r6): the melt feeds a map-side-combined
+    aggregation whose pre-shuffle work is light, so an extra round-robin
+    exchange costs more than the parallelism it buys (measured: chi2/roc
+    regressed ~1 s at sf1.0 with it; contrast the minhash/UDF paths where
+    the narrow-stage work is seconds and spreading wins 10x)."""
+    pairs = [e for name, col in cols.items() for e in (F.lit(name), col)]
+    return df.select(
+        F.stack(F.lit(len(cols)), *pairs).alias("feature", "x"),
+        F.col(quote(outcome)).cast("string").alias("y"),
     )
 
 
-def melt_nominal(df: DataFrame, x_names: list[str], outcome: str) -> DataFrame:
-    pairs = ", ".join(f"'{c}', cast({quote(c)} as string)" for c in x_names)
-    return df.selectExpr(
-        f"stack({len(x_names)}, {pairs}) as (feature, x)",
-        f"cast({quote(outcome)} as string) as y",
+def cell_counts(df: DataFrame, cols: dict[str, Column], outcome: str) -> DataFrame:
+    """Lazy (feature, x, y, n) histogram of the ``melt`` of ``cols``: one
+    map-side-combined ``groupBy(feature, x, y).count()``. The one NULL rule
+    of every filter step: a row whose x or y is NULL counts in no cell."""
+    return (
+        melt(df, cols, outcome)
+        .where(F.col("x").isNotNull() & F.col("y").isNotNull())
+        .groupBy("feature", "x", "y")
+        .agg(F.count("*").alias("n"))
     )
 
 
@@ -70,15 +85,13 @@ def nominal_cell_counts(
     outcome: str,
     max_cells_per_feature: int | None = 100_000,
 ) -> DataFrame:
-    """Lazy (feature, level, class) counts of nominal predictors. Fine for
-    genuine factors (cells = levels × classes), unbounded for an ID-like
-    string column — so any feature whose cell count exceeds
-    ``max_cells_per_feature`` fails fast with an actionable error instead of
-    flooding the driver (VERDICT r3). The size probe is one action; a
-    caller that collects the returned frame reuses its shuffle (skipped
-    stages)."""
-    melted = melt_nominal(df, x_names, outcome)
-    agg = melted.groupBy("feature", "x", "y").agg(F.count("*").alias("n"))
+    """Lazy ``cell_counts`` of nominal predictors. Fine for genuine factors
+    (cells = levels × classes), unbounded for an ID-like string column — so
+    any feature whose cell count exceeds ``max_cells_per_feature`` fails
+    fast with an actionable error instead of flooding the driver (VERDICT
+    r3). The size probe is one action; a caller that collects the returned
+    frame reuses its shuffle (skipped stages)."""
+    agg = cell_counts(df, typed(x_names, "string"), outcome)
     if max_cells_per_feature is not None:
         sizes = agg.groupBy("feature").agg(F.count("*").alias("cells")).collect()
         too_big = {
@@ -148,14 +161,14 @@ def learn_numeric_cuts(
     above the budget, cuts land on bucket-representative midpoints (a
     documented approximation). ``mdl_gate_distinct=None`` disables the
     gate."""
-    melted = melt_numeric(df, x_names, outcome)
-
+    cols = typed(x_names, "double")
     if method == "equal":
         if bins < 2:
             return {c: [] for c in x_names}
         qs = [float(q) for q in np.linspace(0.0, 1.0, bins + 1)[1:-1]]
         rows = (
-            melted.where(F.col("x").isNotNull())
+            melt(df, cols, outcome)
+            .where(F.col("x").isNotNull())
             .groupBy("feature")
             .agg(F.percentile("x", F.lit(qs).cast("array<double>")).alias("qs"))
             .collect()
@@ -173,11 +186,7 @@ def learn_numeric_cuts(
     if method != "mdl":
         raise ValueError(f"unknown cut-learning method {method!r}")
 
-    hist = (
-        melted.where(F.col("x").isNotNull() & F.col("y").isNotNull())
-        .groupBy("feature", "x", "y")
-        .agg(F.count("*").alias("n"))
-    )
+    hist = cell_counts(df, cols, outcome)
     if mdl_gate_distinct is not None:
         hist = _prebucket_oversized(hist, mdl_gate_distinct, mdl_prebucket_bins)
 
@@ -276,12 +285,12 @@ def _prebucket_oversized(
 
 def bin_code(x: Column, cuts: list[float]) -> Column:
     """Bin index of ``x`` under sorted ``cuts``: the number of cuts <= x,
-    -1 for a NULL x. A pure-Catalyst array expression over literal cuts;
+    NULL for a NULL x. A pure-Catalyst array expression over literal cuts;
     NaN compares above every double, so it lands in the top bin."""
     xd = x.cast("double")
     arr = F.array(*[F.lit(float(c)) for c in cuts])
     code = F.size(F.filter(arr, lambda c: xd >= c)) if cuts else F.lit(0)
-    return F.when(x.isNull(), F.lit(-1)).otherwise(code)
+    return F.when(x.isNotNull(), code)
 
 
 def binned_joint_counts(
@@ -289,39 +298,18 @@ def binned_joint_counts(
     cuts: dict[str, list[float]],
     outcome: str,
 ) -> dict[str, np.ndarray]:
-    """Bin every feature by its cut points (``bin_code``), melt the codes,
-    then one global ``groupBy(feature, bin, y).count()``. Returns
-    {feature: joint matrix}."""
-    pairs = [
-        e
-        for c, v in cuts.items()
-        for e in (F.lit(c), bin_code(F.col(quote(c)), v))
-    ]
-    binned = df.select(
-        F.stack(F.lit(len(cuts)), *pairs).alias("feature", "bin"),
-        F.col(quote(outcome)).cast("string").alias("y"),
-    )
-    pdf = (
-        binned.groupBy("feature", "bin", "y")
-        .agg(F.count("*").alias("n"))
-        .toPandas()
-    )
-    return joint_tables(pdf, bin_col="bin")
+    """``cell_counts`` of every feature's ``bin_code`` under its cut points,
+    collected as {feature: joint matrix}."""
+    codes = {c: bin_code(F.col(quote(c)), v) for c, v in cuts.items()}
+    return joint_tables(cell_counts(df, codes, outcome).toPandas())
 
 
-def joint_tables(
-    pdf: pd.DataFrame, bin_col: str = "x", drop_null_bin: bool = True
-) -> dict[str, np.ndarray]:
-    """Pivot the collected (feature, bin, y, n) histogram into per-feature
-    joint count matrices (rows=bins, cols=classes)."""
-    out: dict[str, np.ndarray] = {}
-    for feat, g in pdf.groupby("feature"):
-        if drop_null_bin:
-            g = g[~g[bin_col].isna()]
-            if np.issubdtype(g[bin_col].dtype, np.number):
-                g = g[g[bin_col] >= 0]
-        tab = g.pivot_table(
-            index=bin_col, columns="y", values="n", aggfunc="sum", fill_value=0
-        )
-        out[str(feat)] = tab.to_numpy(dtype=float)
-    return out
+def joint_tables(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
+    """Pivot a collected ``cell_counts`` (feature, x, y, n) histogram into
+    per-feature joint count matrices (rows=x values, cols=classes)."""
+    return {
+        str(feat): g.pivot_table(
+            index="x", columns="y", values="n", aggfunc="sum", fill_value=0
+        ).to_numpy(dtype=float)
+        for feat, g in pdf.groupby("feature")
+    }

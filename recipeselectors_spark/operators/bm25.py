@@ -77,21 +77,6 @@ def build_postings(
     )
 
 
-def corpus_stats(postings: DataFrame, id_col: str = "doc_id") -> tuple[int, float]:
-    """``(N, avgdl)`` — corpus size and mean document length, from the
-    postings alone (two scalar aggregates, one job)."""
-    row = (
-        postings.groupBy(id_col)
-        .agg(F.first("__dl__").alias("__dl__"))
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("__dl__").alias("avgdl"),
-        )
-        .collect()[0]
-    )
-    return int(row["n"] or 0), float(row["avgdl"] or 0.0)
-
-
 def bm25_scores(
     corpus: DataFrame,
     queries: DataFrame,

@@ -85,14 +85,9 @@ class BorutaStep(SelectionStep):
         trees: int = 100,
         max_depth: int = 7,
         seed: int = 42,
-        options: dict | None = None,  # reference-style options list (:55)
         skip: bool = False,
     ) -> None:
         super().__init__(outcome, terms, skip=skip)
-        if options:
-            p_value = options.get("pValue", p_value)
-            mc_adj = options.get("mcAdj", mc_adj)
-            max_runs = options.get("maxRuns", max_runs)
         self.p_value = p_value
         self.mc_adj = mc_adj
         self.max_runs = max_runs

@@ -89,6 +89,8 @@ class CarScoreStep(SelectionStep):
     step_name = "step_select_carscore"
     prune_mode = "percentile"
     maximize = True
+    predictor_type = NumericType
+    outcome_type = NumericType  # step_select_carscore.R:133 — regression only
 
     def __init__(
         self,
@@ -105,15 +107,6 @@ class CarScoreStep(SelectionStep):
             raise ValueError("lam must be a float or 'auto'")
         self.lam = lam
         self.diagonal = diagonal
-
-    def check_types(self, df: DataFrame, x_names: list[str]) -> None:
-        types = {f.name: f.dataType for f in df.schema.fields}
-        if not isinstance(types[self.outcome], NumericType):
-            # step_select_carscore.R:133 — regression only
-            raise TypeError("step_select_carscore requires a numeric outcome")
-        bad = [c for c in x_names if not isinstance(types[c], NumericType)]
-        if bad:
-            raise TypeError(f"step_select_carscore requires numeric predictors: {bad}")
 
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
         cols = list(x_names) + [self.outcome]

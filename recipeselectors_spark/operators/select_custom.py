@@ -57,14 +57,11 @@ class CustomScoreStep(SelectionStep):
                 s = float("nan")  # failure => NA score (roc :121-122 pattern)
             return pd.DataFrame({"variable": [feat], "score": [s]})
 
-        for melt, cols in (
-            (_scoring.melt_numeric, num),
-            (_scoring.melt_nominal, nom),
-        ):
+        for cols, to in ((num, "double"), (nom, "string")):
             if not cols:
                 continue
             rows = (
-                melt(df, cols, self.outcome)
+                _scoring.melt(df, _scoring.typed(cols, to), self.outcome)
                 .groupBy("feature")
                 .applyInPandas(runner, schema="variable string, score double")
                 .collect()

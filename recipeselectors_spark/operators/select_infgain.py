@@ -68,11 +68,11 @@ class InfGainStep(SelectionStep):
             joints.update(_scoring.binned_joint_counts(df, cuts, self.outcome))
         if nom:
             pdf = _scoring.nominal_contingency(df, nom, self.outcome)
-            joints.update(_scoring.joint_tables(pdf, bin_col="x"))
+            joints.update(_scoring.joint_tables(pdf))
 
+        # a predictor with no non-NULL value has no cell: an empty table
+        empty = np.zeros((0, 0))
         return {
-            c: stats.info_gain_from_joint(joints[c], self.mode)
-            if c in joints
-            else float("nan")
+            c: stats.info_gain_from_joint(joints.get(c, empty), self.mode)
             for c in x_names
         }

@@ -71,11 +71,9 @@ class MrmrStep(SelectionStep):
         cols = []
         for c in x_names:
             x = F.col(_scoring.quote(c))
-            if c in num:
-                code = _scoring.bin_code(x, cuts.get(c, [])).cast("string")
-            else:
-                code = F.coalesce(x.cast("string"), F.lit("-1"))
-            cols.append(code.alias(c))
+            code = _scoring.bin_code(x, cuts.get(c, [])) if c in num else x
+            # a NULL predictor value is its own level, "-1"
+            cols.append(F.coalesce(code.cast("string"), F.lit("-1")).alias(c))
         cols.append(F.col(_scoring.quote(self.outcome)).cast("string").alias("__y__"))
         return df.select(*cols)
 
@@ -93,20 +91,9 @@ class MrmrStep(SelectionStep):
         self, codes: DataFrame, features: list[str], target_col: str
     ) -> dict[str, float]:
         """I(Xi; target) for all i in one melted shuffle."""
-        pairs = ", ".join(
-            f"'{c}', {_scoring.quote(c)}" for c in features
-        )
-        melted = codes.selectExpr(
-            f"stack({len(features)}, {pairs}) as (feature, code)",
-            f"{_scoring.quote(target_col)} as y",
-        )
-        pdf = (
-            melted.where(F.col("y").isNotNull())
-            .groupBy("feature", "code", "y")
-            .agg(F.count("*").alias("n"))
-            .toPandas()
-        )
-        tables = _scoring.joint_tables(pdf, bin_col="code", drop_null_bin=False)
+        cols = {c: F.col(_scoring.quote(c)) for c in features}
+        pdf = _scoring.cell_counts(codes, cols, target_col).toPandas()
+        tables = _scoring.joint_tables(pdf)
         return {f: stats.mutual_information(t) for f, t in tables.items()}
 
     def _pairwise_mi(

@@ -6,19 +6,27 @@ pROC::roc at :113 with ``direction="auto"`` ⇒ effectively max(AUC, 1-AUC)
 (:121-122); prune via ``dual_filter`` — top_p OR absolute threshold, with
 NA-scored predictors always excluded).
 
-Spark plan (binary, the hot path — pure Catalyst, no Python in the loop):
-melt p numeric predictors → ``groupBy(feature, x, y).count()`` (the ONLY
-raw-data pass, map-side combined; the class set is read off this compact
-histogram with shuffle reuse) → re-agg to per-(feature, x) pos/neg weights →
-window over the per-feature *distinct-value* histogram for the cumulative
-Mann–Whitney rank sum → per-feature AUC. Ties use midranks:
-wins = Σ pos(v)·(cum_neg(<v) + neg(v)/2). The window partitions by feature
-over distinct values only (bounded), not raw rows.
+Spark plan (pure Catalyst, no Python in the loop; one pass for every class
+count k, binary is k = 2): ``_scoring.cell_counts`` builds the
+``(feature, x, y) → n`` histogram (the ONLY raw-data pass, map-side
+combined; the class set is read off this compact histogram with shuffle
+reuse) → re-agg to one row per (feature, x) holding k class-count columns
+w_0..w_{k-1} → ONE window per feature over the distinct-value histogram
+holding the k−1 cumulative sums cum_j = Σ w_j(<x) → one per-feature
+aggregate of n_i and, for every class pair i<j, the Mann–Whitney win count
+wins_ij = Σ w_i·(cum_j + w_j/2) (ties count half). The driver receives p
+rows and computes AUC_ij = wins_ij/(n_i·n_j), the direction, and the
+Hand–Till mean over the pairs whose AUC is defined; a pair with an empty
+class scores NA, as pROC fails there (:121-122). All sums are integer or
+half-integer counts in doubles, so they are exact whatever the summation
+order.
 
-Multiclass: Hand–Till = mean over class pairs of the pairwise AUC — each
-pair reuses the DISTRIBUTED binary path over the shared cached histogram
-(C(k,2) bounded passes; the driver only ever sees p-sized score rows, never
-a data-sized histogram).
+The window partitions by feature only: each feature's whole distinct-value
+histogram is sorted in one task. A bucketed two-level scan (percentile
+buckets per feature, driver-side bucket offsets) once bounded that task on
+histograms over 2M rows; no workload reached it and its cost was never
+measured, so it was dropped. Its cost stays open: one sort task per feature
+on very large histograms.
 """
 
 from __future__ import annotations
@@ -35,6 +43,8 @@ class RocStep(SelectionStep):
     step_name = "step_select_roc"
     prune_mode = "dual"
     maximize = True
+    predictor_type = NumericType  # step_select_roc.R:138
+    outcome_type = StringType  # :133
 
     def __init__(
         self,
@@ -50,183 +60,47 @@ class RocStep(SelectionStep):
         super().__init__(outcome, terms, top_p, threshold, skip)
         self.direction = direction
 
-    def check_types(self, df: DataFrame, x_names: list[str]) -> None:
-        types = {f.name: f.dataType for f in df.schema.fields}
-        bad = [c for c in x_names if not isinstance(types[c], NumericType)]
-        if bad:  # step_select_roc.R:138 — predictors must be numeric
-            raise TypeError(f"step_select_roc requires numeric predictors: {bad}")
-        if not isinstance(types[self.outcome], StringType):
-            raise TypeError("step_select_roc requires a nominal outcome")  # :133
-
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
-        # ONE raw-data pass: aggregate the full (feature, x, y) histogram
-        # first, then read the class set off the compact histogram — the
-        # distinct() action materializes the groupBy exchange and the
-        # downstream AUC job reuses it as a skipped stage (the round-1 form
-        # spent a second full scan on df.select(outcome).distinct()).
-        melted = _scoring.melt_numeric(df, x_names, self.outcome)
-        hist3 = (
-            melted.where(F.col("x").isNotNull() & F.col("y").isNotNull())
-            .groupBy("feature", "x", "y")
-            .agg(F.count("*").alias("n"))
+        hist = _scoring.cell_counts(
+            df, _scoring.typed(x_names, "double"), self.outcome
         )
-        # ONE job reads BOTH the class set and the histogram size (the
-        # two-level-scan gate below) off the compact frame
-        class_rows = hist3.groupBy("y").agg(F.count("*").alias("rows")).collect()
-        classes = sorted(r["y"] for r in class_rows)
-        hist_rows = sum(r["rows"] for r in class_rows)
-        if len(classes) == 2:
-            return self._score_binary(hist3, x_names, classes, hist_rows)
-        return self._score_multiclass(hist3, x_names, classes, hist_rows)
+        # the distinct() job materialises the histogram exchange; the AUC
+        # job below reuses it as a skipped stage
+        classes = sorted(r["y"] for r in hist.select("y").distinct().collect())
+        out = {c: float("nan") for c in x_names}
+        k = len(classes)
+        if k < 2:
+            return out
+        pairs = [(i, j) for i in range(k) for j in range(i + 1, k)]
+        w = hist.groupBy("feature", "x").agg(*[
+            F.sum(F.when(F.col("y") == c, F.col("n")).otherwise(0)).alias(f"w{i}")
+            for i, c in enumerate(classes)
+        ])
+        before = Window.partitionBy("feature").orderBy("x").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        cum = w.select("*", *[
+            F.coalesce(F.sum(f"w{j}").over(before), F.lit(0.0)).alias(f"cum{j}")
+            for j in range(1, k)
+        ])
+        rows = cum.groupBy("feature").agg(
+            *[F.sum(f"w{i}").alias(f"n{i}") for i in range(k)],
+            *[
+                F.sum(
+                    F.col(f"w{i}") * (F.col(f"cum{j}") + F.col(f"w{j}") / 2.0)
+                ).alias(f"wins{i}_{j}")
+                for i, j in pairs
+            ],
+        ).collect()
 
-    # Above this many distinct-value histogram rows, the cumulative scan
-    # switches to the two-level (bucketed) form: a bare per-feature window
-    # is faster below it (fewer jobs) but becomes a single-task sort of a
-    # continuous feature's whole value histogram at 100 TB scale.
-    TWO_LEVEL_THRESHOLD = 2_000_000
-
-    def _score_binary(
-        self,
-        hist3: DataFrame,
-        x_names: list[str],
-        classes: list[str],
-        hist_rows: int = 0,
-    ) -> dict[str, float]:
-        pos = classes[0]
-        # re-agg of the compact histogram (distinct values only), not raw rows
-        hist = hist3.groupBy("feature", "x").agg(
-            F.sum(F.when(F.col("y") == pos, F.col("n")).otherwise(0)).alias("w_pos"),
-            F.sum(F.when(F.col("y") != pos, F.col("n")).otherwise(0)).alias("w_neg"),
-        )
-        if hist_rows > self.TWO_LEVEL_THRESHOLD:
-            cum = self._cum_neg_two_level(hist)
-        else:
-            w = Window.partitionBy("feature").orderBy("x")
-            cum = hist.withColumn(
-                "cum_neg",
-                F.coalesce(
-                    F.sum("w_neg").over(
-                        w.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0.0),
-                ),
-            )
-        res = (
-            cum.groupBy("feature")
-            .agg(
-                F.sum(F.col("w_pos") * (F.col("cum_neg") + F.col("w_neg") / 2.0)).alias("wins"),
-                F.sum("w_pos").alias("n1"),
-                F.sum("w_neg").alias("n0"),
-            )
-            .select(
-                "feature",
-                (F.col("wins") / (F.col("n1") * F.col("n0"))).alias("auc"),
-            )
-            .collect()
-        )
-        aucs = {r["feature"]: r["auc"] for r in res}
-        out: dict[str, float] = {}
-        for c in x_names:
-            a = aucs.get(c)
-            if a is None:
-                out[c] = float("nan")
-            elif self.direction == "auto":
-                out[c] = float(max(a, 1 - a))
-            else:
-                out[c] = float(a)
+        for r in rows:
+            aucs = []
+            for i, j in pairs:
+                n_ij = r[f"n{i}"] * r[f"n{j}"]
+                if n_ij == 0:  # a class of the pair is absent: NA pair
+                    continue
+                a = r[f"wins{i}_{j}"] / n_ij
+                aucs.append(max(a, 1 - a) if self.direction == "auto" else a)
+            if aucs:
+                out[r["feature"]] = float(np.mean(aucs))
         return out
-
-    @staticmethod
-    def _cum_neg_two_level(hist: DataFrame) -> DataFrame:
-        """TWO-LEVEL prefix scan for huge value histograms. A plain
-        ``Window.partitionBy("feature")`` puts each feature's ENTIRE
-        distinct-value histogram in one task — a single-task sort of
-        billions of values for a continuous feature at 100 TB. Instead:
-        (1) range-bucket each feature by approx percentiles (broadcast
-        boundaries), (2) per-(feature, bucket) w_neg totals -> exclusive
-        prefix offsets on the driver (p×B rows, bounded), (3) the
-        cumulative window runs WITHIN (feature, bucket) — parallelism p×B,
-        each task bounded by ~distinct/B. All quantities are integer counts
-        in doubles, so the regrouped sums are bit-identical to the
-        single-window form (pinned by test)."""
-        spark = hist.sparkSession
-        # clamp: shuffle.partitions=1 would make qs empty and feed
-        # percentile_approx a zero-length percentage array (ADVICE r3)
-        n_buckets = max(
-            2, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        )
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = hist.groupBy("feature").agg(
-            F.percentile_approx("x", qs, 1_000).alias("__bs__")
-        )
-        h2 = (
-            hist.join(F.broadcast(bounds), "feature")
-            .withColumn(
-                "bucket", F.size(F.filter("__bs__", lambda b: b < F.col("x")))
-            )
-            .drop("__bs__")
-        )
-        off_pdf = (
-            h2.groupBy("feature", "bucket")
-            .agg(F.sum("w_neg").alias("s"))
-            .toPandas()
-            .sort_values(["feature", "bucket"])
-        )
-        off_pdf["offset"] = (
-            off_pdf.groupby("feature")["s"].cumsum() - off_pdf["s"]
-        )
-        offsets = F.broadcast(
-            spark.createDataFrame(
-                off_pdf[["feature", "bucket", "offset"]],
-                "feature string, bucket int, offset double",
-            )
-        )
-        w = Window.partitionBy("feature", "bucket").orderBy("x")
-        return h2.join(offsets, ["feature", "bucket"]).withColumn(
-            "cum_neg",
-            F.coalesce(
-                F.sum("w_neg").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0.0),
-            )
-            + F.col("offset"),
-        )
-
-    def _score_multiclass(
-        self,
-        hist3: DataFrame,
-        x_names: list[str],
-        classes: list[str],
-        hist_rows: int = 0,
-    ) -> dict[str, float]:
-        """Hand–Till multiclass AUC = mean over unordered class pairs of the
-        pairwise AUC. Each pair runs through the DISTRIBUTED binary path
-        (filter the shared histogram to the two classes; the binary path
-        already applies direction='auto' per pair) — C(k, 2) bounded passes
-        over the cached compact histogram, never a driver-side pull of the
-        whole distinct-value histogram (a continuous feature's histogram is
-        data-sized at scale; only p-sized score rows reach the driver).
-        ``classes`` comes from score()'s class_rows read — no extra
-        distinct() job (ADVICE r3)."""
-        if len(classes) < 2:
-            return {c: float("nan") for c in x_names}
-        hist3 = hist3.cache()
-        sums: dict[str, list[float]] = {c: [] for c in x_names}
-        try:
-            for i in range(len(classes)):
-                for j in range(i + 1, len(classes)):
-                    pair = hist3.where(
-                        F.col("y").isin([classes[i], classes[j]])
-                    )
-                    aucs = self._score_binary(
-                        pair, x_names, [classes[i], classes[j]], hist_rows
-                    )
-                    for c in x_names:
-                        a = aucs.get(c, float("nan"))
-                        if not np.isnan(a):
-                            sums[c].append(a)
-        finally:
-            hist3.unpersist()
-        return {
-            c: float(np.mean(v)) if v else float("nan")
-            for c, v in sums.items()
-        }

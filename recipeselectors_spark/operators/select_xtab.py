@@ -34,6 +34,8 @@ class XtabStep(SelectionStep):
     step_name = "step_select_xtab"
     prune_mode = "dual"
     maximize = False  # p-values: smaller is better (:150)
+    predictor_type = StringType  # step_select_xtab.R:130
+    outcome_type = StringType  # :135
 
     def __init__(
         self,
@@ -42,30 +44,18 @@ class XtabStep(SelectionStep):
         top_p=float("nan"),
         threshold=float("nan"),
         test: str = "chisq",  # chisq | fisher (:116-118)
-        exact: bool | None = None,  # reference's param name (:115): True=Fisher
         fdr: bool = False,  # BH adjustment (:146-148)
         skip: bool = False,
     ) -> None:
-        if exact is not None:
-            test = "fisher" if exact else "chisq"
         if test not in ("chisq", "fisher"):
             raise ValueError(f"unknown xtab test {test!r}")
         super().__init__(outcome, terms, top_p, threshold, skip)
         self.test = test
         self.fdr = fdr
 
-    def check_types(self, df: DataFrame, x_names: list[str]) -> None:
-        types = {f.name: f.dataType for f in df.schema.fields}
-        bad = [c for c in x_names if not isinstance(types[c], StringType)]
-        if bad:  # step_select_xtab.R:130 — nominal predictors required
-            raise TypeError(f"step_select_xtab requires nominal predictors: {bad}")
-        if not isinstance(types[self.outcome], StringType):
-            raise TypeError("step_select_xtab requires a nominal outcome")  # :135
-
     def score(self, df: DataFrame, x_names: list[str]) -> dict[str, float]:
         pdf = _scoring.nominal_contingency(df, x_names, self.outcome)
-        pdf = pdf[(~pdf["x"].isna()) & (~pdf["y"].isna())]
-        tables = _scoring.joint_tables(pdf, bin_col="x", drop_null_bin=False)
+        tables = _scoring.joint_tables(pdf)
 
         pvals: dict[str, float] = {}
         for c in x_names:

@@ -57,20 +57,6 @@ def with_bfill(df: DataFrame, col: str, out: str | None = None, partition: str =
     return df.withColumn(out or f"{col}_bfill", F.first(col, ignorenulls=True).over(w))
 
 
-def with_rolling(
-    df: DataFrame,
-    col: str,
-    n: int = 5,
-    agg: str = "avg",
-    out: str | None = None,
-    partition: str = CONV,
-) -> DataFrame:
-    """Rolling aggregate over the current + (n-1) preceding turns."""
-    w = turn_window(partition).rowsBetween(-(n - 1), 0)
-    fn = getattr(F, agg)
-    return df.withColumn(out or f"{col}_roll_{agg}{n}", fn(col).over(w))
-
-
 def with_rolling_time(
     df: DataFrame,
     col: str,

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, NumericType
 
 from recipeselectors_spark.functions import pruning
 from recipeselectors_spark.plans import roles as roles_mod
@@ -75,6 +76,7 @@ class FittedStep:
             },
             "skip": self.skip,
             "params": self.params,
+            "extras": self.extras,
             "forced_exclude": self.forced_exclude,
             "prune_mode": self.prune_mode,
             "maximize": self.maximize,
@@ -94,14 +96,18 @@ class SelectionStep:
     """Base class for the ten selection steps.
 
     Subclasses implement ``score(df, x_names) -> dict[str, float]`` (the
-    distributed pass) and declare ``prune_mode`` ('percentile' | 'dual' |
-    'decision') and ``maximize``. The prune itself is driver-side
-    (functions/pruning.py).
+    distributed pass) and declare ``prune_mode`` ('percentile' | 'dual')
+    and ``maximize``. The prune itself is driver-side (functions/pruning.py).
+    Boruta records ``prune_mode = 'decision'`` and overrides ``prep``.
     """
 
     step_name = "step_select_base"
     prune_mode = "percentile"
     maximize = True
+    #: required predictor / outcome Spark types (recipes check_type);
+    #: None accepts any
+    predictor_type: type[DataType] | None = None
+    outcome_type: type[DataType] | None = None
     #: require both criteria check (boruta sets False — decision-based)
     needs_criteria = True
 
@@ -112,14 +118,12 @@ class SelectionStep:
         top_p=NA,
         threshold=NA,
         skip: bool = False,
-        **kwargs: Any,
     ) -> None:
         self.outcome = outcome
         self.terms = terms
         self.threshold = pruning.check_zero_one(threshold)
         self.top_p = top_p  # clamped at prep time once p is known (misc.R:16)
         self.skip = skip
-        self.options = kwargs
         if self.needs_criteria:
             pruning.check_criteria(self.top_p, self.threshold, self.step_name)
 
@@ -135,7 +139,22 @@ class SelectionStep:
         return self.score(df, x_names), {}
 
     def check_types(self, df: DataFrame, x_names: list[str]) -> None:
-        """Subclasses enforce numeric/nominal requirements (recipes check_type)."""
+        """``TypeError`` unless every predictor is a ``predictor_type`` and
+        the outcome an ``outcome_type`` (recipes check_type)."""
+
+        def kind(t: type[DataType]) -> str:
+            return "numeric" if t is NumericType else "nominal"
+
+        types = {f.name: f.dataType for f in df.schema.fields}
+        want = self.predictor_type
+        bad = [c for c in x_names if want and not isinstance(types[c], want)]
+        if bad:
+            raise TypeError(
+                f"{self.step_name} requires {kind(want)} predictors: {bad}"
+            )
+        want = self.outcome_type
+        if want and not isinstance(types[self.outcome], want):
+            raise TypeError(f"{self.step_name} requires a {kind(want)} outcome")
 
     def extra_exclude(
         self, scores: dict[str, float], x_names: list[str]
@@ -175,9 +194,7 @@ class SelectionStep:
             return self._fitted([], {})
         self.check_types(df, x_names)
 
-        top_p = self.top_p
-        if self.prune_mode != "decision":
-            top_p = pruning.check_top_p(top_p, len(x_names))
+        top_p = pruning.check_top_p(self.top_p, len(x_names))
 
         scores, extras = self.score_with_extras(df, x_names)
         forced = self.extra_exclude(scores, x_names)

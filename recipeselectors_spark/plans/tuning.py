@@ -28,7 +28,14 @@ def reprune(
 ) -> FittedStep:
     """New FittedStep with the same scores but a different prune decision.
     ``prune_mode``/``maximize`` default to the ones the fit recorded (the
-    step's own semantics). Pure driver-side; no Spark job."""
+    step's own semantics). Pure driver-side; no Spark job. A Boruta fit
+    (``prune_mode="decision"``) has no prune criteria to re-apply: its
+    exclusions are its Rejected features, so it raises ``ValueError``."""
+    if fitted.prune_mode == "decision":
+        raise ValueError(
+            f"{fitted.step_name} excludes by its fitted decision, not by "
+            "prune criteria: re-prep the step to change its selection"
+        )
     if prune_mode is None:
         prune_mode = fitted.prune_mode
     if maximize is None:

@@ -61,8 +61,9 @@ def test_melted_scoring_single_exchange(spark, events):
         F.length("props").cast("double").alias("props_len"),
         F.when(F.col("event_type") == "purchase", "pos").otherwise("neg").alias("y"),
     )
-    melted = _scoring.melt_numeric(df, ["value", "props_len"], "y")
-    counts = melted.groupBy("feature", "x", "y").count()
+    counts = _scoring.cell_counts(
+        df, _scoring.typed(["value", "props_len"], "double"), "y"
+    )
     plan = _plan(counts)
     assert plan.count("Exchange hashpartitioning") == 1
     assert "partial_count" in plan  # map-side combine present
@@ -116,24 +117,3 @@ def test_mrmr_pairwise_single_exchange(spark, events):
     assert plan.count("Exchange hashpartitioning") == 1
     assert "SinglePartition" not in plan
     assert "partial_count" in plan
-
-
-def test_roc_two_level_scan_matches_single_window(spark, events, monkeypatch):
-    """Above TWO_LEVEL_THRESHOLD histogram rows, the AUC prefix scan windows
-    within (feature, bucket) — a bare partitionBy(feature) would put a
-    continuous feature's whole distinct-value histogram in ONE sort task at
-    scale. All quantities are integer counts, so the bucketed scan must be
-    BIT-identical to the single-window form."""
-    from recipeselectors_spark.operators import RocStep
-
-    df = events.select(
-        F.col("value").cast("double").alias("value"),
-        F.length("props").cast("double").alias("props_len"),
-        F.when(F.col("event_type") == "purchase", "pos").otherwise("neg").alias("y"),
-    )
-    step = RocStep("y", terms=["value", "props_len"], top_p=1)
-    small_path = step.score(df, ["value", "props_len"])
-    monkeypatch.setattr(RocStep, "TWO_LEVEL_THRESHOLD", 0)
-    two_level = step.score(df, ["value", "props_len"])
-    assert small_path == two_level  # exact, not allclose
-    assert all(0.5 <= v <= 1.0 for v in two_level.values())  # direction=auto

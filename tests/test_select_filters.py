@@ -83,6 +83,23 @@ def test_infgain_equal_freq_mode(cells):
     _scores_close(fitted.scores, want, rtol=1e-7)
 
 
+@pytest.mark.parametrize("equal", [False, True])
+def test_infgain_all_null_predictor_matches_oracle(iris, equal):
+    """A predictor with no non-NULL value (numeric or nominal) has an empty
+    joint table in both cut-learning modes, as in the oracle."""
+    from pyspark.sql import functions as F
+
+    pdf, df = iris
+    df = df.withColumn("none_num", F.lit(None).cast("double")).withColumn(
+        "none_nom", F.lit(None).cast("string")
+    )
+    pdf = pdf.assign(none_num=np.nan, none_nom=pd.Series([None] * len(pdf), dtype=object))
+    names = [*fixtures.IRIS_X, "none_num", "none_nom"]
+    fitted = InfGainStep("species", top_p=2, equal=equal).prep(df)
+    want = oracles.infgain_scores(pdf, names, "species", equal=equal)
+    _scores_close(fitted.scores, want)
+
+
 # -- roc -------------------------------------------------------------------
 
 def test_roc_binary_scores_match_oracle(cells):
@@ -115,6 +132,68 @@ def test_roc_requires_numeric_predictors(lending):
         RocStep("Class", terms=["cat01"], top_p=1).prep(df)
 
 
+def _sparse_predictor(spark, classes, present):
+    """x1 is informative; x2 is non-NULL only for rows of ``present``."""
+    rng = np.random.default_rng(4)
+    y = [classes[i % len(classes)] for i in range(20 * (len(classes) - 1))]
+    pdf = pd.DataFrame({
+        "y": y,
+        "x1": [float(classes.index(v)) + rng.normal() for v in y],
+        "x2": [float(rng.integers(0, 5)) if v in present else None for v in y],
+    })
+    return pdf, spark.createDataFrame(pdf, "y string, x1 double, x2 double")
+
+
+def test_roc_predictor_seen_in_one_class_scores_na(spark):
+    """A predictor whose non-NULL values all fall in one class has no
+    binary AUC: pROC fails and the reference scores NA
+    (step_select_roc.R:121-122), instead of dividing by zero."""
+    pdf, df = _sparse_predictor(spark, ["pos", "neg"], ["pos"])
+    fitted = RocStep("y", top_p=1).prep(df)
+    want = oracles.roc_scores(pdf, ["x1", "x2"], "y")
+    assert np.isnan(want["x2"])
+    _scores_close(fitted.scores, want)
+    assert "x2" in fitted.exclude
+
+
+def test_roc_hand_till_skips_pairs_a_predictor_lacks(spark):
+    """Hand–Till averages the pairs whose AUC is defined: x2 lacks class
+    "c", so only its (a, b) pair counts."""
+    pdf, df = _sparse_predictor(spark, ["a", "b", "c"], ["a", "b"])
+    fitted = RocStep("y", top_p=1).prep(df)
+    want = oracles.roc_scores(pdf, ["x1", "x2"], "y")
+    assert not np.isnan(want["x2"])
+    _scores_close(fitted.scores, want)
+
+
+def test_roc_prep_job_count_does_not_grow_with_classes(spark):
+    """One window pass serves every class count: 3 and 5 classes run the
+    same jobs, and a binary prep no more than the 7 of a per-pair scan."""
+    rng = np.random.default_rng(8)
+    sc = spark.sparkContext
+
+    def n_jobs(k: int) -> int:
+        y = rng.integers(0, k, 600)
+        df = spark.createDataFrame(pd.DataFrame({
+            "y": [f"c{v}" for v in y],
+            "x1": np.round(rng.normal(size=600) + 0.5 * y, 2),
+            "x2": np.round(rng.normal(size=600), 2),
+        })).cache()
+        df.count()
+        group = f"roc-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            RocStep("y", top_p=1).prep(df)
+        finally:
+            sc.setJobGroup("", "")
+            df.unpersist()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs = {k: n_jobs(k) for k in (2, 3, 5)}
+    assert jobs[3] == jobs[5], jobs
+    assert jobs[2] <= 7, jobs
+
+
 # -- xtab ------------------------------------------------------------------
 
 def test_xtab_chi2_scores_match_oracle(lending):
@@ -136,7 +215,7 @@ def test_xtab_fisher_2x2(lending):
 
 
 def test_xtab_fisher_rxc_scores_real_pvalues(lending):
-    """A >2-level factor with exact=True now gets a real r×c Fisher p-value
+    """A >2-level factor with test="fisher" now gets a real r×c Fisher p-value
     (round-1 behavior: silent NaN -> force-excluded). cat02 has 3 levels."""
     pdf, df = lending
     fitted = XtabStep(
@@ -388,11 +467,18 @@ def test_empty_selection_passthrough(iris):
 def test_fitted_step_json_roundtrip(iris):
     from recipeselectors_spark.plans.step import FittedStep
 
+    from recipeselectors_spark.operators import BorutaStep
+
     pdf, df = iris
-    fitted = InfGainStep("species", top_p=2).prep(df)
-    back = FittedStep.from_json(fitted.to_json())
-    assert back.exclude == fitted.exclude
-    assert back.scores.keys() == fitted.scores.keys()
+    for fitted in (
+        InfGainStep("species", top_p=2).prep(df),
+        # extras: Boruta's decision, hits and ImpHistory
+        BorutaStep("species", max_runs=3, trees=5, max_depth=3).prep(df),
+    ):
+        back = FittedStep.from_json(fitted.to_json())
+        assert back.exclude == fitted.exclude
+        assert back.scores.keys() == fitted.scores.keys()
+        assert back.extras == fitted.extras
 
 
 # -- custom scoring kernel (user extension surface) -------------------------
@@ -433,8 +519,7 @@ def test_custom_score_kernel_failure_gives_nan(cells):
 def test_mdl_gate_agrees_with_ungated(iris):
     """Size-gated pre-bucketing (gate=0 forces every feature through the
     Bucketizer path) must be bit-identical to the ungated kernel while each
-    distinct value still gets its own bucket — the threshold=0 trick, same
-    as test_two_level_roc."""
+    distinct value still gets its own bucket — the gate=0 trick."""
     from recipeselectors_spark.operators import _scoring
 
     pdf, df = iris

@@ -67,6 +67,31 @@ def test_reprune_keeps_forced_exclusions(spark, monkeypatch):
         assert tuning.reprune(again, top_p=3).exclude == ["b"]
 
 
+def test_reprune_rejects_a_boruta_fit(spark, monkeypatch):
+    """Boruta excludes its Rejected features, not by prune criteria: a
+    re-prune or grid of its fit raises instead of silently keeping them."""
+    from recipeselectors_spark.operators import BorutaStep
+
+    # "a" beats every shadow in every run, "b" never does
+    monkeypatch.setattr(
+        BorutaStep, "_fit_importances",
+        lambda self, df, feats, kind, run=0: np.array(
+            [1.0, 0.0] + [0.5] * (len(feats) - 2)
+        ),
+    )
+    df = spark.createDataFrame(
+        [("p" if i % 2 else "n", float(i), float(i % 3)) for i in range(20)],
+        "y string, a double, b double",
+    )
+    fitted = BorutaStep("y", max_runs=12).prep(df)
+    assert fitted.exclude == ["b"]
+    for f in (fitted, FittedStep.from_json(fitted.to_json())):
+        with pytest.raises(ValueError, match="decision"):
+            tuning.reprune(f, top_p=1)
+        with pytest.raises(ValueError, match="decision"):
+            tuning.grid(f, top_p_values=[1, 2])
+
+
 def test_reprune_uses_the_fitted_steps_prune_semantics(spark):
     """roc prunes ``dual`` and xtab ``dual`` with minimize (p-values): a
     re-prune without prune_mode/maximize must apply the fit's own
