@@ -1408,8 +1408,9 @@ _TOKEN_TOPK_ORACLE = f"""
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus dedup with TRUE duplicate clusters: exact-first, MinHash-LSH
-    pairs, connected components (iterative min-label propagation), keep the
-    min id per component. The oracle recomputes the components with a
+    pairs, connected components (driver union-find on a small pair graph,
+    large-star/small-star above it), keep the min id per component. The
+    oracle recomputes the components with a
     recursive transitive-closure CTE over the same bit-exact XXH64 MinHash
     pipeline."""
     from recipeselectors_spark.operators import dedup as D

@@ -22,10 +22,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# share of defaultParallelism below which ensure_parallelism repartitions
+MIN_RATIO = 0.5
 
-def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
+
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` when its planned
-    partition count is below ``min_ratio`` of it. Batch frames only
+    partition count is below ``MIN_RATIO`` of it. Batch frames only
     (streaming frames cannot be probed; callers on streaming paths must
     not use this)."""
     sc = df.sparkSession.sparkContext
@@ -33,7 +36,7 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     if df.isStreaming:
         return df
     n = df.rdd.getNumPartitions()
-    if n < target * min_ratio:
+    if n < target * MIN_RATIO:
         return df.repartition(target)
     return df
 

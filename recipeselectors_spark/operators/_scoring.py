@@ -7,11 +7,13 @@ separate jobs, ``melt`` stacks the p selected columns into a tall
 aggregation (SURVEY.md §4 "single-pass multi-feature contingency
 aggregation"). ``cell_counts`` is the one histogram builder: the lazy
 ``(feature, x, y) → n`` counts with one NULL rule (a NULL x or y counts in
-no cell). It feeds the ROC window pass, the MDL cut learner, the nominal
-contingency tables (xtab, infgain, mRMR's ID-like-column guard), infgain's
-binned joint tables and mRMR's MI tables. The tables (p × bins × classes
-cells) are tiny and collected to the driver, where ``joint_tables`` pivots
-them for the numpy kernels in functions/stats.py.
+no cell; ``typed`` and ``bin_code`` turn a numeric NaN into NULL first, as
+R and the pandas oracles treat NaN as NA). It feeds the ROC window pass,
+the MDL cut learner, the nominal contingency tables (xtab, infgain, mRMR's
+ID-like-column guard), infgain's binned joint tables and mRMR's MI tables.
+The tables (p × bins × classes cells) are tiny and collected to the
+driver, where ``joint_tables`` pivots them for the numpy kernels in
+functions/stats.py.
 
 Scale notes (100 TB): the melt multiplies rows by p but the immediate
 ``groupBy(feature, x, y).count()`` map-side-combines before the shuffle, so
@@ -45,9 +47,20 @@ def nominal_cols(df: DataFrame, names: list[str]) -> list[str]:
     return [c for c in names if isinstance(types[c], StringType)]
 
 
+def not_nan(x: Column) -> Column:
+    """``x`` as a double, NULL where it is NaN: the filter steps' one NaN
+    rule. A numeric NaN is a missing value, as in R and in the pandas
+    oracles, so every NULL rule downstream covers it."""
+    xd = x.cast("double")
+    return F.when(~F.isnan(xd), xd)
+
+
 def typed(names: list[str], to: str) -> dict[str, Column]:
     """Each of ``names`` cast to ``to``, keyed by name: the ``cols`` of
-    ``melt`` and ``cell_counts`` for raw predictors."""
+    ``melt`` and ``cell_counts`` for raw predictors. A ``"double"`` cast
+    maps NaN to NULL (``not_nan``)."""
+    if to == "double":
+        return {c: not_nan(F.col(quote(c))) for c in names}
     return {c: F.col(quote(c)).cast(to) for c in names}
 
 
@@ -267,7 +280,7 @@ def _prebucket_oversized(
             splits=[float("-inf"), *sp, float("inf")],
             inputCol="x",
             outputCol="_bin",
-            handleInvalid="keep",  # NaN -> own bucket; pivot drops it, as ungated
+            handleInvalid="keep",  # x is never NaN here (typed maps it to NULL)
         )
         parts.append(buck.transform(part))
     bucketed = parts[0]
@@ -285,12 +298,12 @@ def _prebucket_oversized(
 
 def bin_code(x: Column, cuts: list[float]) -> Column:
     """Bin index of ``x`` under sorted ``cuts``: the number of cuts <= x,
-    NULL for a NULL x. A pure-Catalyst array expression over literal cuts;
-    NaN compares above every double, so it lands in the top bin."""
-    xd = x.cast("double")
+    NULL for a NULL or NaN x (``not_nan``), so ``cell_counts``' NULL rule
+    drops it. A pure-Catalyst array expression over literal cuts."""
+    xd = not_nan(x)
     arr = F.array(*[F.lit(float(c)) for c in cuts])
     code = F.size(F.filter(arr, lambda c: xd >= c)) if cuts else F.lit(0)
-    return F.when(x.isNotNull(), code)
+    return F.when(xd.isNotNull(), code)
 
 
 def binned_joint_counts(

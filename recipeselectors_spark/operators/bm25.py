@@ -16,7 +16,8 @@ Scale shape (100 TB):
 * scoring = BROADCAST the query-term table (queries are small by
   definition) against the postings — the corpus-sized side never
   shuffles on term — then one ``groupBy(q_id, doc_id)`` sum;
-* per-query top-k = a single ``row_number`` window partitioned by query.
+* per-query top-k = ``similarity.top_k_per_query``, the one rank tail of
+  the corpus operators (a ``row_number`` window partitioned by query).
 
 ``idf = ln(1 + (N - df + 0.5) / (df + 0.5))`` (never negative);
 ``score(q, d) = sum_t idf(t) * tf * (k1 + 1) /
@@ -25,7 +26,7 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from recipeselectors_spark.functions import text as TX
 
@@ -185,14 +186,9 @@ def bm25_topk(
     reproducible. The rank window partitions by query — fine for real
     retrieval workloads (many queries, each matching a corpus slice); for
     bulk one-query scoring without a cut-off use :func:`bm25_scores`."""
+    from recipeselectors_spark.operators.similarity import top_k_per_query
+
     scored = bm25_scores(
         corpus, queries, text_col, id_col, query_col, query_id_col, k1, b
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("bm25").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "bm25", "rank")
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col, "bm25")

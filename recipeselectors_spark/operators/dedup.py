@@ -15,6 +15,10 @@ Design for 100 TB:
   near-dup = signatures matching on any of 4 16-bit bands (Hamming ≤ small).
 * **n-gram Jaccard**: exact verified pairwise similarity, only ever applied
   within LSH buckets.
+
+Every bucketed candidate generator (MinHash, SimHash, embedding hyperplanes,
+winnowed-fingerprint postings) ends in ONE self-join, ``bucket_pairs``: the
+bucket-size cap, the join on the bucket keys and ``id_a < id_b``.
 """
 
 from __future__ import annotations
@@ -177,26 +181,44 @@ def dedup_corpus(
     return uniq.join(losers, id_col, "left_anti")
 
 
-def cap_buckets(
+def bucket_pairs(
     banded: DataFrame,
+    id_col: str,
     max_bucket: int | None,
-    keys: tuple[str, str] = ("band", "bucket"),
+    keys: tuple[str, ...] = ("band", "bucket"),
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Drop LSH buckets larger than ``max_bucket`` BEFORE the bucket
-    self-join. On boilerplate-heavy corpora a single degenerate bucket
-    (thousands of near-identical docs) makes the self-join quadratic; the
-    standard mitigation is to exact-dedup first and cap the rest. The count
-    window hash-partitions on the same keys as the join, so Catalyst reuses
-    one exchange. ``None`` (default) keeps every bucket."""
-    if max_bucket is None:
-        return banded
-    from pyspark.sql.window import Window
+    """The one LSH candidate-pair join: ``(id_a, id_b)`` with id_a < id_b,
+    plus ``<c>_a``/``<c>_b`` for each ``carry`` column, one row per shared
+    ``keys`` value (callers dedupe pairs that share several buckets).
 
-    w = Window.partitionBy(*[F.col(k) for k in keys])
+    Buckets with more than ``max_bucket`` rows are dropped BEFORE the
+    self-join (the skew guard; "DS2: Handling Data Skew", ICDE 2021): on
+    boilerplate-heavy corpora one degenerate bucket (thousands of
+    near-identical docs) makes the join quadratic; the standard mitigation
+    is to exact-dedup first and cap the rest. The count window
+    hash-partitions on the join keys, so Catalyst reuses one exchange.
+    ``None`` keeps every bucket. Callers place their own
+    ``localCheckpoint`` barrier on ``banded`` when it holds a costly
+    expression, so it is not re-evaluated on each join side."""
+    if max_bucket is not None:
+        from pyspark.sql.window import Window
+
+        w = Window.partitionBy(*[F.col(k) for k in keys])
+        banded = (
+            banded.withColumn("__bsz__", F.count("*").over(w))
+            .where(F.col("__bsz__") <= max_bucket)
+            .drop("__bsz__")
+        )
     return (
-        banded.withColumn("__bsz__", F.count("*").over(w))
-        .where(F.col("__bsz__") <= max_bucket)
-        .drop("__bsz__")
+        banded.alias("a")
+        .join(banded.alias("b"), list(keys))
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
     )
 
 
@@ -215,7 +237,7 @@ def minhash_dedup_pairs(
 
     Candidates from LSH buckets; the estimated Jaccard is the fraction of
     matching minhash components — verification never leaves the bucket join.
-    ``max_bucket`` bounds the per-bucket join fan-out (see cap_buckets).
+    ``max_bucket`` bounds the per-bucket join fan-out (see bucket_pairs).
     """
     from recipeselectors_spark.operators._parallel import ensure_parallelism
 
@@ -234,18 +256,10 @@ def minhash_dedup_pairs(
     # optimizer/codegen time on the exploded plan. The signature table is
     # (id, num_perm longs) — tiny relative to the corpus at any scale.
     sigs = sigs.localCheckpoint()
-    cand = cap_buckets(
-        minhash_candidates(sigs, id_col, "minhash", bands, num_perm), max_bucket
-    )
-    pairs = (
-        cand.alias("a")
-        .join(cand.alias("b"), ["band", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    pairs = bucket_pairs(
+        minhash_candidates(sigs, id_col, "minhash", bands, num_perm),
+        id_col, max_bucket,
+    ).distinct()
     sa = sigs.select(
         F.col(id_col).alias("id_a"), F.col("minhash").alias("mh_a")
     )
@@ -316,40 +330,25 @@ def embedding_near_dup_pairs(
     width) is probed with one single-row job when not given — pass it to
     make the call fully lazy."""
     from recipeselectors_spark.operators import similarity as S
-
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
     from recipeselectors_spark.operators._parallel import ensure_parallelism
 
     # sign-signature dot products run in the scan stage — spread first
     renamed = ensure_parallelism(
-        df.select(id_col, F.col(vec_col).alias("__v__"))
+        df.select(id_col, F.col(vec_col).alias("__v"))
     )
     # planes ship as one broadcast array column (codegen-safe at dim 768+),
     # all bands in a single pass — see similarity.with_band_buckets.
     # localCheckpoint: the banded frame feeds BOTH sides of the bucket
     # self-join; without the barrier the sign-signature expression tree is
     # re-inlined into each branch (same blowup as minhash_dedup_pairs)
-    banded = cap_buckets(
-        S.with_band_buckets(
-            renamed, "__v__", [id_col, "__v__"], dim, n_planes, bands, seed,
-            stride=31,
-        ),
-        max_bucket,
+    banded = S.with_band_buckets(
+        renamed, "__v", [id_col, "__v"], dim, n_planes, bands, seed,
+        stride=31,
     ).localCheckpoint()
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__v__").alias("__va__"),
-            F.col("b.__v__").alias("__vb__"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = bucket_pairs(banded, id_col, max_bucket, carry=("__v",))
+    scored = S.with_cosine(
+        cand.dropDuplicates(["id_a", "id_b"]), "__v_a", "__v_b"
     )
-    scored = S.with_cosine(cand, "__va__", "__vb__")
     return scored.where(F.col("cosine") >= threshold).select(
         "id_a", "id_b", "cosine"
     )
@@ -655,7 +654,7 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """Near-dup candidates: equal 16-bit band of the 64-bit SimHash (any of
     4 bands) — standard Hamming-LSH banding, one explode + shuffle.
-    ``max_bucket`` bounds the per-bucket join fan-out (see cap_buckets)."""
+    ``max_bucket`` bounds the per-bucket join fan-out (see bucket_pairs)."""
     sig = with_simhash(df.select(id_col, text_col), text_col)
     bands = F.array(
         *[
@@ -670,22 +669,10 @@ def simhash_near_dup_pairs(
     )
     # barrier before the self-join: the signature is a pandas-UDF column —
     # without it the UDF runs once per join branch (2x Arrow round trips)
-    exploded = cap_buckets(
-        sig.select(id_col, "simhash", F.explode(bands).alias("bb")).select(
-            id_col, "simhash", "bb.band", "bb.bucket"
-        ),
-        max_bucket,
+    exploded = sig.select(id_col, F.explode(bands).alias("bb")).select(
+        id_col, "bb.band", "bb.bucket"
     ).localCheckpoint()
-    return (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    return bucket_pairs(exploded, id_col, max_bucket).distinct()
 
 
 def repeated_span_pairs(
@@ -719,7 +706,6 @@ def repeated_span_pairs(
     prints per pair. Returns (id_a, id_b, n_shared), id_a < id_b.
     """
     from pyspark.sql.types import ArrayType
-    from pyspark.sql.window import Window
 
     from recipeselectors_spark.functions.text import winnow_fingerprints
 
@@ -739,19 +725,8 @@ def repeated_span_pairs(
     postings = ensure_parallelism(df.select(id_col, text_col)).select(
         F.col(id_col), F.explode(prints(F.col(text_col))).alias("__fp__")
     )
-    if max_postings is not None:
-        postings = (
-            postings.withColumn(
-                "__n__", F.count("*").over(Window.partitionBy("__fp__"))
-            )
-            .where(F.col("__n__") <= max_postings)
-            .drop("__n__")
-        )
-    a = postings.select(F.col(id_col).alias("id_a"), "__fp__")
-    b = postings.select(F.col(id_col).alias("id_b"), "__fp__")
     return (
-        a.join(b, "__fp__")
-        .where(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(postings, id_col, max_postings, keys=("__fp__",))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)

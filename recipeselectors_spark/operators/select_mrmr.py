@@ -9,24 +9,16 @@ Spark plan: discretize numeric predictors once (equal-frequency bins — the MI
 estimator's binning, ``_scoring.bin_code``; nominal predictors use their
 levels, after the same ID-like-column guard as xtab and infgain), materialize
 a compact per-row *codes* frame, cache it. Relevance I(Xi;Y) for all i = one
-melted shuffle, pivoted by ``_scoring.joint_tables``. Redundancy has two
-paths, chosen by p against the module constant ``ALL_PAIRS_MAX`` (64):
+melted shuffle, pivoted by ``_scoring.joint_tables``. Redundancy is ONE
+pass: ALL pairwise MIs in one double-exploded ``groupBy(i, va, j, vb)
+.count()`` shuffle; the greedy loop then runs purely driver-side over the
+MI matrix. One relevance pass and one redundancy pass at every p.
 
-* **all-pairs fast path** (p <= ALL_PAIRS_MAX): ALL pairwise
-  MIs in ONE double-exploded ``groupBy(fa, va, fb, vb).count()`` shuffle —
-  the map side emits p(p-1)/2 struct pairs per row but the map-side combine
-  collapses them to at most pairs × bins² tiny cells per partition; the
-  greedy loop then runs purely driver-side over the cached MI matrix.
-  2 Spark jobs total instead of p+1 — at p=500 sequential job launch
-  latency alone dominates the per-iteration path.
-* **per-iteration path** (p > ALL_PAIRS_MAX): each greedy iteration computes
-  I(Xi;Xs_new) for every remaining i against the newly-selected feature with
-  ONE melted ``groupBy(feature, code, s_code).count()`` shuffle — p
-  iterations ⇒ p shuffles over the cached codes frame, never a p×p row
-  blowup in one job (at large p the pair explosion would dwarf the input).
-
-Both paths compute MI from identical contingency tables, so scores agree
-exactly (pinned by tests).
+Cost, at p predictors: the map side emits p(p-1)/2 (index, code) pairs per
+row — the same total as p per-selected-feature melts would emit over p jobs
+(Σ(p−k) = p(p−1)/2), so no other path is kept. The map-side combine holds
+per-partition aggregate state of up to p(p-1)/2 × bins² keys (about 4.5M at
+p = 300, bins = 10); that state's memory is not measured.
 """
 
 from __future__ import annotations
@@ -36,9 +28,6 @@ from pyspark.sql import DataFrame, functions as F
 from recipeselectors_spark.functions import stats
 from recipeselectors_spark.operators import _scoring
 from recipeselectors_spark.plans.step import SelectionStep
-
-# p at or below which redundancy comes from the one-shuffle all-pairs pass
-ALL_PAIRS_MAX = 64
 
 
 class MrmrStep(SelectionStep):
@@ -87,12 +76,10 @@ class MrmrStep(SelectionStep):
         finally:
             codes.unpersist()
 
-    def _mi_against(
-        self, codes: DataFrame, features: list[str], target_col: str
-    ) -> dict[str, float]:
-        """I(Xi; target) for all i in one melted shuffle."""
-        cols = {c: F.col(_scoring.quote(c)) for c in features}
-        pdf = _scoring.cell_counts(codes, cols, target_col).toPandas()
+    def _relevance(self, codes: DataFrame, x_names: list[str]) -> dict[str, float]:
+        """I(Xi; Y) for all i in one melted shuffle."""
+        cols = {c: F.col(_scoring.quote(c)) for c in x_names}
+        pdf = _scoring.cell_counts(codes, cols, "__y__").toPandas()
         tables = _scoring.joint_tables(pdf)
         return {f: stats.mutual_information(t) for f, t in tables.items()}
 
@@ -123,28 +110,17 @@ class MrmrStep(SelectionStep):
             tab = g.pivot_table(
                 index="va", columns="vb", values="n", aggfunc="sum", fill_value=0
             ).to_numpy(dtype=float)
-            # store BOTH orientations: mi_between(candidate, selected) must
-            # sum the table with the CANDIDATE on the rows, exactly as
-            # _mi_against does, so the two paths agree to the last ulp even
-            # though MI is mathematically symmetric (float summation order
-            # differs under transpose — ADVICE r3)
+            # store BOTH orientations: the greedy loop sums each table with
+            # the CANDIDATE on the rows, as the oracle does (MI is symmetric,
+            # but float summation order differs under transpose)
             out[(x_names[int(i)], x_names[int(j)])] = stats.mutual_information(tab)
             out[(x_names[int(j)], x_names[int(i)])] = stats.mutual_information(tab.T)
         return out
 
     def _greedy(self, codes: DataFrame, x_names: list[str]) -> dict[str, float]:
-        relevance = self._mi_against(codes, x_names, "__y__")
+        relevance = self._relevance(codes, x_names)
         relevance = {c: relevance.get(c, 0.0) for c in x_names}
-
-        all_pairs = len(x_names) <= ALL_PAIRS_MAX
-        pair_mi: dict[tuple[str, str], float] = (
-            self._pairwise_mi(codes, x_names) if all_pairs and len(x_names) > 1
-            else {}
-        )
-
-        def mi_between(a: str, b: str) -> float:
-            # (a, b) is always present: _pairwise_mi stores both orientations
-            return pair_mi.get((a, b), 0.0)
+        pair_mi = self._pairwise_mi(codes, x_names) if len(x_names) > 1 else {}
 
         selected: list[str] = []
         scores: dict[str, float] = {}
@@ -157,13 +133,8 @@ class MrmrStep(SelectionStep):
         remaining.remove(first)
 
         while remaining:
-            if all_pairs:
-                for c in remaining:
-                    redundancy_sum[c] += mi_between(c, selected[-1])
-            else:
-                mi_s = self._mi_against(codes, remaining, selected[-1])
-                for c in remaining:
-                    redundancy_sum[c] += mi_s.get(c, 0.0)
+            for c in remaining:
+                redundancy_sum[c] += pair_mi.get((c, selected[-1]), 0.0)
             k = len(selected)
             cand = {
                 c: relevance[c] - redundancy_sum[c] / k for c in remaining

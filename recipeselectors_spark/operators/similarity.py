@@ -1,15 +1,18 @@
 """Similarity search over embedding columns (``array<float>``).
 
 * ``cosine_topk`` — exact brute-force baseline: broadcast the query set,
-  dot products via ``F.zip_with``/``F.aggregate`` (JVM-side, codegen), global
-  top-k via ``orderBy(...).limit(k)`` (TakeOrderedAndProject — no full sort).
+  dot products via ``F.zip_with``/``F.aggregate`` (JVM-side, codegen).
 * ``lsh_ann_topk`` — the scale path: random-hyperplane signatures bucket the
-  corpus (signs of r·x, pure Catalyst), candidates come only from matching
-  buckets (multi-probe over b bands), exact re-scoring within buckets. At
-  10^12 vectors the bucket join replaces the O(n·q) cross product.
+  corpus (signs of r·x, pure Catalyst, ``with_band_buckets``), candidates
+  come only from matching buckets (multi-probe over b bands), exact
+  re-scoring within buckets. At 10^12 vectors the bucket join replaces the
+  O(n·q) cross product.
 * ``ivf_topk`` — IVF-style alternative: k-means-lite centroids from a seeded
   driver sample, each vector assigned to its nearest centroid (one pass);
   queries probe ``nprobe`` nearest centroids only.
+
+All three, and ``bm25.bm25_topk``, end in ``top_k_per_query``: the one
+per-query rank window (score descending, id ascending on ties).
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
+    "top_k_per_query",
     "cosine_topk",
     "lsh_ann_topk",
     "ivf_topk",
@@ -55,6 +59,28 @@ def with_cosine(
     )
 
 
+def top_k_per_query(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str
+) -> DataFrame:
+    """The one per-query rank tail: ``(query_id_col, id_col, score_col,
+    rank)``, rank 1..k per query by ``score_col`` descending, ties broken
+    by ``id_col`` ascending so results are total-ordered and reproducible.
+    One ``row_number`` window partitioned by query: one exchange on the
+    query id, then a sort within each query. "Top-k Sorting Under Partial
+    Order Information" (SIGMOD 2018) is the reference for any cheaper
+    per-query selection."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col(score_col).desc(), F.col(id_col)
+    )
+    return (
+        scored.withColumn("__rn__", F.row_number().over(w))
+        .where(F.col("__rn__") <= k)
+        .select(query_id_col, id_col, score_col, F.col("__rn__").alias("rank"))
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     query: DataFrame,
@@ -64,8 +90,6 @@ def cosine_topk(
     query_id_col: str = "q_id",
 ) -> DataFrame:
     """Exact top-k per query: broadcast-crossjoin + per-query window top-k."""
-    from pyspark.sql.window import Window
-
     from recipeselectors_spark.operators._parallel import ensure_parallelism
 
     q = query.select(
@@ -77,14 +101,7 @@ def cosine_topk(
         ensure_parallelism(corpus).crossJoin(F.broadcast(q)),
         vec_col, "__q_vec__",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rn__").alias("rank"))
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col, "cosine")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -96,7 +113,7 @@ def with_band_buckets(
     df: DataFrame,
     vec_col: str,
     keep_cols: list[str],
-    dim: int,
+    dim: int | None,
     n_planes: int,
     bands: int,
     seed: int,
@@ -115,7 +132,12 @@ def with_band_buckets(
 
     Bucket values are bit-identical to the round-1 encoding: bit i of band
     b's signature = (plane_i · x > 0), weight 2^i.
+
+    ``dim`` (the embedding width) is probed from ``df`` with one single-row
+    job when None — pass it to keep the call fully lazy.
     """
+    if dim is None:
+        dim = len(df.select(vec_col).first()[0])
     spark = df.sparkSession
     planes = [
         [[float(v) for v in p] for p in _hyperplanes(dim, n_planes, seed + stride * b)]
@@ -170,14 +192,10 @@ def lsh_ann_topk(
     bits); a corpus vector is a candidate for a query if ANY band matches —
     recall grows with bands, cost with bucket size.
 
-    ``dim`` (the embedding width) is probed with one single-row job when
-    not given — pass it to make the call fully lazy.
+    ``dim`` (the embedding width) is probed with one single-row job per
+    side (corpus, query) when not given — pass it to make the call fully
+    lazy.
     """
-    from pyspark.sql.window import Window
-
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-
     from recipeselectors_spark.operators._parallel import ensure_parallelism
 
     def banded(df: DataFrame, idc: str) -> DataFrame:
@@ -211,14 +229,7 @@ def lsh_ann_topk(
         .dropDuplicates([query_id_col, id_col])
     )
     scored = with_cosine(cand, "__c__", "__q__")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rn__").alias("rank"))
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col, "cosine")
 
 
 def ivf_sample(
@@ -282,8 +293,6 @@ def ivf_topk(
     deterministic md5-ordered sample (see :func:`ivf_sample`); corpus
     partitioned by nearest centroid (one Catalyst pass); queries probe
     their ``nprobe`` nearest centroid cells only."""
-    from pyspark.sql.window import Window
-
     sample = ivf_sample(corpus, vec_col, id_col, sample_n)
     cent = ivf_centroids(sample, n_centroids, seed, kmeans_iters)
 
@@ -323,11 +332,4 @@ def ivf_topk(
         query_id_col, id_col, F.col(vec_col).alias("__c__"), "__q__"
     )
     scored = with_cosine(cand.dropDuplicates([query_id_col, id_col]), "__c__", "__q__")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rn__").alias("rank"))
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col, "cosine")

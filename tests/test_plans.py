@@ -117,3 +117,27 @@ def test_mrmr_pairwise_single_exchange(spark, events):
     assert plan.count("Exchange hashpartitioning") == 1
     assert "SinglePartition" not in plan
     assert "partial_count" in plan
+
+
+@pytest.mark.parametrize("max_postings", [10_000, None])
+def test_repeated_span_pairs_reuses_its_postings_exchange(spark, max_postings):
+    """The posting-list self-join reads ONE fingerprint exchange: the
+    second join side is a ReusedExchange, so the winnow UDF runs once,
+    not once per join side — with and without the stop-fingerprint cap."""
+    from recipeselectors_spark.operators import dedup as D
+
+    span = ("this exact boilerplate legal disclaimer paragraph appears "
+            "verbatim in many scraped pages and should be detected as a "
+            "repeated span across documents")
+    df = spark.createDataFrame(
+        [("a", "unique preamble about astronomy. " + span + " tail A."),
+         ("b", "intro concerning cooking recipes! " + span + " ending B."),
+         ("c", "no shared content here at all, just words about hiking.")],
+        "doc_id string, text string",
+    )
+    q = D.repeated_span_pairs(df, min_shared=2, max_postings=max_postings)
+    assert [(r["id_a"], r["id_b"]) for r in q.collect()] == [("a", "b")]
+    # after the action the plan is AQE's final plan, then the initial one
+    final = _plan(q).split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final
+    assert final.count("ArrowEvalPython") == 1

@@ -194,6 +194,50 @@ def test_roc_prep_job_count_does_not_grow_with_classes(spark):
     assert jobs[2] <= 7, jobs
 
 
+# -- NaN is a missing value -------------------------------------------------
+
+@pytest.fixture(scope="module")
+def nan_predictor(spark):
+    """40 rows whose predictor x holds 6 NaN values. Built from Rows, so x
+    stays a Spark NaN (pandas NaN becomes NULL through createDataFrame)."""
+    from pyspark.sql import Row
+
+    rng = np.random.default_rng(3)
+    y = np.where(rng.random(40) < 0.5, "pos", "neg")
+    x = rng.normal(size=40) + 2.0 * (y == "pos")
+    x[:6] = np.nan
+    z = rng.normal(size=40) + 0.5 * (y == "pos")
+    pdf = pd.DataFrame({"x": x, "z": z, "y": y})
+    df = spark.createDataFrame(
+        [Row(x=float(a), z=float(b), y=str(c)) for a, b, c in zip(x, z, y)]
+    )
+    assert df.where("isnan(x)").count() == 6
+    return pdf, df.cache()
+
+
+@pytest.mark.parametrize(
+    "make_step, oracle",
+    [
+        (lambda: RocStep("y", top_p=1),
+         lambda pdf: oracles.roc_scores(pdf, ["x", "z"], "y")),
+        (lambda: InfGainStep("y", top_p=1, equal=True, bins=4),
+         lambda pdf: oracles.infgain_scores(pdf, ["x", "z"], "y", equal=True, bins=4)),
+        (lambda: InfGainStep("y", top_p=1),
+         lambda pdf: oracles.infgain_scores(pdf, ["x", "z"], "y")),
+        (lambda: MrmrStep("y", top_p=1, bins=4),
+         lambda pdf: oracles.mrmr_scores(pdf, ["x", "z"], "y", bins=4)),
+    ],
+    ids=["roc", "infgain_equal", "infgain_mdl", "mrmr"],
+)
+def test_nan_predictor_is_missing(nan_predictor, make_step, oracle):
+    """A numeric NaN counts as NA, as in R and the oracles: ROC drops it,
+    equal-frequency and MDL cuts ignore it, binned tables drop it and
+    mRMR gives it the NULL level."""
+    pdf, df = nan_predictor
+    fitted = make_step().prep(df)
+    _scores_close(fitted.scores, oracle(pdf), rtol=1e-9)
+
+
 # -- xtab ------------------------------------------------------------------
 
 def test_xtab_chi2_scores_match_oracle(lending):
@@ -257,60 +301,38 @@ def test_mrmr_redundancy_penalty(cells):
     assert "x06" not in kept
 
 
-def test_mrmr_all_pairs_equals_per_iteration(iris, monkeypatch):
-    """The one-shuffle all-pairs MI fast path and the per-iteration melted
-    path compute MI from identical contingency tables — scores must agree
-    exactly (not just allclose-loosely)."""
-    from recipeselectors_spark.operators import select_mrmr
-
-    pdf, df = iris
-    fast = MrmrStep("species", top_p=2, bins=10).prep(df)  # p=4 <= 64: fast
-    monkeypatch.setattr(select_mrmr, "ALL_PAIRS_MAX", 0)
-    slow = MrmrStep("species", top_p=2, bins=10).prep(df)
-    _scores_close(fast.scores, slow.scores, rtol=0, atol=0)
-    assert fast.exclude == slow.exclude
-
-
-def test_mrmr_all_pairs_mixed_types(lending, monkeypatch):
-    """Path equivalence must hold with NOMINAL predictors in the mix — their
-    level codes ride through the same (index, code) pair explosion as the
-    binned numeric codes."""
-    from recipeselectors_spark.operators import select_mrmr
-
+def test_mrmr_all_pairs_mixed_types(lending):
+    """NOMINAL predictors in the mix: their level codes ride through the
+    same (index, code) pair explosion as the binned numeric codes, and the
+    scores match the oracle's."""
     pdf, df = lending
     sub = ["num01", "num02", "cat01", "cat06"]
-    fast = MrmrStep("Class", terms=sub, top_p=2, bins=6).prep(df)
-    monkeypatch.setattr(select_mrmr, "ALL_PAIRS_MAX", 0)
-    slow = MrmrStep("Class", terms=sub, top_p=2, bins=6).prep(df)
-    _scores_close(fast.scores, slow.scores, rtol=0, atol=0)
-    assert fast.exclude == slow.exclude
+    fitted = MrmrStep("Class", terms=sub, top_p=2, bins=6).prep(df)
+    want = oracles.mrmr_scores(pdf, sub, "Class", bins=6)
+    _scores_close(fitted.scores, want, rtol=1e-9)
 
 
-def test_mrmr_all_pairs_job_count(iris, monkeypatch):
-    """The fast path must launch a bounded number of Spark jobs regardless
-    of p: cut learning + relevance + ONE pairwise shuffle — not one job per
-    selected feature. (The per-iteration path launches ~p more.)"""
-    from recipeselectors_spark.operators import select_mrmr
-
-    pdf, df = iris
+def test_mrmr_all_pairs_job_count(cells):
+    """Redundancy is one all-pairs pass at every p: cut learning, cache,
+    relevance and ONE pairwise shuffle, with no per-selected-feature job —
+    so p = 16 launches exactly as many jobs as p = 4."""
+    pdf, df = cells
     sc = df.sparkSession.sparkContext
 
-    def n_jobs(group: str) -> int:
+    def n_jobs(p: int) -> int:
+        group = f"mrmr-p{p}"
+        terms = [f"x{i:02d}" for i in range(1, p + 1)]
         sc.setJobGroup(group, group)
         try:
-            MrmrStep("species", top_p=2, bins=10).prep(df)
+            MrmrStep("class", terms=terms, top_p=2, bins=10).prep(df)
         finally:
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    fast = n_jobs("mrmr-fast")
-    monkeypatch.setattr(select_mrmr, "ALL_PAIRS_MAX", 0)
-    slow = n_jobs("mrmr-slow")
-    # p=4: per-iteration runs 3 extra greedy-iteration shuffles
-    assert slow - fast >= 2, (fast, slow)
-    # cut learning + cache + relevance + ONE pairwise pass (some of these
-    # split into 2 jobs under AQE) — but never a per-feature term
-    assert fast <= 8, fast
+    small, large = n_jobs(4), n_jobs(16)
+    assert small == large, (small, large)
+    # some of the passes split into 2 jobs under AQE
+    assert small <= 8, small
 
 
 def test_xtab_fisher_beyond_dfs_budget_is_exact(spark):

@@ -407,10 +407,12 @@ def test_codec_roundtrip_properties():
     wav_roundtrip()
 
 
-def test_cap_buckets_bounds_degenerate_fanout(spark):
+def test_bucket_pairs_bounds_degenerate_fanout(spark):
     """50 identical docs put all ids in one LSH bucket per band — the
     uncapped join is quadratic; max_bucket drops the degenerate bucket
-    while distinct small-bucket pairs still surface."""
+    while distinct small-bucket pairs still surface. Covers every
+    bucketed pair operator: MinHash, SimHash (cap after its checkpoint)
+    and embedding hyperplanes (cap after its checkpoint)."""
     pdf = pd.DataFrame(
         {
             "doc_id": range(52),
@@ -420,13 +422,36 @@ def test_cap_buckets_bounds_degenerate_fanout(spark):
         }
     )
     df = spark.createDataFrame(pdf)
+
+    def clone_pairs(got):
+        return int(((got["id_a"] < 50) & (got["id_b"] < 50)).sum())
+
     capped = dedup.minhash_dedup_pairs(df, threshold=0.5, max_bucket=10).toPandas()
     # the giant bucket (50 ids) is dropped; the small pair (50, 51) survives
     assert (50, 51) in set(zip(capped["id_a"], capped["id_b"]))
-    assert not ((capped["id_a"] < 50) & (capped["id_b"] < 50)).any()
+    assert clone_pairs(capped) == 0
     # default (None) keeps everything: 50*49/2 pairs among the clones
     full = dedup.minhash_dedup_pairs(df, threshold=0.5).toPandas()
-    assert ((full["id_a"] < 50) & (full["id_b"] < 50)).sum() == 50 * 49 // 2
+    assert clone_pairs(full) == 50 * 49 // 2
+
+    capped = dedup.simhash_near_dup_pairs(df, max_bucket=10).toPandas()
+    assert (50, 51) in set(zip(capped["id_a"], capped["id_b"]))
+    assert clone_pairs(capped) == 0
+    full = dedup.simhash_near_dup_pairs(df).toPandas()
+    assert clone_pairs(full) == 50 * 49 // 2
+
+    rng = np.random.default_rng(5)
+    clone, other = rng.normal(size=8), rng.normal(size=8)
+    vecs = spark.createDataFrame(
+        [(i, [float(v) for v in (clone if i < 50 else other)]) for i in range(52)],
+        "vec_id long, embedding array<double>",
+    )
+    capped = dedup.embedding_near_dup_pairs(vecs, max_bucket=10).toPandas()
+    assert (50, 51) in set(zip(capped["id_a"], capped["id_b"]))
+    assert clone_pairs(capped) == 0
+    full = dedup.embedding_near_dup_pairs(vecs).toPandas()
+    assert clone_pairs(full) == 50 * 49 // 2
+    assert (full["cosine"] >= 0.95).all()
 
 
 def test_dedup_corpus_composition(docs):
