@@ -57,77 +57,59 @@ def entry(spark: SparkSession) -> DataFrame:
 # window / sessionize / rollup operators (operators/windows.py)
 # ---------------------------------------------------------------------------
 
+# the events' window: per user, ordered by (ts, event_id)
+_BY_USER = {"partition": "user_id", "order": ("ts", "event_id")}
+
+
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recipeselectors_spark.operators import windows as W
 
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev = W.with_lag_lead(_events(spark, sf_dir), "value", **_BY_USER)
     return ev.select(
         "user_id",
         "event_id",
-        F.lag("value", 1).over(w).alias("v_lag1"),
-        F.lead("value", 1).over(w).alias("v_lead1"),
+        F.col("value_lag1").alias("v_lag1"),
+        F.col("value_lead1").alias("v_lead1"),
     )
+
+
+def _purchase_fill(spark: SparkSession, sf_dir: str, fill, out: str) -> DataFrame:
+    """``fill`` (``windows.with_ffill`` or ``with_bfill``) of each user's
+    purchase values, NULL on every other event type."""
+    pv = _events(spark, sf_dir).withColumn(
+        "pv", F.when(F.col("event_type") == "purchase", F.col("value"))
+    )
+    return fill(pv, "pv", out, **_BY_USER).select("user_id", "event_id", out)
 
 
 def q_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).withColumn(
-        "pv", F.when(F.col("event_type") == "purchase", F.col("value"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.last("pv", ignorenulls=True).over(w).alias("purchase_ffill"),
-    )
+    from recipeselectors_spark.operators import windows as W
+
+    return _purchase_fill(spark, sf_dir, W.with_ffill, "purchase_ffill")
 
 
 def q_bfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward-fill: next purchase value from the current row onward."""
-    ev = _events(spark, sf_dir).withColumn(
-        "pv", F.when(F.col("event_type") == "purchase", F.col("value"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.first("pv", ignorenulls=True).over(w).alias("purchase_bfill"),
-    )
+    from recipeselectors_spark.operators import windows as W
+
+    return _purchase_fill(spark, sf_dir, W.with_bfill, "purchase_bfill")
 
 
 def q_rolling_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 10-minute time-range rolling aggregate (rangeBetween)."""
-    ev = _events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").cast("timestamp").cast("long"))
-        .rangeBetween(-600, 0)
-    )
+    from recipeselectors_spark.operators import windows as W
+
+    aggs = {"n_10min": F.count("*"), "sum_10min": F.sum("value")}
+    ev = W.with_rolling_time(_events(spark, sf_dir), 600, aggs, _BY_USER["partition"])
     return ev.select(
-        "user_id",
-        "event_id",
-        F.count("*").over(w).alias("n_10min"),
-        F.round(F.sum("value").over(w), ROUND).alias("sum_10min"),
+        "user_id", "event_id", "n_10min", F.round("sum_10min", ROUND).alias("sum_10min")
     )
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("timestamp").cast("long") - F.lag(F.col("ts").cast("timestamp").cast("long")).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 3600), 1).otherwise(0)
-    sess = ev.withColumn(
-        "session_id",
-        F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1,
-    )
+    from recipeselectors_spark.operators import windows as W
+
+    sess = W.with_session_id(_events(spark, sf_dir), gap_seconds=3600, **_BY_USER)
     return sess.groupBy(
         "user_id", F.col("session_id").cast("bigint").alias("session_id")
     ).agg(
@@ -137,16 +119,13 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-4, 0)
+    from recipeselectors_spark.operators import windows as W
+
+    ev = W.with_rolling_rows(
+        _events(spark, sf_dir), 5, {"roll_mean5": F.avg("value")}, **_BY_USER
     )
     return ev.select(
-        "user_id",
-        "event_id",
-        F.round(F.avg("value").over(w), ROUND).alias("roll_mean5"),
+        "user_id", "event_id", F.round("roll_mean5", ROUND).alias("roll_mean5")
     )
 
 
@@ -165,14 +144,12 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("value").desc(), F.col("event_id").asc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("user_id", "event_id", "value", F.col("rn").cast("bigint").alias("rn"))
+    from recipeselectors_spark.operators import windows as W
+
+    by_value = (F.col("value").desc(), F.col("event_id"))
+    top = W.top_k_per_group(_events(spark, sf_dir), 3, _BY_USER["partition"], by_value)
+    return top.select(
+        "user_id", "event_id", "value", F.col("rank").cast("bigint").alias("rn")
     )
 
 
@@ -656,7 +633,10 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 against query vec_id=0 (similarity-search
-    baseline; F.aggregate/zip_with dot product, JVM-side)."""
+    baseline; ``similarity.with_cosine``, JVM-side). One global
+    ``orderBy().limit(5)``: ``cosine_topk``'s per-query window would send
+    the whole corpus to one task."""
+    from recipeselectors_spark.operators import similarity as S
     from recipeselectors_spark.operators._parallel import ensure_parallelism
 
     emb = _embeddings(spark, sf_dir)
@@ -667,23 +647,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ensure_parallelism(
         emb.where(F.col("vec_id") != 0)
     ).crossJoin(F.broadcast(q))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda v: v.cast("double") * v.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    scored = joined.select(
-        "vec_id",
-        F.round(dot / (norm(F.col("embedding")) * norm(F.col("q_emb"))), 5).alias(
-            "cosine"
-        ),
+    scored = S.with_cosine(joined, "embedding", "q_emb").select(
+        "vec_id", F.round("cosine", 5).alias("cosine")
     )
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(5)
 
@@ -868,7 +833,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pdf = multimodal.synthesize_real_media_pandas(n=60)
     media = spark.createDataFrame(pdf, schema=multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_media_features(media, fake_decode=False)
+    out = multimodal.extract_media_features(media)
     return out.select(
         "media_id",
         "kind",

@@ -51,7 +51,6 @@ def punct_ratio(col: Column | str) -> Column:
 def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
     toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
     stops = F.array([F.lit(s) for s in STOPWORDS[lang]])
-    hits = F.size(F.array_intersect(toks, stops))
     # ratio of *distinct-stopword hits* would undercount; count memberships:
     member = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
     return member / F.greatest(F.size(toks), F.lit(1))

@@ -53,10 +53,7 @@ def assemble_features(
             W.epoch_s("ts") - F.lag(W.epoch_s("ts"), 1).over(w)
         ).cast("double"),
     )
-    df = df.withColumn(
-        "f_roll_mean_len",
-        F.avg("f_text_len").over(w.rowsBetween(-(rolling_n - 1), 0)),
-    )
+    df = W.with_rolling_rows(df, rolling_n, {"f_roll_mean_len": F.avg("f_text_len")})
     # sessionize + turn-within-session on the SAME conv_id partitioning
     # (f_sess_turn = rows since the latest session start), so no extra
     # (conv_id, session) exchange is needed

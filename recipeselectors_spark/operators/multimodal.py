@@ -7,7 +7,7 @@ functions/codecs.py). Compressed formats (PNG/JPEG, non-PCM audio) and video
 frame decode remain clearly-marked ``NotImplementedError`` stubs — those
 codecs aren't in this container. The Spark-side plumbing (schema contract,
 Arrow batch shape, ``mapInPandas`` partition flow, feature outputs) is real
-and tested in both modes.
+and tested on ``synthesize_real_media_pandas`` payloads.
 
 Schema contract for a media table:
     (media_id:long, kind:string, payload:binary,
@@ -61,63 +61,24 @@ def decode_media_batch(
     return feats, ok
 
 
-def decode_image_batch(payloads: pd.Series, fake: bool = False) -> np.ndarray:
-    """Byte-statistics pseudo-decode (``fake=True``) used by the plumbing
-    tests: deterministic, same output shape/dtype as the real path. With
-    ``fake=False`` this legacy entry point refuses — use
-    :func:`decode_media_batch` for real BMP/WAV decoding."""
-    if not fake:
-        raise NotImplementedError(
-            "decode_image_batch is the deterministic test stub; real "
-            "decoding lives in decode_media_batch (BMP/WAV via "
-            "functions/codecs.py; compressed formats remain stubbed)"
-        )
-    out = np.zeros((len(payloads), 8), dtype=np.float64)
-    for i, buf in enumerate(payloads):
-        if buf is None or len(buf) == 0:
-            continue
-        arr = np.frombuffer(bytes(buf), dtype=np.uint8).astype(np.float64)
-        out[i] = [
-            arr.mean(), arr.std(), arr.min(), arr.max(),
-            float(len(arr)),
-            float(arr[0]), float(arr[-1]),
-            float(np.bitwise_xor.reduce(arr.astype(np.uint8))),
-        ]
-    return out
-
-
-def extract_media_features(
-    media: DataFrame, batch_size: int = 256, fake_decode: bool = True
-) -> DataFrame:
-    """mapInPandas over the media table: Arrow batches in, per-item feature
-    vectors out. Partitioning: payloads stay where they are (no shuffle);
-    the UDF is a pure map."""
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """mapInPandas over the media table: Arrow batches in, one frame of
+    per-item feature vectors out per batch (``decode_media_batch``).
+    Partitioning: payloads stay where they are (no shuffle); the UDF is a
+    pure map."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                if fake_decode:
-                    feats = decode_image_batch(chunk["payload"], fake=True)
-                    ok = [
-                        b is not None and len(b) > 0 for b in chunk["payload"]
-                    ]
-                else:
-                    feats, ok = decode_media_batch(
-                        chunk["payload"], chunk["kind"]
-                    )
-                    ok = list(ok)
-                yield pd.DataFrame(
-                    {
-                        "media_id": chunk["media_id"].values,
-                        "kind": chunk["kind"].values,
-                        "n_bytes": [
-                            0 if b is None else len(b) for b in chunk["payload"]
-                        ],
-                        "feat": [row.tolist() for row in feats],
-                        "decode_ok": ok,
-                    }
-                )
+            feats, ok = decode_media_batch(pdf["payload"], pdf["kind"])
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"].values,
+                    "kind": pdf["kind"].values,
+                    "n_bytes": [0 if b is None else len(b) for b in pdf["payload"]],
+                    "feat": [row.tolist() for row in feats],
+                    "decode_ok": ok,
+                }
+            )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
@@ -161,30 +122,4 @@ def synthesize_real_media_pandas(n: int = 24, seed: int = 33) -> pd.DataFrame:
                 "n_frames": int(rng.integers(30, 300)),
             }
         rows.append((i, kind, bytearray(payload), meta))
-    return pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-
-def synthesize_media_pandas(n: int = 64, seed: int = 21) -> pd.DataFrame:
-    """Deterministic fake media table for tests."""
-    rng = np.random.default_rng(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = rng.integers(0, 256, size=int(rng.integers(16, 256))).astype(
-            np.uint8
-        ).tobytes()
-        rows.append(
-            (
-                i,
-                kind,
-                bytearray(payload),
-                {
-                    "width": 64 if kind == "image" else None,
-                    "height": 64 if kind == "image" else None,
-                    "sample_rate": 16000 if kind == "audio" else None,
-                    "n_frames": int(rng.integers(30, 300)) if kind == "video" else None,
-                },
-            )
-        )
     return pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])

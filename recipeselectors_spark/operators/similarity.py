@@ -11,14 +11,17 @@
   driver sample, each vector assigned to its nearest centroid (one pass);
   queries probe ``nprobe`` nearest centroids only.
 
-All three, and ``bm25.bm25_topk``, end in ``top_k_per_query``: the one
-per-query rank window (score descending, id ascending on ties).
+All three, and ``bm25.bm25_topk``, end in ``top_k_per_query``: the
+per-query form of ``windows.top_k_per_group`` (score descending, id
+ascending on ties).
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
+
+from recipeselectors_spark.operators import windows as W
 
 __all__ = [
     "top_k_per_query",
@@ -64,21 +67,12 @@ def top_k_per_query(
 ) -> DataFrame:
     """The one per-query rank tail: ``(query_id_col, id_col, score_col,
     rank)``, rank 1..k per query by ``score_col`` descending, ties broken
-    by ``id_col`` ascending so results are total-ordered and reproducible.
-    One ``row_number`` window partitioned by query: one exchange on the
-    query id, then a sort within each query. "Top-k Sorting Under Partial
-    Order Information" (SIGMOD 2018) is the reference for any cheaper
-    per-query selection."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col)
+    by ``id_col`` ascending so results are total-ordered and reproducible
+    (``windows.top_k_per_group`` with the query as the group)."""
+    top = W.top_k_per_group(
+        scored, k, query_id_col, (F.col(score_col).desc(), F.col(id_col))
     )
-    return (
-        scored.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, score_col, F.col("__rn__").alias("rank"))
-    )
+    return top.select(query_id_col, id_col, score_col, "rank")
 
 
 def cosine_topk(

@@ -5,14 +5,17 @@ backward fill, rolling aggregates, gap-based sessionization, stable-ordering
 dedup and per-group top-k — all pure Catalyst window expressions (JVM,
 whole-stage codegen; no Python in any hot path).
 
-Ordering invariant: every window orders by ``(ts, turn_idx)`` — the
-input_hint's "stable turn ordering". Partitioning is by ``conv_id``; at
-10^12-turn scale one conversation is the locality unit (conversations are
-never split; skewed/hot conversations are handled in the as-of layer's shard
-map, operators/asof.py).
+Ordering: the row-ordered operators take ``order``, which defaults to
+``ORDER = (ts, turn_idx)`` — the input_hint's "stable turn ordering". The
+driver's event queries pass ``("ts", "event_id")`` with ``partition=
+"user_id"``. Partitioning defaults to ``conv_id``; at 10^12-turn scale one
+conversation is the locality unit (conversations are never split; skewed/hot
+conversations are handled in the as-of layer's shard map, operators/asof.py).
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window, WindowSpec
@@ -25,71 +28,96 @@ def epoch_s(col):
     """Seconds since epoch for timestamp OR timestamp_ntz columns (Spark 4
     forbids a direct NTZ→long cast; under a UTC session timezone the
     double-cast is exact)."""
-    from pyspark.sql import Column, functions as F
-
     c = col if isinstance(col, Column) else F.col(col)
     return c.cast("timestamp").cast("long")
 
 
-def turn_window(partition: str = CONV) -> WindowSpec:
-    return Window.partitionBy(partition).orderBy(*ORDER)
+def turn_window(partition: str = CONV, order: Sequence = ORDER) -> WindowSpec:
+    return Window.partitionBy(partition).orderBy(*order)
 
 
 def with_lag_lead(
-    df: DataFrame, col: str, ks: tuple[int, ...] = (1,), partition: str = CONV
+    df: DataFrame,
+    col: str,
+    ks: tuple[int, ...] = (1,),
+    partition: str = CONV,
+    order: Sequence = ORDER,
 ) -> DataFrame:
-    w = turn_window(partition)
+    w = turn_window(partition, order)
+    out = {}
     for k in ks:
-        df = df.withColumn(f"{col}_lag{k}", F.lag(col, k).over(w))
-        df = df.withColumn(f"{col}_lead{k}", F.lead(col, k).over(w))
-    return df
+        out[f"{col}_lag{k}"] = F.lag(col, k).over(w)
+        out[f"{col}_lead{k}"] = F.lead(col, k).over(w)
+    return df.withColumns(out)
 
 
-def with_ffill(df: DataFrame, col: str, out: str | None = None, partition: str = CONV) -> DataFrame:
+def with_ffill(
+    df: DataFrame,
+    col: str,
+    out: str | None = None,
+    partition: str = CONV,
+    order: Sequence = ORDER,
+) -> DataFrame:
     """Forward-fill: last non-null up to current row."""
-    w = turn_window(partition).rowsBetween(Window.unboundedPreceding, 0)
+    w = turn_window(partition, order).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn(out or f"{col}_ffill", F.last(col, ignorenulls=True).over(w))
 
 
-def with_bfill(df: DataFrame, col: str, out: str | None = None, partition: str = CONV) -> DataFrame:
+def with_bfill(
+    df: DataFrame,
+    col: str,
+    out: str | None = None,
+    partition: str = CONV,
+    order: Sequence = ORDER,
+) -> DataFrame:
     """Backward-fill: first non-null from current row onward."""
-    w = turn_window(partition).rowsBetween(0, Window.unboundedFollowing)
+    w = turn_window(partition, order).rowsBetween(0, Window.unboundedFollowing)
     return df.withColumn(out or f"{col}_bfill", F.first(col, ignorenulls=True).over(w))
 
 
-def with_rolling_time(
+def with_rolling_rows(
     df: DataFrame,
-    col: str,
-    seconds: int,
-    agg: str = "avg",
-    out: str | None = None,
+    n: int,
+    aggs: Mapping[str, Column],
     partition: str = CONV,
+    order: Sequence = ORDER,
 ) -> DataFrame:
-    """Rolling aggregate over a trailing time range (rangeBetween on epoch)."""
+    """Rolling aggregates over the current row and the ``n - 1`` before it;
+    ``aggs`` maps each output name to its aggregate. All of them share one
+    window frame, so they run in one ``Window`` node."""
+    w = turn_window(partition, order).rowsBetween(-(n - 1), 0)
+    return df.withColumns({name: a.over(w) for name, a in aggs.items()})
+
+
+def with_rolling_time(
+    df: DataFrame, seconds: int, aggs: Mapping[str, Column], partition: str = CONV
+) -> DataFrame:
+    """Rolling aggregates over a trailing time range (rangeBetween on epoch
+    seconds of ``ts``); ``aggs`` maps each output name to its aggregate, all
+    computed in one ``Window`` node."""
     w = (
         Window.partitionBy(partition)
         .orderBy(epoch_s("ts"))
         .rangeBetween(-seconds, 0)
     )
-    fn = getattr(F, agg)
-    return df.withColumn(out or f"{col}_roll{seconds}s_{agg}", fn(col).over(w))
+    return df.withColumns({name: a.over(w) for name, a in aggs.items()})
 
 
 def with_session_id(
-    df: DataFrame, gap_seconds: int = 1800, out: str = "session_id", partition: str = CONV
+    df: DataFrame,
+    gap_seconds: int = 1800,
+    out: str = "session_id",
+    partition: str = CONV,
+    order: Sequence = ORDER,
 ) -> DataFrame:
     """Gap-based sessionization: a new session starts when the gap since the
-    previous turn exceeds ``gap_seconds``. session_id = running count of
-    session starts (0-based within conversation)."""
-    w = turn_window(partition)
+    previous row exceeds ``gap_seconds``. session_id = running count of
+    session starts (0-based within the partition)."""
+    w = turn_window(partition, order)
     gap = epoch_s("ts") - F.lag(epoch_s("ts")).over(w)
     new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    cum = Window.partitionBy(partition).orderBy(*ORDER).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return df.withColumn("__new_sess__", new_sess).withColumn(
-        out, F.sum("__new_sess__").over(cum) - 1
-    ).drop("__new_sess__")
+    cum = w.rowsBetween(Window.unboundedPreceding, 0)
+    return df.withColumn(out, F.sum(new_sess).over(cum) - 1)
 
 
 def dedup_turns(df: DataFrame, partition: str = CONV) -> DataFrame:
@@ -111,15 +139,16 @@ def dedup_turns(df: DataFrame, partition: str = CONV) -> DataFrame:
 
 
 def top_k_per_group(
-    df: DataFrame, k: int, order_col: str, ascending: bool = False, partition: str = CONV
+    df: DataFrame, k: int, partition: str, order: Sequence
 ) -> DataFrame:
-    oc = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    w = Window.partitionBy(partition).orderBy(oc, *[F.col(c) for c in ORDER])
-    return (
-        df.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .drop("__rn__")
-    )
+    """The first ``k`` rows of each ``partition`` group by ``order`` (names
+    or sort Columns; end it with a unique key for a total order), with their
+    1-based ``rank``. One ``row_number`` window: one exchange on the group
+    key, then a sort within each group. "Top-k Sorting Under Partial Order
+    Information" (SIGMOD 2018) is the reference for any cheaper per-group
+    selection."""
+    w = Window.partitionBy(partition).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def conversation_rollup(df: DataFrame, partition: str = CONV) -> DataFrame:

@@ -8,7 +8,7 @@ multi-turn conversation / agent transcripts:
 
 Locally that is parquet with the same schema. Two providers:
 
-* ``synthesize_transcripts`` — a deterministic seeded generator
+* ``synthesize_transcripts_pandas`` — a deterministic seeded generator
   (FIXTURES.md F1): Zipf-skewed conversation lengths (hot conversations to
   exercise salting / skew split), sparse ``tool`` values (to exercise
   ffill/backfill), session-sized time gaps, out-of-order on-disk row order
@@ -95,11 +95,6 @@ def synthesize_transcripts_pandas(
     pdf = pdf.sample(frac=1.0, random_state=seed + 1).reset_index(drop=True)
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     return pdf
-
-
-def synthesize_transcripts(spark: SparkSession, **kwargs) -> DataFrame:
-    pdf = synthesize_transcripts_pandas(**kwargs)
-    return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
 
 
 def synthesize_transcripts_distributed(

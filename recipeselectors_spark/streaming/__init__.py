@@ -154,27 +154,3 @@ def streaming_near_dup_flags(
         .where(F.col(id_col) != F.col("dup_of"))
         .select(id_col, "band", "bucket", "dup_of")
     )
-
-
-def streaming_quality_filter(
-    stream: DataFrame,
-    text_col: str = "text",
-    rules=None,
-    keep_reasons: bool = False,
-) -> DataFrame:
-    """Gopher/C4 quality filtering on a stream — the ingest-time gate.
-
-    ``operators.quality_filter.quality_flags`` is a single STATELESS
-    Catalyst projection (no shuffle, no state store, no watermark needed),
-    so it applies to a streaming DataFrame unchanged: every micro-batch is
-    filtered row-by-row at whole-stage-codegen speed, the shape you want
-    at the front of an ingest pipeline (drop junk BEFORE it costs dedup
-    state or storage). ``keep_reasons=True`` keeps dropped rows too, with
-    ``kept``/``drop_reasons`` columns — route that to a rejects sink for
-    filter-rate monitoring."""
-    from recipeselectors_spark.operators.quality_filter import quality_flags
-
-    flagged = quality_flags(stream, text_col=text_col, rules=rules)
-    if keep_reasons:
-        return flagged
-    return flagged.where(F.col("kept")).drop("kept", "drop_reasons")

@@ -237,12 +237,15 @@ def test_streaming_near_dup_flags(spark, tmp_path):
 
 
 def test_streaming_quality_filter(spark, tmp_path):
-    """streaming_quality_filter: the stateless Gopher/C4 gate runs on a
-    real streaming query — a good document passes, a too-short and a
-    gibberish (no-stopword) document are dropped; keep_reasons mode
-    surfaces the per-rule reasons instead of dropping."""
-    from recipeselectors_spark.operators.quality_filter import QualityRules
-    from recipeselectors_spark.streaming import streaming_quality_filter
+    """quality_filter / quality_flags are stateless projections, so the
+    Gopher/C4 gate runs unchanged on a real streaming query — a good
+    document passes, a too-short and a gibberish (no-stopword) document are
+    dropped; quality_flags surfaces the per-rule reasons instead."""
+    from recipeselectors_spark.operators.quality_filter import (
+        QualityRules,
+        quality_filter,
+        quality_flags,
+    )
 
     good = (
         "the quick brown fox jumps over the lazy dog and then it runs to "
@@ -264,7 +267,7 @@ def test_streaming_quality_filter(spark, tmp_path):
 
     stream = spark.readStream.schema(schema).parquet(str(d / "b*"))
     rules = QualityRules(min_tokens=20, max_pii=None)
-    out = streaming_quality_filter(stream, rules=rules)
+    out = quality_filter(stream, rules=rules)
     q = (
         out.writeStream.format("memory")
         .queryName("quality_stream")
@@ -278,7 +281,7 @@ def test_streaming_quality_filter(spark, tmp_path):
     assert got["doc_id"].tolist() == ["good"]
     assert set(got.columns) == {"doc_id", "text"}  # flags dropped
 
-    flagged = streaming_quality_filter(stream, rules=rules, keep_reasons=True)
+    flagged = quality_flags(stream, rules=rules)
     q2 = (
         flagged.writeStream.format("memory")
         .queryName("quality_stream_flagged")

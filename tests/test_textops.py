@@ -252,24 +252,18 @@ def test_ivf_topk_runs(spark, emb):
 # -- multimodal ------------------------------------------------------------
 
 def test_multimodal_plumbing(spark):
-    pdf = multimodal.synthesize_media_pandas(n=30)
+    pdf = multimodal.synthesize_real_media_pandas(n=30)
     df = spark.createDataFrame(pdf, schema=multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_media_features(df, fake_decode=True).toPandas()
+    out = multimodal.extract_media_features(df).toPandas()
     assert len(out) == 30
-    assert out["decode_ok"].all()
+    # BMP/WAV decode; video frame decode is stubbed
+    assert (out["decode_ok"] == (out["kind"] != "video")).all()
     assert all(len(f) == 8 for f in out["feat"])
     # determinism
-    out2 = multimodal.extract_media_features(df, fake_decode=True).toPandas()
+    out2 = multimodal.extract_media_features(df).toPandas()
     a = out.sort_values("media_id").reset_index(drop=True)
     b = out2.sort_values("media_id").reset_index(drop=True)
     assert all(np.allclose(x, y) for x, y in zip(a["feat"], b["feat"]))
-
-
-def test_multimodal_real_decode_is_stubbed():
-    import pandas as pd
-
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_batch(pd.Series([b"abc"]), fake=False)
 
 
 def test_bmp_codec_roundtrip_and_features():
@@ -316,7 +310,7 @@ def test_multimodal_real_decode_end_to_end(spark):
     through the mapInPandas plumbing; video rows stay stubbed (ok=False)."""
     pdf = multimodal.synthesize_real_media_pandas(n=24)
     df = spark.createDataFrame(pdf, schema=multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_media_features(df, fake_decode=False).toPandas()
+    out = multimodal.extract_media_features(df).toPandas()
     by_kind = out.groupby("kind")["decode_ok"].all()
     assert by_kind["image"] and by_kind["audio"]
     assert not out[out["kind"] == "video"]["decode_ok"].any()
@@ -327,7 +321,7 @@ def test_multimodal_real_decode_end_to_end(spark):
 
 
 def test_frame_sample_plan(spark):
-    pdf = multimodal.synthesize_media_pandas(n=12)
+    pdf = multimodal.synthesize_real_media_pandas(n=12)
     df = spark.createDataFrame(pdf, schema=multimodal.MEDIA_SCHEMA)
     plan = multimodal.frame_sample_plan(df, every_n=10, max_frames=4).toPandas()
     assert (plan["frame_indices"].map(len) <= 4).all()

@@ -1,5 +1,8 @@
-"""Window-operator API coverage: lag/lead helper, time-range rolling,
-per-group top-k, GBT importances through the registry, VIP regression."""
+"""Window-operator API coverage: lag/lead helper, time-range and row
+rolling, the ``order`` parameter, per-group top-k, GBT importances through
+the registry, VIP regression."""
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -33,7 +36,7 @@ def test_with_lag_lead_multi_k(tx):
 
 def test_with_rolling_time(tx):
     out = (
-        W.with_rolling_time(tx, "text_len", seconds=120, agg="count")
+        W.with_rolling_time(tx, 120, {"n_120s": F.count("text_len")})
         .where("conv_id = 'conv-000003'")
         .orderBy("ts", "turn_idx")
         .toPandas()
@@ -43,19 +46,90 @@ def test_with_rolling_time(tx):
     want = [
         int(((sec >= s - 120) & (sec <= s)).sum()) for s in sec
     ]
-    assert out["text_len_roll120s_count"].tolist() == want
+    assert out["n_120s"].tolist() == want
+
+
+def test_with_rolling_time_aggregates_share_one_window(tx):
+    out = W.with_rolling_time(
+        tx, 120, {"n_120s": F.count("text_len"), "sum_120s": F.sum("text_len")}
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"(?m)^[\s+:*-]*Window \[", plan)) == 1
+    got = out.where("conv_id = 'conv-000003'").orderBy("ts", "turn_idx").toPandas()
+    sec = got["ts"].values.astype("datetime64[s]").astype("int64")
+    lens = got["text_len"].values
+    inside = [(sec >= s - 120) & (sec <= s) for s in sec]
+    assert got["n_120s"].tolist() == [int(m.sum()) for m in inside]
+    np.testing.assert_allclose(got["sum_120s"], [lens[m].sum() for m in inside])
+
+
+def test_with_rolling_rows(tx):
+    out = (
+        W.with_rolling_rows(tx, 3, {"mean3": F.avg("text_len")})
+        .orderBy("conv_id", "ts", "turn_idx")
+        .toPandas()
+    )
+    want = out.groupby("conv_id")["text_len"].transform(
+        lambda s: s.rolling(3, min_periods=1).mean()
+    )
+    np.testing.assert_allclose(out["mean3"], want)
+
+
+def test_order_breaks_ts_ties_on_events(spark):
+    """Events-shaped frame (user_id, ts, event_id) whose ts ties are broken
+    by event_id, against pandas sorted the same way."""
+    rng = np.random.default_rng(5)
+    n = 60
+    pdf = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 3, n),
+            # few distinct timestamps: most rows tie on ts
+            "ts": pd.Timestamp("2026-01-01")
+            + pd.to_timedelta(rng.integers(0, 4, n) * 3000, unit="s"),
+            "event_id": rng.permutation(n),
+            "value": np.where(rng.random(n) < 0.5, np.nan, rng.random(n)),
+        }
+    )
+    by_user = {"partition": "user_id", "order": ("ts", "event_id")}
+    df = spark.createDataFrame(pdf)
+    df = W.with_lag_lead(df, "value", **by_user)
+    df = W.with_ffill(df, "value", **by_user)
+    df = W.with_session_id(df, gap_seconds=3600, **by_user)
+    df = W.with_rolling_rows(df, 2, {"first2": F.first("event_id")}, **by_user)
+    got = df.orderBy("user_id", "ts", "event_id").toPandas()
+
+    want = pdf.sort_values(["user_id", "ts", "event_id"]).reset_index(drop=True)
+    g = want.groupby("user_id")
+    want["value_lag1"] = g["value"].shift(1)
+    want["value_lead1"] = g["value"].shift(-1)
+    want["value_ffill"] = g["value"].ffill()
+    gap = g["ts"].diff().dt.total_seconds()
+    want["session_id"] = (gap.isna() | (gap > 3600)).astype(int).groupby(
+        want["user_id"]
+    ).cumsum() - 1
+    want["first2"] = g["event_id"].shift(1).fillna(want["event_id"])
+
+    assert got["event_id"].tolist() == want["event_id"].tolist()
+    for c in ("value_lag1", "value_lead1", "value_ffill"):
+        np.testing.assert_array_equal(got[c].to_numpy(float), want[c].to_numpy(float))
+    assert got["session_id"].tolist() == want["session_id"].tolist()
+    assert got["first2"].tolist() == want["first2"].astype(int).tolist()
 
 
 def test_top_k_per_group(tx):
-    out = W.top_k_per_group(tx, k=2, order_col="text_len").toPandas()
+    out = W.top_k_per_group(
+        tx, 2, W.CONV, (F.col("text_len").desc(), *W.ORDER)
+    ).toPandas()
     assert (out.groupby("conv_id").size() <= 2).all()
-    # each kept row is among that conversation's top-2 lengths
+    # each kept row is among that conversation's top-2 lengths, ranked 1, 2
     full = tx.toPandas()
     for conv, g in out.groupby("conv_id"):
         top2 = full[full["conv_id"] == conv]["text"].str.len().nlargest(2).tolist()
         assert sorted(g["text_len"], reverse=True) == sorted(
             [float(v) for v in top2], reverse=True
         )
+        assert g.sort_values("rank")["text_len"].is_monotonic_decreasing
+        assert sorted(g["rank"]) == list(range(1, len(g) + 1))
 
 
 def test_gbt_importances_via_vip(spark):
