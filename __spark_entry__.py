@@ -25,7 +25,6 @@ import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -155,15 +154,13 @@ def q_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable-ordering dedup of duplicate (user, minute-bucket) rows."""
+    from recipeselectors_spark.operators import windows as W
+
     ev = _events(spark, sf_dir).withColumn(
         "minute", F.date_trunc("minute", F.col("ts"))
     )
-    w = Window.partitionBy("user_id", "minute").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "minute", "event_id")
-    )
+    first = W.top_k_per_group(ev, 1, ["user_id", "minute"], _BY_USER["order"])
+    return first.select("user_id", "minute", "event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -336,6 +333,18 @@ FROM spine s ASOF LEFT JOIN feats f
 # selection-step scoring (distributed operators → tiny score frames)
 # ---------------------------------------------------------------------------
 
+def _score_frame(
+    spark: SparkSession,
+    scores: dict[str, float],
+    col: str,
+    rnd: Callable[[float], float] = lambda v: round(v, ROUND),
+) -> DataFrame:
+    """One ``(feature, <col>)`` row per score, sorted by feature, each value
+    passed through ``rnd``."""
+    rows = [(k, rnd(v)) for k, v in sorted(scores.items())]
+    return spark.createDataFrame(rows, f"feature string, {col} double")
+
+
 def _feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     return ev.select(
@@ -351,8 +360,7 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = _feature_frame(spark, sf_dir)
     fitted = RocStep("y", terms=["value", "props_len"], top_p=1).prep(df)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, auc double")
+    return _score_frame(spark, fitted.scores, "auc")
 
 
 _ROC_ORACLE = f"""
@@ -393,8 +401,7 @@ def q_infgain_equalfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted = InfGainStep(
         "y", terms=["value"], threshold=0.5, equal=True, bins=4
     ).prep(df)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, infogain double")
+    return _score_frame(spark, fitted.scores, "infogain")
 
 
 _INFGAIN_ORACLE = f"""
@@ -503,11 +510,11 @@ def q_chi2_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pdf = _scoring.nominal_contingency(ev, ["event_type", "value_bucket"], "y")
     tables = _scoring.joint_tables(pdf)
-    rows = []
-    for feat in sorted(tables):
-        stat, _ = stats.chi2_stat(tables[feat], correction=False)
-        rows.append((feat, round(float(stat), ROUND)))
-    return spark.createDataFrame(rows, "feature string, chi2 double")
+    chi2 = {
+        feat: float(stats.chi2_stat(t, correction=False)[0])
+        for feat, t in tables.items()
+    }
+    return _score_frame(spark, chi2, "chi2")
 
 
 _CHI2_ORACLE = f"""
@@ -552,22 +559,22 @@ FROM full_cells GROUP BY feature ORDER BY feature
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup, BOTH strategies in one output and cross-checked against
-    each other: the hash-groupBy aggregate (keep_doc_id = min doc_id,
-    n_copies) joined with the window keep-first operator
-    (dedup.drop_exact_duplicates -> kept_doc_id). The join key makes any
-    disagreement between the two plans a row-count mismatch."""
+    each other: the hash-groupBy aggregate (dedup.dedup_exact -> keep_doc_id
+    = min doc_id, n_copies) joined with the window keep-first operator
+    (dedup.drop_exact_duplicates -> text_hash, kept_doc_id) on the kept id.
+    Each text keeps one id under each strategy, so any disagreement between
+    the two plans drops that text's row: a row-count mismatch. (A NULL-text
+    group would survive this join where the oracle's hash join drops it;
+    the driver's documents hold no NULL text.)"""
     from recipeselectors_spark.operators import dedup as D
 
     docs = _documents(spark, sf_dir)
-    agg = (
-        docs.withColumn("text_hash", F.md5(F.col("text")))
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies"))
-    )
+    agg = D.dedup_exact(docs).withColumnRenamed("doc_id", "keep_doc_id")
     kept = D.drop_exact_duplicates(docs).select(
         F.md5("text").alias("text_hash"), F.col("doc_id").alias("kept_doc_id")
     )
-    return agg.join(kept, "text_hash")
+    joined = agg.join(kept, F.col("keep_doc_id") == F.col("kept_doc_id"))
+    return joined.select("text_hash", "keep_doc_id", "n_copies", "kept_doc_id")
 
 
 _CHUNK_TOKENS = 16
@@ -862,6 +869,18 @@ def q_assemble_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _mdl_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The frame of both MDL queries: value, props_len and y."""
+    ev = _events(spark, sf_dir)
+    return ev.select(
+        F.col("value").cast("double").alias("value"),
+        F.length("props").cast("double").alias("props_len"),
+        F.when(F.floor(F.col("value") * 3) % 2 == 0, "pos")
+        .otherwise("neg")
+        .alias("y"),
+    )
+
+
 def q_infgain_mdl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MDL-discretized information gain (FSelectorRcpp default semantics,
     equal=FALSE -> Fayyad-Irani MDLP). The outcome is a deterministic
@@ -872,17 +891,9 @@ def q_infgain_mdl(spark: SparkSession, sf_dir: str) -> DataFrame:
     info gain."""
     from recipeselectors_spark.operators import InfGainStep
 
-    ev = _events(spark, sf_dir)
-    df = ev.select(
-        F.col("value").cast("double").alias("value"),
-        F.length("props").cast("double").alias("props_len"),
-        F.when(F.floor(F.col("value") * 3) % 2 == 0, "pos")
-        .otherwise("neg")
-        .alias("y"),
-    )
+    df = _mdl_frame(spark, sf_dir)
     fitted = InfGainStep("y", terms=["value", "props_len"], top_p=1).prep(df)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, infogain double")
+    return _score_frame(spark, fitted.scores, "infogain")
 
 
 def q_infgain_mdl_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,14 +911,7 @@ def q_infgain_mdl_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     red on a larger driver SF."""
     from recipeselectors_spark.operators import InfGainStep
 
-    ev = _events(spark, sf_dir)
-    df = ev.select(
-        F.col("value").cast("double").alias("value"),
-        F.length("props").cast("double").alias("props_len"),
-        F.when(F.floor(F.col("value") * 3) % 2 == 0, "pos")
-        .otherwise("neg")
-        .alias("y"),
-    )
+    df = _mdl_frame(spark, sf_dir)
     bins = (
         df.select(
             F.greatest(
@@ -920,8 +924,7 @@ def q_infgain_mdl_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y", terms=["value", "props_len"], top_p=1,
         mdl_gate_distinct=0, mdl_prebucket_bins=bins,
     ).prep(df)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, infogain double")
+    return _score_frame(spark, fitted.scores, "infogain")
 
 
 def q_mrmr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,8 +935,7 @@ def q_mrmr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = _feature_frame(spark, sf_dir)
     fitted = MrmrStep("y", terms=["value", "props_len"], top_p=1, bins=4).prep(df)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, mrmr double")
+    return _score_frame(spark, fitted.scores, "mrmr")
 
 
 def q_carscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -999,8 +1001,7 @@ def q_linear_reg_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted = LinearStep(
         "l_extendedprice", terms=["l_quantity", "l_discount"], top_p=1
     ).prep(li)
-    rows = [(k, _sig_round(v)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, abs_coef double")
+    return _score_frame(spark, fitted.scores, "abs_coef", _sig_round)
 
 
 def q_linear_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,8 +1025,7 @@ def q_linear_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fitted = rec.prep(df)
     scores = fitted.steps[-1].scores
-    rows = [(k, round(v, ROUND)) for k, v in sorted(scores.items())]
-    return spark.createDataFrame(rows, "feature string, abs_coef double")
+    return _score_frame(spark, scores, "abs_coef")
 
 
 def q_forest_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1070,10 +1070,9 @@ def q_forest_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = abs(fitted.extras["baseline_metric"])
     # + 0.0 folds IEEE -0.0 (a rounded tiny-negative noise delta) to +0.0
     # so the value hash can't diverge from the oracle's sign of zero
-    rows = [
-        (k, round(v / base, 9) + 0.0) for k, v in sorted(fitted.scores.items())
-    ]
-    return spark.createDataFrame(rows, "feature string, rel_importance double")
+    return _score_frame(
+        spark, fitted.scores, "rel_importance", lambda v: round(v / base, 9) + 0.0
+    )
 
 
 def _forest_perm_oracle() -> str:
@@ -1716,8 +1715,7 @@ def q_tree_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         tree_depth=1,
         max_bins=1000,
     ).prep(li)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, importance double")
+    return _score_frame(spark, fitted.scores, "importance")
 
 
 _TREE_ORACLE = """
@@ -1803,8 +1801,7 @@ def q_vip_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms=["l_quantity", "l_discount", "l_tax"],
         top_p=1,
     ).prep(li)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, importance double")
+    return _score_frame(spark, fitted.scores, "importance")
 
 
 def q_vip_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1828,8 +1825,7 @@ def q_vip_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms=["l_quantity", "l_discount"],
         top_p=1,
     ).prep(li)
-    rows = [(k, round(v, ROUND)) for k, v in sorted(fitted.scores.items())]
-    return spark.createDataFrame(rows, "feature string, importance double")
+    return _score_frame(spark, fitted.scores, "importance")
 
 
 _BORUTA_BIAS = {"value": 1.0, "props_len": -0.5, "value_sq": 0.3}

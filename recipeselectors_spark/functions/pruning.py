@@ -41,6 +41,15 @@ def _is_na(x) -> bool:
     return x is None or (isinstance(x, float) and math.isnan(x))
 
 
+def criteria_params(top_p, threshold) -> dict:
+    """A fit's recorded prune criteria: ``{"top_p", "threshold"}`` with NA
+    as ``None``."""
+    return {
+        "top_p": None if _is_na(top_p) else top_p,
+        "threshold": None if _is_na(threshold) else threshold,
+    }
+
+
 def check_zero_one(threshold) -> float | None:
     """misc.R:1-14 — threshold must lie strictly inside (0, 1); NA passes."""
     if _is_na(threshold):

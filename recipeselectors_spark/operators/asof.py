@@ -33,7 +33,8 @@ import warnings
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
+
+from recipeselectors_spark.operators import windows as W
 
 CONV = "conv_id"
 
@@ -82,12 +83,6 @@ def asof_join_union(
         f.select(*spine_cols, "__side__", *value_cols)
     )
 
-    # features sort before spine rows at equal ts => exact matches visible
-    w = (
-        Window.partitionBy(on)
-        .orderBy(F.col(ts), F.col("__side__"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
     # NULL for spine rows => last(ignorenulls) lands on the latest feature
     # ROW; the struct is non-null for every feature row even when its value
     # fields are null, so those nulls are carried intact. The feature ts
@@ -98,15 +93,15 @@ def asof_join_union(
     if tolerance_s is not None:
         payload_fields.insert(0, F.col(ts).alias("__fts__"))
     payload = F.when(F.col("__side__") == 0, F.struct(*payload_fields))
-    out = unioned.withColumn(
-        "__carry__", F.last(payload, ignorenulls=True).over(w)
+    # the forward fill orders features before spine rows at equal ts, so
+    # exact matches are visible
+    out = W.with_ffill(
+        unioned.withColumn("__payload__", payload), "__payload__", "__carry__",
+        partition=on, order=(ts, "__side__"),
     )
     keep = F.lit(True)
     if tolerance_s is not None:
-        age = (
-            F.col(ts).cast("timestamp").cast("long")
-            - F.col("__carry__")["__fts__"].cast("timestamp").cast("long")
-        )
+        age = W.epoch_s(ts) - W.epoch_s(F.col("__carry__")["__fts__"])
         keep = age <= tolerance_s
         if ungated_suffix is not None:
             for c in value_cols:
@@ -118,7 +113,8 @@ def asof_join_union(
             c, F.when(keep, F.col("__carry__")[c]).otherwise(F.lit(None))
         )
     return (
-        out.where(F.col("__side__") == 1).drop("__side__", "__carry__")
+        out.where(F.col("__side__") == 1)
+        .drop("__side__", "__payload__", "__carry__")
     )
 
 

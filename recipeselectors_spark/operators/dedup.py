@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
 from recipeselectors_spark.functions import text as TX
+from recipeselectors_spark.operators import windows as W
 
 # 2^31-1: products of two residues stay < 2^62, safe for int64 under the
 # ANSI overflow checks Spark 4 enables by default
@@ -145,16 +146,13 @@ def minhash_candidates(
 def drop_exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Keep ONE representative (smallest id) per exact text hash — a single
-    md5-partitioned window (one exchange), no join back."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
-    return (
-        df.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") == 1)
-        .drop("__rn__")
-    )
+    """Keep ONE whole row (smallest id) per exact text hash —
+    ``windows.top_k_per_group`` with k = 1 on ``md5(text)``: a single
+    md5-partitioned window (one exchange), no join back. NULL texts form
+    one group. An input column named ``rank`` is overwritten by the window's
+    and dropped with it."""
+    kept = W.top_k_per_group(df, 1, F.md5(F.col(text_col)), (id_col,))
+    return kept.drop("rank")
 
 
 def dedup_corpus(

@@ -11,13 +11,12 @@ maximize). Predictors should be normalized first — the reference's test does
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.regression import LinearRegression
 from pyspark.sql import DataFrame
 
+from recipeselectors_spark.functions import pruning
 from recipeselectors_spark.operators import _mllib
 from recipeselectors_spark.operators.importance import pull_importances
 from recipeselectors_spark.plans.step import SelectionStep
@@ -71,16 +70,13 @@ class LinearStep(SelectionStep):
             )
         model = _mllib.fit(est, tf.frame, x_names)
         coefs = pull_importances(model, x_names, scaled=False)
-        return {c: abs(v) if not math.isnan(v) else float("nan") for c, v in coefs.items()}
+        return {c: abs(v) for c, v in coefs.items()}  # abs(NaN) is NaN
 
     def extra_exclude(
         self, scores: dict[str, float], x_names: list[str]
     ) -> list[str]:
         # NA-coefficient features are force-excluded (:188-189)
-        return [
-            c for c, v in scores.items()
-            if v is None or (isinstance(v, float) and math.isnan(v))
-        ]
+        return [c for c, v in scores.items() if pruning._is_na(v)]
 
     def tunable(self):
         base = super().tunable()

@@ -1,9 +1,12 @@
 """Windowed feature-engineering operators over transcript tables.
 
-The [NORTH] layer (SURVEY.md §2.4 "Window functions"): lag/lead, forward/
-backward fill, rolling aggregates, gap-based sessionization, stable-ordering
-dedup and per-group top-k — all pure Catalyst window expressions (JVM,
-whole-stage codegen; no Python in any hot path).
+The [NORTH] layer (SURVEY.md §2.4 "Window functions"): turn index, lag/lead,
+forward/backward fill, rolling aggregates, the gap and its session rule,
+sessionization, stable-ordering dedup and per-group top-k (also the
+keep-first tail of exact dedup) — all pure Catalyst window expressions (JVM,
+whole-stage codegen; no Python in any hot path). Feature assembly, the as-of
+union carry, the transcript mapping and the driver's window queries are
+built from these helpers (tests/test_window_sites.py guards it).
 
 Ordering: the row-ordered operators take ``order``, which defaults to
 ``ORDER = (ts, turn_idx)`` — the input_hint's "stable turn ordering". The
@@ -32,8 +35,22 @@ def epoch_s(col):
     return c.cast("timestamp").cast("long")
 
 
-def turn_window(partition: str = CONV, order: Sequence = ORDER) -> WindowSpec:
+def turn_window(
+    partition: str | Column | list[str] = CONV, order: Sequence = ORDER
+) -> WindowSpec:
+    """The one window spec of this module: ``partition`` (a name, a Column
+    or a list of names) ordered by ``order``."""
     return Window.partitionBy(partition).orderBy(*order)
+
+
+def with_turn_idx(
+    df: DataFrame,
+    out: str = "turn_idx",
+    partition: str = CONV,
+    order: Sequence = ORDER,
+) -> DataFrame:
+    """``out`` = the 0-based position of each row in its partition's order."""
+    return df.withColumn(out, F.row_number().over(turn_window(partition, order)) - 1)
 
 
 def with_lag_lead(
@@ -95,12 +112,24 @@ def with_rolling_time(
     """Rolling aggregates over a trailing time range (rangeBetween on epoch
     seconds of ``ts``); ``aggs`` maps each output name to its aggregate, all
     computed in one ``Window`` node."""
-    w = (
-        Window.partitionBy(partition)
-        .orderBy(epoch_s("ts"))
-        .rangeBetween(-seconds, 0)
-    )
+    w = turn_window(partition, (epoch_s("ts"),)).rangeBetween(-seconds, 0)
     return df.withColumns({name: a.over(w) for name, a in aggs.items()})
+
+
+def with_gap(
+    df: DataFrame, out: str, partition: str = CONV, order: Sequence = ORDER
+) -> DataFrame:
+    """``out`` = seconds since the previous row of the partition (NULL on
+    its first row). Callers read the column, so the ``ts`` lag is evaluated
+    once however often the gap is used."""
+    w = turn_window(partition, order)
+    return df.withColumn(out, epoch_s("ts") - F.lag(epoch_s("ts")).over(w))
+
+
+def session_starts(gap: Column, gap_seconds: int) -> Column:
+    """The session rule on a :func:`with_gap` column: a row starts a session
+    when it is its partition's first row or its gap exceeds ``gap_seconds``."""
+    return gap.isNull() | (gap > gap_seconds)
 
 
 def with_session_id(
@@ -110,14 +139,12 @@ def with_session_id(
     partition: str = CONV,
     order: Sequence = ORDER,
 ) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the gap since the
-    previous row exceeds ``gap_seconds``. session_id = running count of
-    session starts (0-based within the partition)."""
-    w = turn_window(partition, order)
-    gap = epoch_s("ts") - F.lag(epoch_s("ts")).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out, F.sum(new_sess).over(cum) - 1)
+    """Gap-based sessionization (:func:`session_starts`). session_id =
+    running count of session starts (0-based within the partition)."""
+    df = with_gap(df, "__gap__", partition, order)
+    starts = F.when(session_starts(F.col("__gap__"), gap_seconds), 1).otherwise(0)
+    cum = turn_window(partition, order).rowsBetween(Window.unboundedPreceding, 0)
+    return df.withColumn(out, F.sum(starts).over(cum) - 1).drop("__gap__")
 
 
 def dedup_turns(df: DataFrame, partition: str = CONV) -> DataFrame:
@@ -129,7 +156,7 @@ def dedup_turns(df: DataFrame, partition: str = CONV) -> DataFrame:
     turn_idx. Same result as a per-(conv, turn) row_number, but it shares the
     conv_id hash partitioning with every downstream window — Catalyst reuses
     ONE exchange for the whole assembly instead of one per partition key."""
-    w = Window.partitionBy(partition).orderBy("turn_idx", "ts")
+    w = turn_window(partition, ("turn_idx", "ts"))
     dup = F.lag("turn_idx").over(w) == F.col("turn_idx")
     return (
         df.withColumn("__dup__", F.coalesce(dup, F.lit(False)))
@@ -139,15 +166,16 @@ def dedup_turns(df: DataFrame, partition: str = CONV) -> DataFrame:
 
 
 def top_k_per_group(
-    df: DataFrame, k: int, partition: str, order: Sequence
+    df: DataFrame, k: int, partition: str | Column | list[str], order: Sequence
 ) -> DataFrame:
-    """The first ``k`` rows of each ``partition`` group by ``order`` (names
-    or sort Columns; end it with a unique key for a total order), with their
-    1-based ``rank``. One ``row_number`` window: one exchange on the group
+    """The first ``k`` rows of each ``partition`` group (a name, a Column or
+    a list of names) by ``order`` (names or sort Columns; end it with a
+    unique key for a total order), with their 1-based ``rank``; k = 1 is a
+    keep-first dedup. One ``row_number`` window: one exchange on the group
     key, then a sort within each group. "Top-k Sorting Under Partial Order
     Information" (SIGMOD 2018) is the reference for any cheaper per-group
     selection."""
-    w = Window.partitionBy(partition).orderBy(*order)
+    w = turn_window(partition, order)
     return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 

@@ -19,7 +19,6 @@ FittedStep is JSON-serializable for checkpoint/resume.
 from __future__ import annotations
 
 import json
-import math
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -30,10 +29,6 @@ from recipeselectors_spark.functions import pruning
 from recipeselectors_spark.plans import roles as roles_mod
 
 NA = float("nan")
-
-
-def _is_na(x) -> bool:
-    return x is None or (isinstance(x, float) and math.isnan(x))
 
 
 @dataclass
@@ -72,7 +67,7 @@ class FittedStep:
             "outcome": self.outcome,
             "exclude": self.exclude,
             "scores": {
-                k: (None if _is_na(v) else v) for k, v in self.scores.items()
+                k: (None if pruning._is_na(v) else v) for k, v in self.scores.items()
             },
             "skip": self.skip,
             "params": self.params,
@@ -205,8 +200,7 @@ class SelectionStep:
         return self._fitted(
             exclude,
             scores,
-            params={"top_p": None if _is_na(top_p) else top_p,
-                    "threshold": None if _is_na(self.threshold) else self.threshold},
+            params=pruning.criteria_params(top_p, self.threshold),
             extras=extras,
             forced_exclude=forced,
         )

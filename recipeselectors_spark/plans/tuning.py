@@ -12,7 +12,6 @@ dimensionality like dials::get_p, parameters.R:19-28).
 
 from __future__ import annotations
 
-import math
 from typing import Any, Iterable
 
 from recipeselectors_spark.functions import pruning
@@ -42,7 +41,7 @@ def reprune(
         maximize = fitted.maximize
     pruning.check_criteria(top_p, threshold, fitted.step_name)
     threshold = pruning.check_zero_one(threshold)
-    if not (isinstance(top_p, float) and math.isnan(top_p)):
+    if not pruning._is_na(top_p):
         top_p = pruning.check_top_p(top_p, len(fitted.scores))
     exclude = pruning.prune(
         fitted.scores, prune_mode, top_p, threshold, maximize,
@@ -54,10 +53,7 @@ def reprune(
         exclude,
         dict(fitted.scores),
         fitted.skip,
-        params={
-            "top_p": None if (isinstance(top_p, float) and math.isnan(top_p)) else top_p,
-            "threshold": threshold if not (isinstance(threshold, float) and math.isnan(threshold)) else None,
-        },
+        params=pruning.criteria_params(top_p, threshold),
         forced_exclude=list(fitted.forced_exclude),
         prune_mode=prune_mode,
         maximize=maximize,
@@ -84,8 +80,7 @@ def grid(
         f = reprune(fitted, tp, th, prune_mode, maximize)
         out.append(
             {
-                "top_p": None if (isinstance(tp, float) and math.isnan(tp)) else tp,
-                "threshold": None if (isinstance(th, float) and math.isnan(th)) else th,
+                **pruning.criteria_params(tp, th),
                 "exclude": f.exclude,
                 "n_kept": len(f.scores) - len(f.exclude),
             }

@@ -177,13 +177,13 @@ def events_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the driver's events table onto the transcript shape:
     conv_id=user_id, turn_idx=per-user rank by (ts, event_id), role=event_type,
     text=props, tool set sparsely from event_type, ts=ts."""
-    from pyspark.sql.window import Window
+    from recipeselectors_spark.operators import windows as W
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev = W.with_turn_idx(ev, partition="user_id", order=("ts", "event_id"))
     return ev.select(
         F.concat(F.lit("conv-"), F.col("user_id").cast("string")).alias("conv_id"),
-        (F.row_number().over(w) - 1).alias("turn_idx"),
+        "turn_idx",
         F.col("event_type").alias("role"),
         F.col("props").alias("text"),
         F.when(F.col("event_type") == "click", F.lit("browser")).alias("tool"),

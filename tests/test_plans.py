@@ -37,6 +37,12 @@ def test_column_pruning_reaches_parquet(spark, events):
     assert cols == {"user_id", "value"}  # props/ts/event_id pruned
 
 
+def _nodes(plan: str, op: str) -> int:
+    """Physical ``op`` nodes in ``plan`` (``Window`` excludes
+    ``WindowGroupLimit``, ``Sort`` excludes ``SortMergeJoin``)."""
+    return len(re.findall(rf"(?<![A-Za-z]){op} \[", plan))
+
+
 def test_assembly_single_exchange(spark):
     """The whole feature matrix rides ONE conv_id exchange."""
     from recipeselectors_spark.operators import assembly
@@ -45,10 +51,36 @@ def test_assembly_single_exchange(spark):
     tx = T.events_as_transcripts(spark, SF_DIR).drop("value")
     plan = _plan(assembly.assemble_features(tx))
     # events_as_transcripts itself needs one user_id exchange for turn_idx;
-    # the assembly must NOT add another (conv_id is a function of user_id,
-    # but turn_idx's row_number re-keys, so Catalyst keeps 2 total at most)
-    assert plan.count("Exchange hashpartitioning") <= 2
+    # the assembly adds exactly one conv_id exchange (conv_id is a function
+    # of user_id, but turn_idx's row_number re-keys)
+    assert plan.count("Exchange hashpartitioning") == 2
     assert "SinglePartition" not in plan
+    # one sort per order: (user_id; ts, event_id), dedup_turns' (turn_idx,
+    # ts) and the features' (ts, turn_idx)
+    assert _nodes(plan, "Sort") == 3
+    assert _nodes(plan, "Window") <= 6
+    # the lag helper's lead columns are pruned; the ts lag runs once: one
+    # lag per lag feature, one for the gap, one for dedup_turns
+    assert "lead(" not in plan
+    assert plan.count("lag(") <= 4
+
+
+def test_asof_union_plan_shape(spark):
+    """Two spine/feature group-bys and ONE window exchange; the carry is one
+    Window over one Sort."""
+    import __spark_entry__ as em
+
+    plan = _plan(em.q_asof_union(spark, SF_DIR))
+    assert plan.count("Exchange hashpartitioning") == 3
+    assert _nodes(plan, "Window") == 1
+    assert _nodes(plan, "Sort") == 1
+
+
+def test_dedup_turns_single_exchange(spark):
+    import __spark_entry__ as em
+
+    plan = _plan(em.q_dedup_turns(spark, SF_DIR))
+    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_melted_scoring_single_exchange(spark, events):
@@ -76,6 +108,16 @@ def test_exact_dedup_single_exchange(spark):
     plan = _plan(D.dedup_exact(docs))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "partial_" in plan  # map-side combine on the hash groupBy
+
+
+def test_drop_exact_duplicates_single_exchange(spark):
+    """Keep-first exact dedup: one md5 window exchange, no join back."""
+    from recipeselectors_spark.operators import dedup as D
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = _plan(D.drop_exact_duplicates(docs))
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Join" not in plan
 
 
 def test_ivf_sample_is_top_n_not_global_sort(spark):

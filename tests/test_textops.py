@@ -34,6 +34,40 @@ def test_dedup_exact(docs):
     assert (dups["doc_id"] < 100000).all()
 
 
+def test_drop_exact_duplicates_matches_pandas(spark):
+    """Keep-first exact dedup keeps the WHOLE row of the smallest id per
+    text: duplicate texts, NULL texts (one group), extra carried columns,
+    and a tie on the smallest id (either tied row, exactly one)."""
+    pdf = pd.DataFrame({
+        "doc_id": [5, 2, 9, 3, 3, 7, 8, 4, 6, 1],
+        "text": ["a", "a", "a", "b", "b", None, None, "c", "b", "d"],
+        "lang": ["x", "y", "z", "p", "q", "n1", "n2", "c", "r", "d"],
+        "score": [0.5, 0.2, 0.9, 0.3, 0.33, 0.7, 0.8, 0.4, 0.6, 0.1],
+    })
+    df = spark.createDataFrame(
+        pdf.astype(object).where(pdf.notna(), None),
+        "doc_id long, text string, lang string, score double",
+    )
+    got = dedup.drop_exact_duplicates(df).toPandas()
+    assert list(got.columns) == list(pdf.columns)
+
+    # oracle: the smallest id of each text group (NULL texts form one group)
+    keep = pdf.groupby("text", dropna=False)["doc_id"].min()
+    assert sorted(got["doc_id"]) == sorted(keep)
+    assert got["text"].isna().sum() == 1
+    # untied groups: the whole row is the oracle's row
+    want = pdf[pdf["doc_id"].isin(keep) & (pdf["doc_id"] != 3)]
+    cols = list(pdf.columns)
+    assert (
+        got[got["doc_id"] != 3].sort_values("doc_id")[cols].reset_index(drop=True)
+        .equals(want.sort_values("doc_id")[cols].reset_index(drop=True))
+    )
+    # the tie on id 3 ("b"): exactly one of the two tied rows survives whole
+    tied = got[got["doc_id"] == 3]
+    assert len(tied) == 1
+    assert (tied["lang"].iloc[0], tied["score"].iloc[0]) in {("p", 0.3), ("q", 0.33)}
+
+
 def test_minhash_finds_near_duplicates(docs):
     pairs = dedup.minhash_dedup_pairs(
         docs, num_perm=32, bands=8, threshold=0.5
