@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -196,8 +197,7 @@ def q_asof_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spine, feats = _asof_inputs(spark, sf_dir)
     # ONE union + ONE window exchange produces both the plain carry and the
-    # tolerance-gated carry (r6: the round-5 form ran two full union-window
-    # passes and joined them — twice the scans, twice the window exchanges)
+    # tolerance-gated carry
     out = asof.asof_join_union(
         spine, feats, ["click_value"], on="conv_id", tolerance_s=600,
         ungated_suffix="__plain",
@@ -209,84 +209,27 @@ def q_asof_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from recipeselectors_spark.operators import asof
-
-    spine, feats = _asof_inputs(spark, sf_dir)
-    out = asof.asof_join_cogroup(
-        spine, feats, ["click_value"], on="conv_id", num_shards=16
-    )
-    return out.select(
-        F.col("conv_id").alias("user_id"), "ts", "purchase_id", "click_value"
-    )
-
-
-_ASOF_ORACLE = """
-WITH feats AS (
-  SELECT user_id, ts, max(value) AS click_value
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-),
-spine AS (
-  SELECT user_id, ts, max(event_id) AS purchase_id
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-)
-SELECT s.user_id, s.ts, s.purchase_id, f.click_value
-FROM spine s ASOF LEFT JOIN feats f
-  ON s.user_id = f.user_id AND s.ts >= f.ts
-"""
-
-
-_ASOF_UNION_ORACLE = """
-WITH feats AS (
-  SELECT user_id, ts, max(value) AS click_value
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-),
-spine AS (
-  SELECT user_id, ts, max(event_id) AS purchase_id
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-)
-SELECT s.user_id, s.ts, s.purchase_id, f.click_value,
-       CASE WHEN epoch(s.ts) - epoch(f.ts) <= 600 THEN f.click_value END
-         AS click_value_tol
-FROM spine s ASOF LEFT JOIN feats f
-  ON s.user_id = f.user_id AND s.ts >= f.ts
-"""
-
-
-def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of through the cogroup sorted-merge strategy (the next
-    feature row at-or-after each spine ts) — DuckDB ASOF supports the <=
-    comparison, so the direction variants are oracle-checked too."""
+def q_asof_cogroup(
+    spark: SparkSession, sf_dir: str, direction: str = "backward"
+) -> DataFrame:
+    """As-of join through the cogroup sorted-merge strategy in one
+    ``direction``: ``backward`` (the last feature row at-or-before each spine
+    ts), ``forward`` (the next one at-or-after) or ``nearest`` (min absolute
+    ts distance, ties prefer the backward row — pd.merge_asof semantics)."""
     from recipeselectors_spark.operators import asof
 
     spine, feats = _asof_inputs(spark, sf_dir)
     out = asof.asof_join_cogroup(
         spine, feats, ["click_value"], on="conv_id", num_shards=16,
-        direction="forward",
+        direction=direction,
     )
     return out.select(
         F.col("conv_id").alias("user_id"), "ts", "purchase_id", "click_value"
     )
 
 
-def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAREST as-of through the cogroup sorted-merge: min absolute ts
-    distance, ties prefer the backward row (pd.merge_asof semantics).
-    DuckDB has no nearest ASOF, so the oracle composes both directions and
-    picks the closer, tie -> backward."""
-    from recipeselectors_spark.operators import asof
-
-    spine, feats = _asof_inputs(spark, sf_dir)
-    out = asof.asof_join_cogroup(
-        spine, feats, ["click_value"], on="conv_id", num_shards=16,
-        direction="nearest",
-    )
-    return out.select(
-        F.col("conv_id").alias("user_id"), "ts", "purchase_id", "click_value"
-    )
-
-
-_ASOF_NEAREST_ORACLE = """
+# the DuckDB twin of _asof_inputs
+_ASOF_INPUTS_SQL = """
 WITH feats AS (
   SELECT user_id, ts, max(value) AS click_value
   FROM events WHERE event_type = 'click' GROUP BY user_id, ts
@@ -294,17 +237,26 @@ WITH feats AS (
 spine AS (
   SELECT user_id, ts, max(event_id) AS purchase_id
   FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-),
-b AS (
-  SELECT s.user_id, s.ts, s.purchase_id, f.ts AS bts, f.click_value AS bval
-  FROM spine s ASOF LEFT JOIN feats f
-    ON s.user_id = f.user_id AND s.ts >= f.ts
-),
-fw AS (
-  SELECT s.user_id, s.ts, f.ts AS fts, f.click_value AS fval
-  FROM spine s ASOF LEFT JOIN feats f
-    ON s.user_id = f.user_id AND s.ts <= f.ts
-)
+)"""
+
+
+def _asof_oracle(direction: str, tolerance_s: int | None = None) -> str:
+    """DuckDB replay of the click-onto-purchase as-of joins. ``tolerance_s``
+    adds the gated ``click_value_tol`` column of a backward join. DuckDB has
+    no nearest ASOF, so nearest joins both directions and picks the closer,
+    tie -> backward."""
+
+    def asof_join(op: str, cols: str) -> str:
+        return (
+            f"SELECT s.user_id, s.ts, s.purchase_id, {cols}\n"
+            "FROM spine s ASOF LEFT JOIN feats f\n"
+            f"  ON s.user_id = f.user_id AND s.ts {op} f.ts"
+        )
+
+    if direction == "nearest":
+        return f"""{_ASOF_INPUTS_SQL},
+b AS ({asof_join(">=", "f.ts AS bts, f.click_value AS bval")}),
+fw AS ({asof_join("<=", "f.ts AS fts, f.click_value AS fval")})
 SELECT b.user_id, b.ts, b.purchase_id,
        CASE WHEN b.bts IS NULL THEN fw.fval
             WHEN fw.fts IS NULL THEN b.bval
@@ -312,21 +264,14 @@ SELECT b.user_id, b.ts, b.purchase_id,
             ELSE fw.fval END AS click_value
 FROM b JOIN fw ON b.user_id = fw.user_id AND b.ts = fw.ts
 """
-
-
-_ASOF_FWD_ORACLE = """
-WITH feats AS (
-  SELECT user_id, ts, max(value) AS click_value
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-),
-spine AS (
-  SELECT user_id, ts, max(event_id) AS purchase_id
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-)
-SELECT s.user_id, s.ts, s.purchase_id, f.click_value
-FROM spine s ASOF LEFT JOIN feats f
-  ON s.user_id = f.user_id AND s.ts <= f.ts
-"""
+    cols = "f.click_value"
+    if tolerance_s is not None:
+        cols += (
+            f",\n       CASE WHEN epoch(s.ts) - epoch(f.ts) <= {tolerance_s}"
+            " THEN f.click_value END AS click_value_tol"
+        )
+    op = ">=" if direction == "backward" else "<="
+    return f"{_ASOF_INPUTS_SQL}\n{asof_join(op, cols)}\n"
 
 
 # ---------------------------------------------------------------------------
@@ -404,82 +349,66 @@ def q_infgain_equalfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _score_frame(spark, fitted.scores, "infogain")
 
 
+def _entropy_sql(counts: str, by: str) -> str:
+    """Entropy (nats) of the ``by`` margin of ``counts``, a relation of cell
+    counts ``n``."""
+    return (
+        f"(SELECT -SUM(p*LN(p)) FROM (SELECT SUM(n)/(SELECT SUM(n) FROM {counts})"
+        f" AS p FROM {counts} GROUP BY {by}))"
+    )
+
+
+def _mutual_info_sql(counts: str, x: str, y: str) -> str:
+    """I(x; y) = H(x) + H(y) - H(x, y) over the cell counts ``counts``."""
+    return (
+        f"({_entropy_sql(counts, x)} + {_entropy_sql(counts, y)}"
+        f" - {_entropy_sql(counts, f'{x}, {y}')})"
+    )
+
+
+def _equal_freq_bin_sql(x: str, source: str, bins: int) -> str:
+    """Bin code of ``x`` among the ``bins``-quantile cuts of ``x`` over
+    ``source``, as ``_scoring.learn_numeric_cuts`` bins: a quantile counts
+    only if strictly above the previous one (quantiles are monotone, so
+    that is the distinct set), and the code is the number of cuts <= x."""
+    qs = [i / bins for i in range(1, bins)]
+    cuts = f"(SELECT list_distinct(quantile_cont({x}, {qs})) FROM {source})"
+    return f"length(list_filter({cuts}, c -> c <= {x}))"
+
+
 _INFGAIN_ORACLE = f"""
 WITH feat AS (
   SELECT CAST(value AS double) AS x,
          CASE WHEN event_type='purchase' THEN 'pos' ELSE 'neg' END AS y
   FROM events
 ),
-cuts AS (
-  SELECT quantile_cont(x, 0.25) c1, quantile_cont(x, 0.50) c2,
-         quantile_cont(x, 0.75) c3
-  FROM feat
-),
-binned AS (
-  SELECT CASE WHEN x >= c3 THEN 3 WHEN x >= c2 THEN 2
-              WHEN x >= c1 THEN 1 ELSE 0 END AS bin, y
-  FROM feat, cuts
-),
-joint AS (SELECT bin, y, COUNT(*)::double AS n FROM binned GROUP BY bin, y),
-tot AS (SELECT SUM(n) AS nt FROM joint),
-hx AS (SELECT -SUM(p*LN(p)) AS h FROM
-        (SELECT SUM(n)/(SELECT nt FROM tot) AS p FROM joint GROUP BY bin)),
-hy AS (SELECT -SUM(p*LN(p)) AS h FROM
-        (SELECT SUM(n)/(SELECT nt FROM tot) AS p FROM joint GROUP BY y)),
-hxy AS (SELECT -SUM(p*LN(p)) AS h FROM
-        (SELECT n/(SELECT nt FROM tot) AS p FROM joint))
+binned AS (SELECT {_equal_freq_bin_sql("x", "feat", 4)} AS bin, y FROM feat),
+joint AS (SELECT bin, y, COUNT(*)::double AS n FROM binned GROUP BY bin, y)
 SELECT 'value' AS feature,
-       ROUND((SELECT h FROM hx)+(SELECT h FROM hy)-(SELECT h FROM hxy), {ROUND})
-         AS infogain
+       ROUND({_mutual_info_sql("joint", "bin", "y")}, {ROUND}) AS infogain
 """
 
 
 _MRMR_ORACLE = f"""
 -- greedy mRMR over (value, props_len), bins=4 equal-freq:
 -- score(first) = I(X;Y); score(second) = I(X;Y) - I(X; first).
--- Bin rule replicates equal_freq_cut_points dedup: a quantile counts only
--- if strictly greater than the previous one (quantiles are monotone).
 WITH feat AS (
   SELECT CAST(value AS double) AS v, CAST(length(props) AS double) AS p,
          CASE WHEN event_type='purchase' THEN 'pos' ELSE 'neg' END AS y
   FROM events
 ),
-qv AS (
-  SELECT quantile_cont(v, 0.25) c1, quantile_cont(v, 0.50) c2,
-         quantile_cont(v, 0.75) c3 FROM feat
-),
-qp AS (
-  SELECT quantile_cont(p, 0.25) c1, quantile_cont(p, 0.50) c2,
-         quantile_cont(p, 0.75) c3 FROM feat
-),
 binned AS (
-  SELECT
-    (CASE WHEN v >= qv.c1 THEN 1 ELSE 0 END)
-    + (CASE WHEN v >= qv.c2 AND qv.c2 > qv.c1 THEN 1 ELSE 0 END)
-    + (CASE WHEN v >= qv.c3 AND qv.c3 > qv.c2 THEN 1 ELSE 0 END) AS bv,
-    (CASE WHEN p >= qp.c1 THEN 1 ELSE 0 END)
-    + (CASE WHEN p >= qp.c2 AND qp.c2 > qp.c1 THEN 1 ELSE 0 END)
-    + (CASE WHEN p >= qp.c3 AND qp.c3 > qp.c2 THEN 1 ELSE 0 END) AS bp,
-    y
-  FROM feat, qv, qp
+  SELECT {_equal_freq_bin_sql("v", "feat", 4)} AS bv,
+         {_equal_freq_bin_sql("p", "feat", 4)} AS bp, y
+  FROM feat
 ),
-n AS (SELECT COUNT(*)::double AS nt FROM binned),
-hv  AS (SELECT -SUM(q*LN(q)) AS h FROM
-         (SELECT COUNT(*)/(SELECT nt FROM n) AS q FROM binned GROUP BY bv)),
-hp  AS (SELECT -SUM(q*LN(q)) AS h FROM
-         (SELECT COUNT(*)/(SELECT nt FROM n) AS q FROM binned GROUP BY bp)),
-hy  AS (SELECT -SUM(q*LN(q)) AS h FROM
-         (SELECT COUNT(*)/(SELECT nt FROM n) AS q FROM binned GROUP BY y)),
-hvy AS (SELECT -SUM(q*LN(q)) AS h FROM
-         (SELECT COUNT(*)/(SELECT nt FROM n) AS q FROM binned GROUP BY bv, y)),
-hpy AS (SELECT -SUM(q*LN(q)) AS h FROM
-         (SELECT COUNT(*)/(SELECT nt FROM n) AS q FROM binned GROUP BY bp, y)),
-hvp AS (SELECT -SUM(q*LN(q)) AS h FROM
-         (SELECT COUNT(*)/(SELECT nt FROM n) AS q FROM binned GROUP BY bv, bp)),
+joint AS (
+  SELECT bv, bp, y, COUNT(*)::double AS n FROM binned GROUP BY bv, bp, y
+),
 mi AS (
-  SELECT (SELECT h FROM hv)+(SELECT h FROM hy)-(SELECT h FROM hvy) AS miv,
-         (SELECT h FROM hp)+(SELECT h FROM hy)-(SELECT h FROM hpy) AS mip,
-         (SELECT h FROM hv)+(SELECT h FROM hp)-(SELECT h FROM hvp) AS mivp
+  SELECT {_mutual_info_sql("joint", "bv", "y")} AS miv,
+         {_mutual_info_sql("joint", "bp", "y")} AS mip,
+         {_mutual_info_sql("joint", "bv", "bp")} AS mivp
 )
 SELECT 'props_len' AS feature,
        ROUND(CASE WHEN miv >= mip THEN mip - mivp ELSE mip END, {ROUND}) AS mrmr
@@ -556,6 +485,20 @@ FROM full_cells GROUP BY feature ORDER BY feature
 # ---------------------------------------------------------------------------
 # text / dedup / similarity (operators for training-data pipelines)
 # ---------------------------------------------------------------------------
+
+# the lowercased whitespace tokens of ``text`` (functions/text.py tokens over
+# lower(text)), and the same without empty tokens
+_WORDS_SQL = "regexp_split_to_array(trim(lower(text)), '\\s+')"
+_TOKENS_SQL = f"list_filter({_WORDS_SQL}, x -> x != '')"
+
+
+def _ngrams_sql(toks: str, n: int) -> str:
+    """The space-joined word ``n``-grams of the token list ``toks``."""
+    return (
+        f"[array_to_string({toks}[i:i+{n - 1}], ' ')"
+        f" FOR i IN generate_series(1, length({toks}) - {n - 1})]"
+    )
+
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup, BOTH strategies in one output and cross-checked against
@@ -1075,10 +1018,69 @@ def q_forest_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stump_sql(source: str, xs: list[str], y: str, sfx: str = "") -> str:
+    """CTEs suffixed ``sfx`` ending in ``pick{sfx}(feature, thr, lm, rm,
+    gain)``: the depth-1 regression tree MLlib fits on the columns ``xs`` of
+    ``source`` against ``y`` with maxBins >= #distinct. Split candidates are
+    the midpoints of consecutive distinct values
+    (findSplitsForContinuousFeature); the split is the argmax of the
+    variance gain, ties to the lowest feature index (position in ``xs``),
+    then the lowest threshold (binsToBestSplit order); lm/rm are the leaf
+    means."""
+    melted = "\n  UNION ALL\n  ".join(
+        f"SELECT '{x}' AS feature, {i} AS fidx, CAST({x} AS DOUBLE) AS x,"
+        f" CAST({y} AS DOUBLE) AS y FROM {source}"
+        for i, x in enumerate(xs)
+    )
+    return f"""melted{sfx} AS (
+  {melted}
+),
+dv{sfx} AS (
+  SELECT feature, fidx, x, COUNT(*)::DOUBLE AS n, SUM(y) AS s, SUM(y*y) AS ss
+  FROM melted{sfx} GROUP BY feature, fidx, x
+),
+thr{sfx} AS (
+  SELECT feature, fidx,
+         (x + LEAD(x) OVER (PARTITION BY feature ORDER BY x))/2 AS t
+  FROM dv{sfx} QUALIFY t IS NOT NULL
+),
+tots{sfx} AS (
+  SELECT feature, SUM(n) AS nt, SUM(s) AS st, SUM(ss) AS sst
+  FROM dv{sfx} GROUP BY feature
+),
+gains{sfx} AS (
+  SELECT t0.feature, t0.fidx, t0.t, SUM(dv.n) AS nl, SUM(dv.s) AS sl,
+         tt.nt, tt.st,
+    (tt.sst/tt.nt - (tt.st/tt.nt)^2)
+    - (SUM(dv.n)/tt.nt)*(SUM(dv.ss)/SUM(dv.n) - (SUM(dv.s)/SUM(dv.n))^2)
+    - ((tt.nt-SUM(dv.n))/tt.nt)
+      * ((tt.sst-SUM(dv.ss))/(tt.nt-SUM(dv.n))
+         - ((tt.st-SUM(dv.s))/(tt.nt-SUM(dv.n)))^2) AS gain
+  FROM thr{sfx} t0
+  JOIN dv{sfx} dv ON dv.feature = t0.feature AND dv.x <= t0.t
+  JOIN tots{sfx} tt ON tt.feature = t0.feature
+  GROUP BY t0.feature, t0.fidx, t0.t, tt.nt, tt.st, tt.sst
+),
+pick{sfx} AS MATERIALIZED (
+  SELECT feature, t AS thr, sl/nl AS lm, (st-sl)/(nt-nl) AS rm, gain
+  FROM gains{sfx} ORDER BY gain DESC, fidx, t LIMIT 1
+)"""
+
+
+def _stump_pred_sql(pick: str, cols: dict[str, str]) -> str:
+    """The prediction of the stump ``pick`` (a ``_stump_sql`` pick CTE) for
+    a row whose value of each feature is the expression ``cols[feature]``."""
+    x = " ".join(f"WHEN '{f}' THEN {c}" for f, c in cols.items())
+    return (
+        f"(CASE WHEN (CASE (SELECT feature FROM {pick}) {x} END)"
+        f" <= (SELECT thr FROM {pick})"
+        f" THEN (SELECT lm FROM {pick}) ELSE (SELECT rm FROM {pick}) END)"
+    )
+
+
 def _forest_perm_oracle() -> str:
-    """Replay of q_forest_importance: the variance-gain argmax stump (same
-    machinery as _TREE_ORACLE, tie-break = MLlib's lowest feature index then
-    lowest threshold), then per-feature MSE after the md5-bucket cyclic
+    """Replay of q_forest_importance: the variance-gain stump
+    (:func:`_stump_sql`), then per-feature MSE after the md5-bucket cyclic
     rotation of _permute.rotate_columns — seed 42+i per feature, 3 hex
     chars = 4096 buckets, LEAD with first-row wraparound."""
 
@@ -1092,60 +1094,11 @@ def _forest_perm_oracle() -> str:
     wq, wqf = rot_win("kq")
     wd, wdf = rot_win("kd")
 
-    def stump(xcol: str) -> str:
-        return (
-            f"CASE WHEN {xcol} <= (SELECT thr FROM best) "
-            f"THEN (SELECT lm FROM best) ELSE (SELECT rm FROM best) END"
-        )
-
     def pred(qx: str, dx: str) -> str:
-        return (
-            f"CASE WHEN (SELECT feature FROM best)='l_quantity' "
-            f"THEN {stump(qx)} ELSE {stump(dx)} END"
-        )
+        return _stump_pred_sql("pick", {"l_quantity": qx, "l_discount": dx})
 
     return f"""
-WITH melted AS (
-  SELECT 'l_quantity' AS feature, 0 AS fidx, CAST(l_quantity AS DOUBLE) AS x,
-         CAST(l_extendedprice AS DOUBLE) AS y
-  FROM lineitem
-  UNION ALL
-  SELECT 'l_discount', 1, CAST(l_discount AS DOUBLE),
-         CAST(l_extendedprice AS DOUBLE)
-  FROM lineitem
-),
-dv AS (
-  SELECT feature, fidx, x, COUNT(*)::DOUBLE AS n, SUM(y) AS s, SUM(y*y) AS ss
-  FROM melted GROUP BY feature, fidx, x
-),
-thr AS (
-  SELECT feature, fidx,
-         (x + LEAD(x) OVER (PARTITION BY feature ORDER BY x))/2 AS t
-  FROM dv QUALIFY t IS NOT NULL
-),
-tots AS (
-  SELECT feature, SUM(n) AS nt, SUM(s) AS st, SUM(ss) AS sst
-  FROM dv GROUP BY feature
-),
-gains AS (
-  SELECT thr.feature, thr.fidx, thr.t, SUM(dv.n) AS nl, SUM(dv.s) AS sl,
-         tots.nt, tots.st,
-    (tots.sst/tots.nt - (tots.st/tots.nt)^2)
-    - (SUM(dv.n)/tots.nt)
-      * (SUM(dv.ss)/SUM(dv.n) - (SUM(dv.s)/SUM(dv.n))^2)
-    - ((tots.nt-SUM(dv.n))/tots.nt)
-      * ((tots.sst-SUM(dv.ss))/(tots.nt-SUM(dv.n))
-         - ((tots.st-SUM(dv.s))/(tots.nt-SUM(dv.n)))^2)
-    AS gain
-  FROM thr
-  JOIN dv ON dv.feature = thr.feature AND dv.x <= thr.t
-  JOIN tots ON tots.feature = thr.feature
-  GROUP BY thr.feature, thr.fidx, thr.t, tots.nt, tots.st, tots.sst
-),
-best AS (
-  SELECT feature, t AS thr, sl/nl AS lm, (st-sl)/(nt-nl) AS rm
-  FROM gains ORDER BY gain DESC, fidx, t LIMIT 1
-),
+WITH {_stump_sql("lineitem", ["l_quantity", "l_discount"], "l_extendedprice")},
 keyed AS (
   SELECT CAST(l_quantity AS DOUBLE) AS q, CAST(l_discount AS DOUBLE) AS d,
          CAST(l_extendedprice AS DOUBLE) AS y,
@@ -1168,9 +1121,9 @@ rot AS (
   WINDOW wq AS ({wq}), wqf AS ({wqf}), wd AS ({wd}), wdf AS ({wdf})
 ),
 mse AS (
-  SELECT AVG((y - ({pred('q', 'd')}))^2)         AS m0,
-         AVG((y - ({pred('q_rot', 'd')}))^2)     AS mq,
-         AVG((y - ({pred('q', 'd_rot')}))^2)     AS md_
+  SELECT AVG((y - {pred('q', 'd')})^2)         AS m0,
+         AVG((y - {pred('q_rot', 'd')})^2)     AS mq,
+         AVG((y - {pred('q', 'd_rot')})^2)     AS md_
   FROM rot
 )
 SELECT 'l_discount' AS feature, ROUND((md_ - m0)/m0, 9) + 0.0 AS rel_importance
@@ -1185,75 +1138,33 @@ def _vip_gbt_oracle(iters: int = 5, step: float = 0.1) -> str:
     """Replay of q_vip_importance: MLlib GBT stump boosting unrolled as
     chained CTEs. Iteration 0 fits y; iteration m fits 2*(y - pred_m)
     (MLlib SquaredError -gradient) where pred accumulates left-to-right
-    with weights [1.0, 0.1, ...]. Each pick{{i}} is the variance-gain
-    argmax stump over midpoint thresholds (ties: lowest feature index,
-    then lowest threshold — MLlib binsToBestSplit order). Importances =
-    per-feature sum of stump gains (GBT featureImportances does NOT
-    normalize per tree; gain*count with count = all rows at the root
-    cancels in the min-max rescale), rescaled 0-100."""
-    feats = [("l_quantity", 0, "q"), ("l_discount", 1, "d"), ("l_tax", 2, "t3")]
-
-    def stump_expr(k: int) -> str:
-        col = (
-            f"(CASE (SELECT feature FROM pick{k}) "
-            + " ".join(f"WHEN '{f}' THEN {c}" for f, _, c in feats[:-1])
-            + f" ELSE {feats[-1][2]} END)"
-        )
-        return (
-            f"(CASE WHEN {col} <= (SELECT thr FROM pick{k}) "
-            f"THEN (SELECT lm FROM pick{k}) ELSE (SELECT rm FROM pick{k}) END)"
-        )
-
+    with weights [1.0, 0.1, ...]. Each pick{i} is the variance-gain
+    stump of :func:`_stump_sql`. Importances = per-feature sum of stump
+    gains (GBT featureImportances does NOT normalize per tree; gain*count
+    with count = all rows at the root cancels in the min-max rescale),
+    rescaled 0-100."""
+    feats = ["l_quantity", "l_discount", "l_tax"]
+    cols = ", ".join(feats)
     ctes = [
         "rows_g AS (SELECT "
-        + ", ".join(f"CAST({f} AS DOUBLE) AS {c}" for f, _, c in feats)
+        + ", ".join(f"CAST({f} AS DOUBLE) AS {f}" for f in feats)
         + ", CAST(l_extendedprice AS DOUBLE) AS y FROM lineitem)"
     ]
+    own = dict(zip(feats, feats))
     for i in range(iters):
-        if i == 0:
-            tg = "y"
-        else:
-            terms = " + ".join(
-                f"{1.0 if k == 0 else step}*{stump_expr(k)}" for k in range(i)
-            )
-            tg = f"2*(y - ({terms}))"
-        melted = " UNION ALL ".join(
-            f"SELECT '{f}' AS feature, {fx} AS fidx, {c} AS x, tg FROM tgt{i}"
-            for f, fx, c in feats
+        terms = " + ".join(
+            f"{1.0 if k == 0 else step}*{_stump_pred_sql(f'pick{k}', own)}"
+            for k in range(i)
         )
+        tg = f"2*(y - ({terms}))" if i else "y"
         ctes += [
-            f"tgt{i} AS (SELECT "
-            + ", ".join(c for _, _, c in feats)
-            + f", {tg} AS tg FROM rows_g)",
-            f"melted{i} AS ({melted})",
-            f"dv{i} AS (SELECT feature, fidx, x, COUNT(*)::DOUBLE AS n,"
-            f" SUM(tg) AS s, SUM(tg*tg) AS ss FROM melted{i}"
-            f" GROUP BY feature, fidx, x)",
-            f"thr{i} AS (SELECT feature, fidx,"
-            f" (x + LEAD(x) OVER (PARTITION BY feature ORDER BY x))/2 AS t"
-            f" FROM dv{i} QUALIFY t IS NOT NULL)",
-            f"tots{i} AS (SELECT feature, SUM(n) AS nt, SUM(s) AS st,"
-            f" SUM(ss) AS sst FROM dv{i} GROUP BY feature)",
-            f"""gains{i} AS (
-  SELECT t0.feature, t0.fidx, t0.t, SUM(dv.n) AS nl, SUM(dv.s) AS sl,
-         tt.nt, tt.st,
-    (tt.sst/tt.nt - (tt.st/tt.nt)^2)
-    - (SUM(dv.n)/tt.nt)*(SUM(dv.ss)/SUM(dv.n) - (SUM(dv.s)/SUM(dv.n))^2)
-    - ((tt.nt-SUM(dv.n))/tt.nt)
-      * ((tt.sst-SUM(dv.ss))/(tt.nt-SUM(dv.n))
-         - ((tt.st-SUM(dv.s))/(tt.nt-SUM(dv.n)))^2) AS gain
-  FROM thr{i} t0
-  JOIN dv{i} dv ON dv.feature = t0.feature AND dv.x <= t0.t
-  JOIN tots{i} tt ON tt.feature = t0.feature
-  GROUP BY t0.feature, t0.fidx, t0.t, tt.nt, tt.st, tt.sst)""",
-            f"pick{i} AS MATERIALIZED (SELECT feature, t AS thr,"
-            f" sl/nl AS lm, (st-sl)/(nt-nl) AS rm, gain"
-            f" FROM gains{i} ORDER BY gain DESC, fidx, t LIMIT 1)",
+            f"tgt{i} AS (SELECT {cols}, {tg} AS tg FROM rows_g)",
+            _stump_sql(f"tgt{i}", feats, "tg", sfx=str(i)),
         ]
     allp = " UNION ALL ".join(
         f"SELECT feature, gain FROM pick{k}" for k in range(iters)
     )
-    names = ", ".join(f"('{f}')" for f, _, _ in feats)
+    names = ", ".join(f"('{f}')" for f in feats)
     ctes += [
         f"allp AS ({allp})",
         f"imp AS (SELECT fn.feature, COALESCE(SUM(p.gain), 0) AS raw"
@@ -1354,7 +1265,7 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TOKEN_TOPK_ORACLE = f"""
     WITH tt AS (
       SELECT token, COUNT(*) AS n FROM (
-        SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
+        SELECT unnest({_WORDS_SQL}) AS token
         FROM documents
       )
       WHERE token != ''
@@ -1383,43 +1294,49 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id")
 
 
-def _dedup_clusters_oracle() -> str:
-    uniq = """
+# the exact keep-first dedup (dedup.drop_exact_duplicates): the smallest id
+# per md5 of the text
+_UNIQ_DOCS_SQL = """
         uniq AS (
           SELECT doc_id, text FROM documents
           QUALIFY ROW_NUMBER() OVER (PARTITION BY md5(text)
                                      ORDER BY doc_id) = 1
         ),
     """
+
+
+def _components_sql(edges: str, anchor: str) -> str:
+    """CTEs ``sym``, ``reach`` and ``lab(v, cluster)``: each vertex of the
+    one-column query ``anchor`` labelled with the smallest vertex reachable
+    from it over the undirected pairs ``edges(id_a, id_b)`` — the recursive
+    transitive closure that replays dedup.connected_components."""
     return f"""
-        WITH RECURSIVE {uniq}
-        {_minhash_pipeline_sql('uniq', threshold=0.8, max_bucket=10_000)},
         sym AS (
-          SELECT id_a AS s, id_b AS d FROM near_dup_pairs
-          UNION ALL
-          SELECT id_b, id_a FROM near_dup_pairs
+          SELECT id_a AS s, id_b AS d FROM {edges}
+          UNION ALL SELECT id_b, id_a FROM {edges}
         ),
         reach(a, b) AS (
-          SELECT doc_id, doc_id FROM uniq
+          SELECT v, v FROM ({anchor}) seed(v)
           UNION
           SELECT r.a, e.d FROM reach r JOIN sym e ON e.s = r.b
         ),
-        lab AS (SELECT a AS doc_id, MIN(b) AS cluster FROM reach GROUP BY a)
-        SELECT doc_id FROM lab WHERE doc_id = cluster
+        lab AS (SELECT a AS v, MIN(b) AS cluster FROM reach GROUP BY a)"""
+
+
+def _dedup_clusters_oracle() -> str:
+    return f"""
+        WITH RECURSIVE {_UNIQ_DOCS_SQL}
+        {_minhash_pipeline_sql('uniq', threshold=0.8, max_bucket=10_000)},
+        {_components_sql("near_dup_pairs", "SELECT doc_id FROM uniq")}
+        SELECT v AS doc_id FROM lab WHERE v = cluster
     """
 
 
 _REPETITION_ORACLE = f"""
-    WITH t AS (
-      SELECT doc_id,
-             regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-      FROM documents
-    ),
+    WITH t AS (SELECT doc_id, {_WORDS_SQL} AS toks FROM documents),
     g AS (
       SELECT doc_id, toks,
-             CASE WHEN length(toks) >= 2 THEN
-               [array_to_string(toks[i:i+1], ' ')
-                FOR i IN generate_series(1, length(toks) - 1)]
+             CASE WHEN length(toks) >= 2 THEN {_ngrams_sql("toks", 2)}
              ELSE toks END AS bigrams
       FROM t
     )
@@ -1516,16 +1433,13 @@ def _det_sample_oracle() -> str:
         ),
         ftk AS (
           SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                             x -> x <> '') AS tk
+                 {_TOKENS_SQL} AS tk
           FROM documents
         ),
         grams AS (
           SELECT doc_id,
-                 unnest(tk || CASE WHEN length(tk) >= 2 THEN
-                   [array_to_string(tk[i:i+1], ' ')
-                    FOR i IN generate_series(1, length(tk) - 1)]
-                 ELSE [] END) AS gram
+                 unnest(tk || CASE WHEN length(tk) >= 2
+                   THEN {_ngrams_sql("tk", 2)} ELSE [] END) AS gram
           FROM ftk
         ),
         gb AS (
@@ -1658,30 +1572,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontaminate_oracle() -> str:
-    from recipeselectors_spark.functions import xxh64_sql as X
-
-    shingle_hash = X.to_signed_sql(X.xxh64_str_sql("sh_str"))
-
-    def xxh_of(expr: str) -> str:
-        return X.stage(expr, "sh_str", shingle_hash)
-
-    hs_ge = (
-        f"list_distinct([{xxh_of('array_to_string(toks[i:i+2], chr(32))')}"
-        f" FOR i IN generate_series(1, length(toks)-2)])"
-    )
-    hs_lt = f"[{xxh_of('array_to_string(toks, chr(32))')}]"
     return f"""
-        WITH toks_t AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                             x -> x != '') AS toks
-          FROM documents
-        ),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN length(toks) >= 3 THEN {hs_ge} ELSE {hs_lt} END AS hs
-          FROM toks_t
-        ),
+        WITH {_shingles_sql("documents")},
         bench AS (
           SELECT DISTINCT unnest(hs) AS s FROM sh WHERE doc_id < 20
         ),
@@ -1718,50 +1610,12 @@ def q_tree_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _score_frame(spark, fitted.scores, "importance")
 
 
-_TREE_ORACLE = """
--- depth-1 DecisionTreeRegressor: the split feature is the argmax over
--- (feature, threshold) of the variance gain; thresholds are midpoints of
--- consecutive distinct values (MLlib findSplitsForContinuousFeature with
--- maxBins >= #distinct). featureImportances at depth 1 = [1, 0] for the
--- split feature, rescaled 0-100 by pull_importances.
-WITH melted AS (
-  SELECT 'l_quantity' AS feature, CAST(l_quantity AS DOUBLE) AS x,
-         CAST(l_extendedprice AS DOUBLE) AS y
-  FROM lineitem
-  UNION ALL
-  SELECT 'l_discount', CAST(l_discount AS DOUBLE),
-         CAST(l_extendedprice AS DOUBLE)
-  FROM lineitem
-),
-dv AS (
-  SELECT feature, x, COUNT(*)::DOUBLE AS n, SUM(y) AS s, SUM(y*y) AS ss
-  FROM melted GROUP BY feature, x
-),
-thr AS (
-  SELECT feature, (x + LEAD(x) OVER (PARTITION BY feature ORDER BY x))/2 AS t
-  FROM dv QUALIFY t IS NOT NULL
-),
-tots AS (
-  SELECT feature, SUM(n) AS nt, SUM(s) AS st, SUM(ss) AS sst
-  FROM dv GROUP BY feature
-),
-gains AS (
-  SELECT thr.feature, thr.t,
-    (tots.sst/tots.nt - (tots.st/tots.nt)^2)
-    - (SUM(dv.n)/tots.nt)
-      * (SUM(dv.ss)/SUM(dv.n) - (SUM(dv.s)/SUM(dv.n))^2)
-    - ((tots.nt-SUM(dv.n))/tots.nt)
-      * ((tots.sst-SUM(dv.ss))/(tots.nt-SUM(dv.n))
-         - ((tots.st-SUM(dv.s))/(tots.nt-SUM(dv.n)))^2)
-    AS gain
-  FROM thr
-  JOIN dv ON dv.feature = thr.feature AND dv.x <= thr.t
-  JOIN tots ON tots.feature = thr.feature
-  GROUP BY thr.feature, thr.t, tots.nt, tots.st, tots.sst
-),
-best AS (SELECT feature FROM gains ORDER BY gain DESC, feature LIMIT 1)
+# depth-1 DecisionTreeRegressor: featureImportances at depth 1 = [1, 0] for
+# the split feature, rescaled 0-100 by pull_importances
+_TREE_ORACLE = f"""
+WITH {_stump_sql("lineitem", ["l_quantity", "l_discount"], "l_extendedprice")}
 SELECT f.feature,
-       CASE WHEN f.feature = (SELECT feature FROM best)
+       CASE WHEN f.feature = (SELECT feature FROM pick)
             THEN 100.0 ELSE 0.0 END AS importance
 FROM (SELECT DISTINCT feature FROM melted) f
 ORDER BY f.feature
@@ -1901,8 +1755,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs via hyperplane-LSH + exact verify,
-    PLUS (merged r5 — 50-slot contract) the semantic-dedup component
-    layer: ``cluster`` labels each pair with the connected-component
+    PLUS the semantic-dedup component layer: ``cluster`` labels each pair with the connected-component
     minimum of its endpoints (operators/dedup.py:connected_components —
     the grouping semantic_dedup keeps one representative per). The oracle
     recomputes the components with a recursive transitive-closure CTE over
@@ -1999,11 +1852,7 @@ def _langid_oracle() -> str:
             f"'lang': '{lang}'}}"
         )
     return f"""
-        WITH t AS (
-          SELECT doc_id,
-                 regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-          FROM documents
-        ),
+        WITH t AS (SELECT doc_id, {_WORDS_SQL} AS toks FROM documents),
         v AS (
           -- struct max == Spark array_max over struct<v,lang>: highest vote,
           -- ties broken by the lexicographically greatest language
@@ -2037,6 +1886,23 @@ def _banded_sql(n_planes: int, bands: int, seed: int, stride: int) -> str:
     return " UNION ALL ".join(parts)
 
 
+# the embeddings as DOUBLE[] vectors
+_EMB_SQL = "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings"
+
+# the top 5 of ``scored(q_id, vec_id, cosine)`` per query (similarity.py's
+# per-query top-k: cosine desc, then vec_id)
+_COSINE_TOP5_SQL = """
+        ranked AS (
+          SELECT q_id, vec_id, cosine,
+                 ROW_NUMBER() OVER (PARTITION BY q_id
+                   ORDER BY cosine DESC, vec_id) AS rank
+          FROM scored
+        )
+        SELECT q_id, vec_id, ROUND(cosine, 5) AS cosine, rank
+        FROM ranked WHERE rank <= 5
+    """
+
+
 _COS = (
     "list_dot_product({a}, {b}) / "
     "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
@@ -2047,9 +1913,7 @@ def _embedding_dedup_oracle() -> str:
     banded = _banded_sql(n_planes=6, bands=6, seed=42, stride=31)
     cos = _COS.format(a="ea.emb", b="eb.emb")
     return f"""
-        WITH RECURSIVE e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-        ),
+        WITH RECURSIVE e AS ({_EMB_SQL}),
         banded AS ({banded}),
         cand AS (
           SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -2064,17 +1928,7 @@ def _embedding_dedup_oracle() -> str:
         ),
         kept AS (
           SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.3
-        ),
-        sym AS (
-          SELECT id_a AS s, id_b AS d FROM kept
-          UNION ALL SELECT id_b, id_a FROM kept
-        ),
-        reach(a, b) AS (
-          SELECT s, s FROM sym
-          UNION
-          SELECT r.a, eg.d FROM reach r JOIN sym eg ON eg.s = r.b
-        ),
-        lab AS (SELECT a AS v, MIN(b) AS cluster FROM reach GROUP BY a)
+        ),{_components_sql("kept", "SELECT s FROM sym")}
         SELECT id_a, id_b, ROUND(cosine, 5) AS cosine, lab.cluster
         FROM kept JOIN lab ON lab.v = kept.id_a
     """
@@ -2084,9 +1938,7 @@ def _lsh_ann_oracle() -> str:
     banded = _banded_sql(n_planes=4, bands=8, seed=42, stride=97)
     cos = _COS.format(a="ec.emb", b="eq.emb")
     return f"""
-        WITH full_e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-        ),
+        WITH full_e AS ({_EMB_SQL}),
         corpus_banded AS (
           WITH e AS (SELECT * FROM full_e WHERE vec_id >= 10)
           SELECT * FROM ({banded})
@@ -2104,16 +1956,7 @@ def _lsh_ann_oracle() -> str:
           FROM cand
           JOIN full_e ec ON ec.vec_id = cand.vec_id
           JOIN full_e eq ON eq.vec_id = cand.q_id
-        ),
-        ranked AS (
-          SELECT q_id, vec_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY cosine DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT q_id, vec_id, ROUND(cosine, 5) AS cosine, rank
-        FROM ranked WHERE rank <= 5
-    """
+        ),{_COSINE_TOP5_SQL}"""
 
 
 # FNV-1a 64-bit over a byte list (functions/text.py:hash_str64) as a DuckDB
@@ -2137,10 +1980,7 @@ def _simhash_oracle() -> str:
     tok_bytes = X.str_to_bytes_sql("tok")
     return f"""
         WITH t AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                             x -> x != '') AS toks
-          FROM documents
+          SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents
         ),
         th AS (
           SELECT doc_id, {_FNV64.format(bytes=tok_bytes)} AS h
@@ -2478,17 +2318,7 @@ def _infgain_mdl_oracle() -> str:
         joint_{sfx} AS (
           SELECT bin, y, COUNT(*)::DOUBLE AS n FROM binned_{sfx} GROUP BY bin, y
         ),
-        tot_{sfx} AS (SELECT SUM(n) AS nt FROM joint_{sfx}),
-        hx_{sfx} AS (SELECT -SUM(p*LN(p)) AS h FROM
-          (SELECT SUM(n)/(SELECT nt FROM tot_{sfx}) AS p FROM joint_{sfx} GROUP BY bin)),
-        hy_{sfx} AS (SELECT -SUM(p*LN(p)) AS h FROM
-          (SELECT SUM(n)/(SELECT nt FROM tot_{sfx}) AS p FROM joint_{sfx} GROUP BY y)),
-        hxy_{sfx} AS (SELECT -SUM(p*LN(p)) AS h FROM
-          (SELECT n/(SELECT nt FROM tot_{sfx}) AS p FROM joint_{sfx})),
-        ig_{sfx} AS (
-          SELECT (SELECT h FROM hx_{sfx}) + (SELECT h FROM hy_{sfx})
-                 - (SELECT h FROM hxy_{sfx}) AS ig
-        )
+        ig_{sfx} AS (SELECT {_mutual_info_sql(f"joint_{sfx}", "bin", "y")} AS ig)
         """
 
     return f"""
@@ -2503,6 +2333,35 @@ def _infgain_mdl_oracle() -> str:
         SELECT 'value', ROUND((SELECT ig FROM ig_v), {ROUND})
         ORDER BY feature
     """
+
+
+def _shingles_sql(source: str, k: int = 3) -> str:
+    """CTEs ``toks_t(doc_id, toks)`` (the non-empty lowercased whitespace
+    tokens of ``source``'s text) and ``sh(doc_id, hs)``: the distinct signed
+    XXH64 hashes of each doc's word-``k``-shingles, the whole token list as
+    one shingle when shorter (dedup.py's shingle sets, via the bit-exact
+    functions/xxh64_sql.py port)."""
+    from recipeselectors_spark.functions import xxh64_sql as X
+
+    shingle_hash = X.to_signed_sql(X.xxh64_str_sql("sh_str"))
+
+    def xxh_of(expr: str) -> str:
+        return X.stage(expr, "sh_str", shingle_hash)
+
+    hs_ge = (
+        f"list_distinct([{xxh_of(f'array_to_string(toks[i:i+{k - 1}], chr(32))')}"
+        f" FOR i IN generate_series(1, length(toks)-{k - 1})])"
+    )
+    hs_lt = f"[{xxh_of('array_to_string(toks, chr(32))')}]"
+    return f"""
+        toks_t AS (
+          SELECT doc_id, {_TOKENS_SQL} AS toks FROM {source}
+        ),
+        sh AS (
+          SELECT doc_id,
+                 CASE WHEN length(toks) >= {k} THEN {hs_ge} ELSE {hs_lt} END AS hs
+          FROM toks_t
+        )"""
 
 
 def _minhash_pipeline_sql(
@@ -2526,17 +2385,6 @@ def _minhash_pipeline_sql(
     from recipeselectors_spark.operators.dedup import MERSENNE_P, _perm_params
 
     a, b = _perm_params(num_perm, seed)
-    shingle_hash = X.to_signed_sql(X.xxh64_str_sql("sh_str"))
-
-    def xxh_of(expr: str) -> str:
-        return X.stage(expr, "sh_str", shingle_hash)
-
-    kq = k_shingle - 1
-    hs_ge = (
-        f"list_distinct([{xxh_of(f'array_to_string(toks[i:i+{kq}], chr(32))')}"
-        f" FOR i IN generate_series(1, length(toks)-{kq})])"
-    )
-    hs_lt = f"[{xxh_of('array_to_string(toks, chr(32))')}]"
     perms = ", ".join(
         f"list_min([((abs(h) % {MERSENNE_P}) * {ai} + {bi}) % {MERSENNE_P}"
         f" FOR h IN hs])"
@@ -2559,18 +2407,7 @@ def _minhash_pipeline_sql(
         else ""
     )
     return f"""
-        toks_t AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                             x -> x != '') AS toks
-          FROM {source}
-        ),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN length(toks) >= {k_shingle}
-                      THEN {hs_ge} ELSE {hs_lt} END AS hs
-          FROM toks_t
-        ),
+        {_shingles_sql(source, k_shingle)},
         mh AS (SELECT doc_id, [{perms}] AS mh FROM sh),
         banded AS (
           SELECT doc_id, u.band AS band, u.bucket AS bucket FROM (
@@ -2608,15 +2445,9 @@ def _minhash_pairs_oracle() -> str:
 def _dedup_corpus_oracle() -> str:
     """Exact-first corpus dedup: md5 keep-first window, MinHash-LSH pairs on
     the representatives (with the 10k bucket cap), drop every id_b."""
-    uniq = """
-        uniq AS (
-          SELECT doc_id, text FROM documents
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY md5(text)
-                                     ORDER BY doc_id) = 1
-        ),
-    """
     return f"""
-        WITH {uniq} {_minhash_pipeline_sql('uniq', threshold=0.8, max_bucket=10_000)}
+        WITH {_UNIQ_DOCS_SQL}
+        {_minhash_pipeline_sql('uniq', threshold=0.8, max_bucket=10_000)}
         SELECT doc_id FROM uniq
         WHERE doc_id NOT IN (SELECT id_b FROM near_dup_pairs)
     """
@@ -2793,9 +2624,7 @@ def _ivf_ann_oracle() -> str:
     the top-k rescore from the table itself at any scale factor."""
     cos = _COS.format(a="a.emb", b="p.q_emb")
     return f"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-        ),
+        WITH e AS ({_EMB_SQL}),
         corpus AS (SELECT * FROM e WHERE vec_id >= 10),
         qry AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 3),
         cent_rows AS (
@@ -2827,16 +2656,7 @@ def _ivf_ann_oracle() -> str:
         scored AS (
           SELECT p.q_id, a.vec_id, {cos} AS cosine
           FROM assigned a JOIN probes p USING (cell)
-        ),
-        ranked AS (
-          SELECT q_id, vec_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY cosine DESC, vec_id) AS rank
-          FROM scored
-        )
-        SELECT q_id, vec_id, ROUND(cosine, 5) AS cosine, rank
-        FROM ranked WHERE rank <= 5
-    """
+        ),{_COSINE_TOP5_SQL}"""
 
 
 # ---------------------------------------------------------------------------
@@ -2858,8 +2678,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_extract": q_json_extract,
         "asof_union": q_asof_union,
         "asof_cogroup": q_asof_cogroup,
-        "asof_forward": q_asof_forward,
-        "asof_nearest": q_asof_nearest,
+        "asof_forward": partial(q_asof_cogroup, direction="forward"),
+        "asof_nearest": partial(q_asof_cogroup, direction="nearest"),
         "roc_auc": q_roc_auc,
         "infgain_equalfreq": q_infgain_equalfreq,
         "chi2_stat": q_chi2_stat,
@@ -2994,24 +2814,22 @@ def oracle_sql() -> dict[str, str]:
         """,
         "semi_join": _SEMI_ORACLE,
         "json_extract": _JSON_ORACLE,
-        "asof_union": _ASOF_UNION_ORACLE,
-        "asof_cogroup": _ASOF_ORACLE,
-        "asof_forward": _ASOF_FWD_ORACLE,
-        "asof_nearest": _ASOF_NEAREST_ORACLE,
+        "asof_union": _asof_oracle("backward", tolerance_s=600),
+        "asof_cogroup": _asof_oracle("backward"),
+        "asof_forward": _asof_oracle("forward"),
+        "asof_nearest": _asof_oracle("nearest"),
         "roc_auc": _ROC_ORACLE,
         "infgain_equalfreq": _INFGAIN_ORACLE,
         "chi2_stat": _CHI2_ORACLE,
-        "dedup_exact": """
-            WITH agg AS (
+        "dedup_exact": f"""
+            WITH {_UNIQ_DOCS_SQL}
+            agg AS (
               SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_doc_id,
                      COUNT(*) AS n_copies
               FROM documents GROUP BY md5(text)
             ),
             kept AS (
-              SELECT md5(text) AS text_hash, doc_id AS kept_doc_id
-              FROM documents
-              QUALIFY ROW_NUMBER() OVER (PARTITION BY md5(text)
-                                         ORDER BY doc_id) = 1
+              SELECT md5(text) AS text_hash, doc_id AS kept_doc_id FROM uniq
             )
             SELECT text_hash, keep_doc_id, n_copies, kept_doc_id
             FROM agg JOIN kept USING (text_hash)
@@ -3051,9 +2869,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             tok AS (
               SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(trim(lower(text)), '\\s+'),
-                       x -> x <> '')) AS term
+                     unnest({_TOKENS_SQL}) AS term
               FROM documents
             ),
             post AS (
@@ -3155,7 +2971,7 @@ def oracle_sql() -> dict[str, str]:
             WITH t AS (
               SELECT doc_id, text,
                      regexp_split_to_array(trim(text), '\\s+') AS toks,
-                     regexp_split_to_array(trim(lower(text)), '\\s+') AS ltoks
+                     {_WORDS_SQL} AS ltoks
               FROM documents
             ),
             m AS (
@@ -3175,9 +2991,7 @@ def oracle_sql() -> dict[str, str]:
                      1.0 - length(list_distinct(ltoks))
                          / greatest(length(ltoks), 1) AS uni_raw,
                      1.0 - CASE WHEN length(ltoks) >= 2
-                         THEN length(list_distinct(
-                                [array_to_string(ltoks[i:i+1], ' ')
-                                 FOR i IN generate_series(1, length(ltoks)-1)]))
+                         THEN length(list_distinct({_ngrams_sql("ltoks", 2)}))
                               / greatest(length(ltoks) - 1, 1)
                          ELSE length(list_distinct(ltoks))
                               / greatest(length(ltoks), 1) END AS bi_raw
@@ -3250,13 +3064,11 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard": f"""
             WITH sh AS (
               SELECT doc_id,
-                CASE WHEN length(toks) >= 3 THEN
-                  list_distinct([array_to_string(toks[i:i+2], ' ')
-                                 FOR i IN generate_series(1, length(toks)-2)])
+                CASE WHEN length(toks) >= 3
+                  THEN list_distinct({_ngrams_sql("toks", 3)})
                 ELSE [array_to_string(toks, ' ')] END AS s
               FROM (
-                SELECT doc_id,
-                       regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+                SELECT doc_id, {_WORDS_SQL} AS toks
                 FROM documents WHERE doc_id < 25
               )
             )

@@ -149,8 +149,8 @@ def drop_exact_duplicates(
     """Keep ONE whole row (smallest id) per exact text hash —
     ``windows.top_k_per_group`` with k = 1 on ``md5(text)``: a single
     md5-partitioned window (one exchange), no join back. NULL texts form
-    one group. An input column named ``rank`` is overwritten by the window's
-    and dropped with it."""
+    one group. Every other column is kept; an input column named ``rank``
+    raises ``ValueError`` (the window writes its own)."""
     kept = W.top_k_per_group(df, 1, F.md5(F.col(text_col)), (id_col,))
     return kept.drop("rank")
 

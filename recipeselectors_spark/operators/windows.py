@@ -174,7 +174,10 @@ def top_k_per_group(
     keep-first dedup. One ``row_number`` window: one exchange on the group
     key, then a sort within each group. "Top-k Sorting Under Partial Order
     Information" (SIGMOD 2018) is the reference for any cheaper per-group
-    selection."""
+    selection. Raises ``ValueError`` if ``df`` already has a ``rank``
+    column, which the window's would overwrite."""
+    if "rank" in (c.lower() for c in df.columns):
+        raise ValueError("top_k_per_group writes column 'rank'; the input has one")
     w = turn_window(partition, order)
     return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 

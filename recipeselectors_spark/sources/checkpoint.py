@@ -82,10 +82,12 @@ def run_sharded(
     # Shard membership = pmod(xxhash64(conv_id), N) computed DISTRIBUTED for
     # every conversation (hash default + bounded hot-key override) — sampling
     # only tunes which convs are detected hot; no conversation can be dropped
-    # and the driver never materializes the conversation universe.
+    # and the driver never materializes the conversation universe. No
+    # oversized-conversation check: that guards the cogroup as-of merge,
+    # which run_sharded does not run.
     hot_pdf = hot_conv_shards(
         transcripts, transcripts.limit(0), num_shards, on=on,
-        sample_frac=sample_frac,
+        sample_frac=sample_frac, max_conv_rows=None,
     )
     tagged = with_shard(transcripts, num_shards, hot_pdf, on=on)
 

@@ -165,3 +165,24 @@ def test_job_group_reaches_every_shard_job(spark, tx, tmp_path):
     bus.waitUntilEmpty()
     assert len(new_jobs("shard-grp", before)) >= 8
     assert not new_jobs(None, before)  # no shard job escaped the group
+
+
+def test_run_sharded_skips_oversized_conversation_check(tx, tmp_path, monkeypatch):
+    """run_sharded never cogroups, so the as-of merge's oversized-
+    conversation warning (and the job that names the worst conversation)
+    must not fire, however small the as-of budget."""
+    import warnings
+
+    real = ckpt.hot_conv_shards
+
+    def tiny_budget(*args, **kwargs):
+        kwargs.setdefault("max_conv_rows", 1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ckpt, "hot_conv_shards", tiny_budget)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        manifests = ckpt.run_sharded(
+            tx, str(tmp_path / "budget"), assembly.assemble_features, num_shards=2
+        )
+    assert sum(m["n_rows"] for m in manifests) == tx.count()

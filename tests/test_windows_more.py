@@ -132,6 +132,18 @@ def test_top_k_per_group(tx):
         assert sorted(g["rank"]) == list(range(1, len(g) + 1))
 
 
+def test_top_k_per_group_rejects_rank_column(tx):
+    """The window writes ``rank``: an input column of that name would be
+    overwritten, and drop_exact_duplicates would then drop it."""
+    from recipeselectors_spark.operators import dedup
+
+    ranked = tx.withColumn("rank", F.lit(7))
+    with pytest.raises(ValueError, match="rank"):
+        W.top_k_per_group(ranked, 1, W.CONV, W.ORDER)
+    with pytest.raises(ValueError, match="rank"):
+        dedup.drop_exact_duplicates(ranked, id_col="turn_idx")
+
+
 def test_gbt_importances_via_vip(spark):
     from pyspark.ml.classification import GBTClassifier
 
